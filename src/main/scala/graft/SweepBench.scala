@@ -160,9 +160,7 @@ object SweepBench {
       val autoBin = graft.join.RangeJoin.autoBinSize(l, r)
       val fanout = len.toDouble / autoBin
       // the span-scaled salt bin autoPairs would pick
-      val mb = graft.core.Sizing.saltPlan(l, Seq(Chrom)).map { b =>
-        var w = b; while (w < 4.0 * len) w *= 2; w
-      }
+      val mb = graft.join.RangeJoin.sweepMegaBin(l, Seq(Chrom), len.toDouble)
 
       if (args.contains("--pick")) {
         // derived-mode A/B: first-match pick and per-row count, binned

@@ -43,15 +43,96 @@ object Sizing {
   val lastDecision =
     new java.util.concurrent.atomic.AtomicReference[(String, Long, Boolean)]()
 
+  /** Gate statistics of one input, from its first `sampleRows` rows:
+    * rows sampled, mean interval length over the rows with both bounds
+    * (1.0 when none), min Start / max End, distinct `keys` tuples (NULL
+    * is a key, as in groupBy; 1 when `keys` is empty) and the rows of
+    * the hottest key tuple. */
+  final case class SideStats(rows: Long, meanLen: Double,
+                             minStart: Option[Long], maxEnd: Option[Long],
+                             distinctKeys: Long, hottestKeyRows: Long) {
+    /** Coordinate span, at least 1. */
+    def span: Long = (for (s <- minStart; e <- maxEnd) yield e - s)
+      .fold(1L)(math.max(_, 1L))
+
+    /** More keys than 4x the cores and no key over 1/(2 x cores) of the
+      * rows: the plain per-key window already out-parallelizes the
+      * cores, so salting only adds stages (measured 0.56-0.84x at 2000
+      * balanced keys, BASELINE.md "--manykeys"). One-sided against the
+      * first-rows sample: key-clustered data (the common coordinate-
+      * sorted layout) shows few keys there and keeps salting. */
+    def manyBalancedKeys(cores: Int): Boolean =
+      distinctKeys >= 4L * cores &&
+        hottestKeyRows.toDouble / math.max(rows, 1L) <= 1.0 / (2 * cores)
+  }
+
+  private val statsMemo =
+    new java.util.concurrent.ConcurrentHashMap[AnyRef, SideStats]()
+
+  /** The one gate sampler of the ops layer and of IntervalJoinRewrite.
+    *
+    * A bounded take, `select(keys, Start, End).limit(sampleRows)
+    * .collect()`: it plans as CollectLimit, which reads partition 0 and
+    * scans further partitions (4x more each round) only while the rows
+    * fall short — usually one job with one task at any table size,
+    * where a `limit().agg()` runs a LocalLimit task on every split plus
+    * an exchange. Its jobs carry the description "graft gate sample";
+    * the caller's job group is left alone.
+    *
+    * Memoized per plan: the key is the canonicalized analyzed plan, the
+    * keys, `sampleRows` and the input files with their bytes, so a path
+    * rewritten in place samples again. At most 512 entries, then the
+    * memo starts over. Statistics that are stale anyway (data changed
+    * under an unchanged plan and file list) can only change which
+    * branch a gate takes, never the result: every branch is
+    * result-identical (BASELINE.md "Forced-gate ORACLE run"). */
+  def sideStats(df: DataFrame, keys: Seq[String] = Nil,
+                sampleRows: Int = 100000): SideStats = {
+    import org.apache.spark.sql.functions.col
+    val analyzed = df.queryExecution.analyzed
+    val memoKey = (analyzed.canonicalized, keys, sampleRows, inputFingerprint(analyzed))
+    val hit = statsMemo.get(memoKey)
+    if (hit ne null) return hit
+    val sc = df.sparkSession.sparkContext
+    val description = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("graft gate sample")
+    val sample =
+      try df.select(keys.map(col) ++ Seq(col(Cols.Start).cast("long"),
+          col(Cols.End).cast("long")): _*).limit(sampleRows).collect()
+      finally sc.setLocalProperty("spark.job.description", description)
+    val k = keys.length
+    val bounds = sample.map(r => (Option.when(!r.isNullAt(k))(r.getLong(k)),
+      Option.when(!r.isNullAt(k + 1))(r.getLong(k + 1))))
+    val lens = bounds.collect { case (Some(s), Some(e)) => (e - s).toDouble }
+    val perKey = sample.groupMapReduce(_.toSeq.take(k))(_ => 1L)(_ + _)
+    val stats = SideStats(sample.length,
+      if (lens.isEmpty) 1.0 else math.max(lens.sum / lens.length, 1.0),
+      bounds.flatMap(_._1).minOption, bounds.flatMap(_._2).maxOption,
+      perKey.size, perKey.values.maxOption.getOrElse(0L))
+    if (statsMemo.size >= 512) statsMemo.clear()
+    statsMemo.put(memoKey, stats)
+    stats
+  }
+
+  /** Hash of the file list under each file-source leaf, with its bytes. */
+  private def inputFingerprint(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Seq[(Int, Long)] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    plan.collectLeaves().collect {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+        (scala.util.hashing.MurmurHash3.arrayHash(r.location.inputFiles), r.sizeInBytes)
+    }
+  }
+
   /** Sampled mega-bin width for the salted two-phase plans: aim for ~8
-    * bins per core over the observed coordinate span, rounded up in
-    * powers of two, clamped to [16384, 2^24]. Bounded `limit(sampleRows)`
-    * sample — one small single-stage job independent of table size (the
-    * RangeJoin.autoBinSize pattern), and it only runs once a salted gate
-    * has already fired on a large input. Guards the measured narrow-span
-    * failure mode: a fixed 1M-wide bin over a ~1M-coordinate span handed
-    * the salted merge two bins of parallelism and it LOST 0.78x at
-    * 609 MB (BASELINE.md "salted crossover" notes). */
+    * bins per core over the sampled coordinate span, rounded up in
+    * powers of two, clamped to [16384, 2^24]. The statistics come from
+    * [[sideStats]] (one bounded take, memoized per plan), and only once
+    * a salted gate has already fired on a large input. Guards the
+    * measured narrow-span failure mode: a fixed 1M-wide bin over a
+    * ~1M-coordinate span handed the salted merge two bins of
+    * parallelism and it LOST 0.78x at 609 MB (BASELINE.md "salted
+    * crossover" notes). */
   def autoSaltBin(df: DataFrame, sampleRows: Int = 100000): Long =
     saltPlan(df, Nil, sampleRows).getOrElse(16384L)
 
@@ -61,65 +142,30 @@ object Sizing {
     *
     *  - NARROW SPAN: fewer than ~4 floor-width bins of coordinates —
     *    the measured 0.78x failure mode (BASELINE.md).
-    *  - MANY BALANCED KEYS: the plain window already has more groups
-    *    than cores, so parallelism is free and the salted plan's extra
-    *    join/stages only cost — measured 0.56-0.84x at 2000 balanced
-    *    keys ("--manykeys" row in BASELINE.md). The demotion is
-    *    deliberately ONE-SIDED against sampling bias: a limit() sample
-    *    of key-clustered data (the common coordinate-sorted layout)
-    *    shows few keys and therefore keeps salting — it can only
-    *    demote when the sample PROVES >= 4x-cores distinct keys AND no
-    *    sampled key holds a hot share, both of which under-, never
-    *    over-trigger on clustered samples.
+    *  - MANY BALANCED KEYS: [[SideStats.manyBalancedKeys]].
     *
-    * Both signals come from one bounded `limit(sampleRows)` sample
-    * (two tiny aggregations) — plan-time-safe against 100 TB inputs. */
+    * Both signals come from [[sideStats]] of `df` with `keys`: one
+    * bounded take, memoized per plan, so the length/span gates of the
+    * same side and key set reuse it. */
   def saltPlan(df: DataFrame, keys: Seq[String] = Nil,
                sampleRows: Int = 100000): Option[Long] = {
-    import org.apache.spark.sql.functions._
     val cores = math.max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    val sample = df.limit(sampleRows)
-      .select(keys.map(col) ++ Seq(col(Cols.Start).cast("long").as("_s"),
-        col(Cols.End).cast("long").as("_e")): _*)
-    // one sample job: per-key partials re-aggregated to (distinct keys,
-    // hottest-key rows, total rows, span) in a single pass
-    val (minS, maxE, manyBalancedKeys) =
-      if (keys.isEmpty) {
-        val r = sample.agg(min(col("_s")), max(col("_e"))).head()
-        (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-         if (r.isNullAt(1)) None else Some(r.getLong(1)), false)
-      } else {
-        val r = sample.groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("_n"), min(col("_s")).as("_mns"),
-            max(col("_e")).as("_mxe"))
-          .agg(count(lit(1)), max(col("_n")), sum(col("_n")),
-            min(col("_mns")), max(col("_mxe"))).head()
-        val distinct = r.getLong(0)
-        if (distinct == 0) (None, None, false)
-        else {
-          val hottest = r.getLong(1).toDouble / math.max(r.getLong(2), 1L)
-          (Some(r.getLong(3)), Some(r.getLong(4)),
-            distinct >= 4L * cores && hottest <= 1.0 / (2 * cores))
-        }
-      }
-    def binFor(s: Long, e: Long): Long = {
-      val span = math.max(e - s, 1L)
-      val target = span / (8L * cores)
+    val st = sideStats(df, keys, sampleRows)
+    val manyBalancedKeys = st.manyBalancedKeys(cores)
+    def binFor(span: Long): Long = {
       var b = 16384L
-      while (b < target && b < (1L << 24)) b *= 2
+      while (b < span / (8L * cores) && b < (1L << 24)) b *= 2
       b
     }
     val plan = forced() match {
       // forced salted: the audit wants the salted plan SHAPE, so the
       // narrow-span / many-balanced-keys demotions are bypassed
-      case Some(true) => Some(binFor(minS.getOrElse(0L), maxE.getOrElse(1L)))
+      case Some(true) => Some(binFor(st.span))
       case Some(false) => None
-      case None => (minS, maxE) match {
-        case (Some(s), Some(e)) if !manyBalancedKeys =>
-          if (math.max(e - s, 1L) < 4L * 16384L) None
-          else Some(binFor(s, e))
-        case _ => None
-      }
+      // an empty sample has span 1: narrow
+      case None =>
+        if (manyBalancedKeys || st.span < 4L * 16384L) None
+        else Some(binFor(st.span))
     }
     Sizing.log.info("[graft.sizing] saltPlan={}",
       plan.map(_.toString).getOrElse(

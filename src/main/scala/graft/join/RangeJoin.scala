@@ -1,6 +1,6 @@
 package graft.join
 
-import graft.core.Cols
+import graft.core.{Cols, Sizing}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -50,38 +50,48 @@ object RangeJoin {
       .getConfString(BinSizeKey, "256").toLong
 
   /** Statistics-driven bin width (the adaptive path promised in SURVEY
-    * §4.3): one bounded sample job estimates the mean interval length of
-    * both sides and returns the next power of four >= 4x the larger mean,
-    * clamped to [64, 65536]. Rationale: a bin ~4x the typical length keeps
+    * §4.3): the sampled mean interval length of both sides gives the
+    * next power of four >= 4x the larger mean, clamped to [64, 65536]
+    * ([[widthFor]]). Rationale: a bin ~4x the typical length keeps
     * explode fan-out near 1 copy/row while per-bin candidate sets stay
     * small; powers of four keep the choice stable run-to-run under
-    * sampling noise. The sample is a `limit(sampleRows)` scan — one small
-    * single-stage job, independent of table size, so it is safe to call
-    * when building a plan against 100 TB inputs (a fraction-based sample
-    * would still scan every partition). Callers opt in:
+    * sampling noise. The statistics come from
+    * [[Sizing.sideStats]]: one bounded take per side (usually
+    * one task reading the first split; a fraction-based sample would
+    * scan every partition), memoized per plan. Callers opt in:
     * `RangeJoin.pairs(l, r, keys, binSize = RangeJoin.autoBinSize(l, r))`. */
   def autoBinSize(left: DataFrame, right: DataFrame,
-                  sampleRows: Int = 100000): Long = {
-    val target = 4.0 * math.max(sampledMeanLen(left, sampleRows),
-      sampledMeanLen(right, sampleRows))
+                  sampleRows: Int = 100000): Long =
+    widthFor(math.max(Sizing.sideStats(left, Nil, sampleRows).meanLen,
+      Sizing.sideStats(right, Nil, sampleRows).meanLen))
+
+  /** The autoBinSize rule: next power of four >= 4x `meanLen`, clamped
+    * to [64, 65536]. Shared with IntervalJoinRewrite. */
+  def widthFor(meanLen: Double): Long = {
     var bin = 64L
-    while (bin < target && bin < 65536L) bin *= 4
+    while (bin < 4.0 * meanLen && bin < 65536L) bin *= 4
     bin
   }
 
-  /** Mean interval length and coordinate span from a bounded limit()
-    * sample — one small single-stage job independent of table size. */
-  private def sampledLenSpan(df: DataFrame, sampleRows: Int): (Double, Long) = {
-    val r = df.select(col(Start).cast("long").as("_s"), col(End).cast("long").as("_e"))
-      .limit(sampleRows)
-      .agg(avg((col("_e") - col("_s")).cast("double")), min(col("_s")), max(col("_e")))
-      .head()
-    if (r.isNullAt(0)) (1.0, 1L)
-    else (math.max(r.getDouble(0), 1.0), math.max(r.getLong(2) - r.getLong(1), 1L))
+  /** (larger sampled mean length of the two sides, left span). Both
+    * sides are sampled with `keys`, so a frame's length, span and salt
+    * statistics share one memoized take whichever gate asks first. */
+  private def sampledLenSpan(left: DataFrame, right: DataFrame,
+                             keys: Seq[String]): (Double, Long) = {
+    val l = Sizing.sideStats(left, keys)
+    (math.max(l.meanLen, Sizing.sideStats(right, keys).meanLen), l.span)
   }
 
-  private def sampledMeanLen(df: DataFrame, sampleRows: Int): Double =
-    sampledLenSpan(df, sampleRows)._1
+  /** The salted sweep's mega-bin, when [[Sizing.saltPlan]] salts the
+    * left side: the span-scaled bin, widened until explode fan-out
+    * stays ~1 copy per row. */
+  private[graft] def sweepMegaBin(left: DataFrame, keys: Seq[String],
+                           mean: Double): Option[Long] =
+    Sizing.saltPlan(left, keys).map { b =>
+      var w = b
+      while (w < 4.0 * mean) w *= 2
+      w
+    }
 
   /** Estimated max concurrent overlap depth: rows (from leaf bytes /
     * ~64 B) x meanLen / span. The sweep's active buffers hold `depth`
@@ -98,7 +108,7 @@ object RangeJoin {
                             mean: Double, span: Long): Boolean = {
     val bar = org.apache.spark.sql.internal.SQLConf.get
       .getConfString("spark.graft.join.sweepMaxDepth", "262144").toDouble
-    val estRows = graft.core.Sizing.leafScanBytes(left, right).toDouble / 64.0
+    val estRows = Sizing.leafScanBytes(left, right).toDouble / 64.0
     estRows * mean / math.max(span, 1L) <= bar
   }
 
@@ -107,32 +117,24 @@ object RangeJoin {
   val lastAutoPairs =
     new java.util.concurrent.atomic.AtomicReference[(String, Double, Long)]()
 
-  /** Statistics-driven pair join: one bounded sample estimates the mean
-    * interval length of both sides, sizes the bin (autoBinSize rule),
-    * and routes to the binned join or the sort-merge sweep operator
-    * ([[IntervalSweepJoin]]) when the binned plan's explode fan-out
-    * mean/bin would exceed `fanoutBar` — the MEASURED crossover
-    * (graft.SweepBench, BASELINE.md "binned vs sweep": parity at
-    * fan-out 2, sweep 4x ahead at 16). The DataFrame-API counterpart of
-    * IntervalJoinRewrite's `spark.graft.join.strategy=auto`. */
+  /** Statistics-driven pair join: the sampled mean interval length of
+    * both sides sizes the bin ([[widthFor]]) and routes to the binned
+    * join or the sort-merge sweep operator ([[IntervalSweepJoin]]) when
+    * the binned plan's explode fan-out mean/bin would exceed
+    * `fanoutBar` — the MEASURED crossover (graft.SweepBench,
+    * BASELINE.md "binned vs sweep": parity at fan-out 2, sweep 4x ahead
+    * at 16). The sweep is salted when the key statistics of the same
+    * left sample say per-key parallelism is scarce (same saltPlan gates
+    * as the window ops: wide span, not many balanced keys). The
+    * DataFrame-API counterpart of IntervalJoinRewrite's
+    * `spark.graft.join.strategy=auto`. */
   def autoPairs(left: DataFrame, right: DataFrame, keys: Seq[String],
                 slack: Long = 0, suffix: String = "_b",
-                fanoutBar: Double = 2.0, sampleRows: Int = 100000): DataFrame = {
-    val (lMean, lSpan) = sampledLenSpan(left, sampleRows)
-    val mean = math.max(lMean, sampledMeanLen(right, sampleRows))
-    var bin = 64L
-    while (bin < 4.0 * mean && bin < 65536L) bin *= 4
-    val sweep = mean / bin > fanoutBar && depthOk(left, right, mean, lSpan)
-    if (sweep) {
-      // salt the sweep when the key sample says per-key parallelism is
-      // scarce (same saltPlan gates as the window ops: wide span, not
-      // many balanced keys), widening the span-scaled mega-bin until
-      // explode fan-out stays ~1 copy per row
-      val mb = graft.core.Sizing.saltPlan(left, keys).map { b =>
-        var w = b
-        while (w < 4.0 * mean) w *= 2
-        w
-      }
+                fanoutBar: Double = 2.0): DataFrame = {
+    val (mean, lSpan) = sampledLenSpan(left, right, keys)
+    val bin = widthFor(mean)
+    if (mean / bin > fanoutBar && depthOk(left, right, mean, lSpan)) {
+      val mb = sweepMegaBin(left, keys, mean)
       lastAutoPairs.set((mb.fold("sweep")(_ => "sweep-salted"), mean, bin))
       IntervalSweepJoin.pairs(left, right, keys, slack, suffix, megaBin = mb)
     } else {
@@ -154,9 +156,9 @@ object RangeJoin {
                     suffix: String = "_b", contained: Boolean = false): DataFrame = {
     val threshold = org.apache.spark.sql.internal.SQLConf.get
       .getConfString("spark.graft.join.autoThreshold",
-        graft.core.Sizing.saltedInputThreshold.toString).toLong
+        Sizing.saltedInputThreshold.toString).toLong
     if (!contained &&
-        graft.core.Sizing.decide("rangejoin/auto", threshold, left, right)) {
+        Sizing.decide("rangejoin/auto", threshold, left, right)) {
       autoPairs(left, right, keys, slack, suffix)
     } else {
       pairs(left, right, keys, slack, binSize, suffix, contained)
@@ -165,9 +167,10 @@ object RangeJoin {
 
   /** Shared auto decision for the sweep-native derived modes (pick /
     * count): None = stay on the binned plan; Some(megaBin) = sweep,
-    * with the salt bin the key sample demands (None inside = plain
-    * per-key sweep). One bounded sample job per side, the same gates as
-    * [[autoPairs]] / [[existsDispatch]] — EXCEPT the fan-out bar, which
+    * with the salt bin the key statistics demand (None inside = plain
+    * per-key sweep). The statistics are one memoized take per side
+    * (left with `keys`), the gates those of [[autoPairs]] /
+    * [[existsDispatch]] — EXCEPT the fan-out bar, which
     * for pick/count is OR'd with salt availability: the MEASURED table
     * (BASELINE.md "sweep pick/count", graft.SweepBench --pick) shows
     * the salted sweep's fold modes beating the binned pairs+aggregation
@@ -185,17 +188,11 @@ object RangeJoin {
     val threshold = thresholdOverride.getOrElse(
       org.apache.spark.sql.internal.SQLConf.get
         .getConfString("spark.graft.join.autoThreshold",
-          graft.core.Sizing.saltedInputThreshold.toString).toLong)
-    if (contained || !graft.core.Sizing.decide(op, threshold, left, right)) return None
-    val (lMean, lSpan) = sampledLenSpan(left, 100000)
-    val mean = math.max(lMean, sampledMeanLen(right, 100000))
-    var bin = 64L
-    while (bin < 4.0 * mean && bin < 65536L) bin *= 4
-    val mb = graft.core.Sizing.saltPlan(left, keys).map { b =>
-      var w = b
-      while (w < 4.0 * mean) w *= 2
-      w
-    }
+          Sizing.saltedInputThreshold.toString).toLong)
+    if (contained || !Sizing.decide(op, threshold, left, right)) return None
+    val (mean, lSpan) = sampledLenSpan(left, right, keys)
+    val bin = widthFor(mean)
+    val mb = sweepMegaBin(left, keys, mean)
     if ((mean / bin > 2.0 || mb.isDefined) && depthOk(left, right, mean, lSpan)) {
       lastAutoPairs.set((mb.fold("sweep")(_ => "sweep-salted") + s"-$op", mean, bin))
       Some(mb)
@@ -212,10 +209,10 @@ object RangeJoin {
                      contained: Boolean = false, anti: Boolean = false): DataFrame = {
     val threshold = org.apache.spark.sql.internal.SQLConf.get
       .getConfString("spark.graft.join.autoThreshold",
-        graft.core.Sizing.saltedInputThreshold.toString).toLong
+        Sizing.saltedInputThreshold.toString).toLong
     if (!contained &&
-        graft.core.Sizing.decide("rangejoin/existsAuto", threshold, left, right)) {
-      val (mean, bin, go) = plainSweepBar(left, right)
+        Sizing.decide("rangejoin/existsAuto", threshold, left, right)) {
+      val (mean, bin, go) = plainSweepBar(left, right, keys)
       if (go) {
         lastAutoPairs.set(("sweep-exists", mean, bin))
         IntervalSweepJoin.exists(left, right, keys, slack, anti = anti)
@@ -234,12 +231,10 @@ object RangeJoin {
     * loses — plus the depth guard. Returns (mean, bin, clears). Kept in
     * ONE place so a future bar/bin tuning cannot silently diverge the
     * dispatchers. */
-  private def plainSweepBar(left: DataFrame, right: DataFrame)
+  private def plainSweepBar(left: DataFrame, right: DataFrame, keys: Seq[String])
       : (Double, Long, Boolean) = {
-    val (lMean, lSpan) = sampledLenSpan(left, 100000)
-    val mean = math.max(lMean, sampledMeanLen(right, 100000))
-    var bin = 64L
-    while (bin < 4.0 * mean && bin < 65536L) bin *= 4
+    val (mean, lSpan) = sampledLenSpan(left, right, keys)
+    val bin = widthFor(mean)
     (mean, bin, mean / bin > 2.0 && depthOk(left, right, mean, lSpan))
   }
 
@@ -256,11 +251,11 @@ object RangeJoin {
                                       contained: Boolean): Boolean = {
     val threshold = org.apache.spark.sql.internal.SQLConf.get
       .getConfString("spark.graft.join.autoThreshold",
-        graft.core.Sizing.saltedInputThreshold.toString).toLong
+        Sizing.saltedInputThreshold.toString).toLong
     if (contained ||
-        !graft.core.Sizing.decide("rangejoin/outerAuto", threshold, left, right))
+        !Sizing.decide("rangejoin/outerAuto", threshold, left, right))
       return false
-    val (mean, bin, go) = plainSweepBar(left, right)
+    val (mean, bin, go) = plainSweepBar(left, right, keys)
     lastAutoPairs.set(((if (go) "sweep" else "binned") + "-outer", mean, bin))
     go
   }
@@ -283,8 +278,8 @@ object RangeJoin {
     if (small) broadcast(df) else df
 
   /** Conf key for the probe-side fan-out gate (leaf bytes; 0 disables).
-    * Alias of [[graft.core.Sizing.FanoutKey]]. */
-  val FanoutKey: String = graft.core.Sizing.FanoutKey
+    * Alias of [[Sizing.FanoutKey]]. */
+  val FanoutKey: String = Sizing.FanoutKey
 
   /** Minimum probe-side parallelism under a broadcast build.
     *
@@ -293,7 +288,7 @@ object RangeJoin {
     * inside the probe's SCAN stage, so its parallelism is the scan's
     * split count — and a small parquet input is often a single row
     * group, i.e. ONE task, serializing a 32-core join behind one core.
-    * [[graft.core.Sizing.fanOutSmallScan]] restores parallelism for the
+    * [[Sizing.fanOutSmallScan]] restores parallelism for the
     * price of one narrow exchange (MEASURED at sf0.1/local[32],
     * BASELINE.md "probe fan-out": pairs 3.8→1.4 s, join-first 5.2→1.8 s,
     * join+overlap 3.5→1.0 s steady); a no-op against 100 TB inputs.
@@ -306,7 +301,7 @@ object RangeJoin {
     * measured there, the extra exchange costs MORE than it saves
     * (q12 1.4→2.0 s, q13 1.2→1.8 s), so they stay un-fanned. */
   private def fanOutProbe(df: DataFrame): DataFrame =
-    graft.core.Sizing.fanOutSmallScan(df)
+    Sizing.fanOutSmallScan(df)
 
   /** Explode `df` into (row, bin) with the interval extended by `pad`. */
   private def binned(df: DataFrame, binSize: Long, pad: Long,

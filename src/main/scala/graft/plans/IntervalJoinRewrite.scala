@@ -1,5 +1,7 @@
 package graft.plans
 
+import graft.core.{Cols, Sizing}
+import graft.join.RangeJoin
 import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Max}
@@ -29,13 +31,13 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *    len/binSize copies, the sweep never amplifies rows.
   *
   * `spark.graft.join.strategy` picks: `binned`, `sweep`, or `auto`
-  * (default). Auto is STATISTICS-DRIVEN: one bounded `limit(100k)`
-  * sample job per join side (the RangeJoin.autoBinSize / Sizing.saltPlan
-  * pattern — plan-time-safe against 100 TB inputs, results cached per
-  * canonicalized subplan) estimates the mean interval length, from
-  * which it derives (1) the bin width, when `spark.graft.binSize` does
-  * not pin one: next power of four >= 4x the larger mean, clamped to
-  * [64, 65536]; and (2) the binned plan's explode fan-out at that
+  * (default). Auto is STATISTICS-DRIVEN: the ops layer's gate sampler,
+  * [[graft.core.Sizing.sideStats]] — one bounded take of the first 100k
+  * rows per join side, memoized per plan — estimates the mean interval
+  * length, from which it derives (1) the bin width, when
+  * `spark.graft.binSize` does not pin one: next power of four >= 4x the
+  * larger mean, clamped to [64, 65536] (RangeJoin.widthFor); and
+  * (2) the binned plan's explode fan-out at that
   * width, mean/bin. Fan-out above `spark.graft.join.sweepFanout`
   * (default 2, MEASURED — graft.SweepBench, BASELINE.md "binned vs
   * sweep" table: binned wins 1.4-2x at fan-out <= 1, parity at 2,
@@ -53,11 +55,14 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * (or globally via GraftExtensions / spark.sql.extensions).
   *
   * CAVEAT — `auto` samples AT OPTIMIZATION TIME: the statistics come
-  * from one bounded `limit(100k)` Spark job per join side, executed
-  * while this rule runs. It is small, independent of table size,
-  * cached per canonicalized subplan and recursion-guarded, but it IS a
-  * job inside planning — `df.explain()` on a matched join triggers it,
-  * which can surprise tooling that assumes planning is pure. Pin
+  * from one bounded take per join side, executed while this rule runs.
+  * The take usually reads only the first split (CollectLimit scans
+  * further splits only while rows fall short), is memoized per plan
+  * and input files, and is recursion-guarded, but it IS a job inside
+  * planning — `df.explain()` on a matched join triggers it the first
+  * time, which can surprise tooling that assumes planning is pure.
+  * Stale memoized statistics can only change the strategy picked,
+  * never the join's result: every strategy is result-identical. Pin
   * `SET spark.graft.join.strategy = binned` (or `sweep`) to make
   * planning job-free; `spark.graft.binSize` then pins the bin width
   * the binned plan would otherwise sample.
@@ -101,78 +106,22 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   // ---- sampled statistics (auto mode) ----
 
-  private case class SideStats(mean: Double, span: Long,
-                               distinct: Long, hottest: Double)
-
-  /** Mean interval length, coordinate span and (when `keys` given)
-    * distinct-key / hottest-key-share estimates of `side`, from ONE
-    * bounded limit() sample job — small and independent of table size
-    * (the Sizing.saltPlan shape). Cached on the canonicalized
-    * (plan, keys, start, end) so the optimizer's fixed-point re-runs
-    * and repeated self-join sides sample once. */
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[(LogicalPlan, Seq[Expression], Expression, Expression), SideStats]()
   private val inSample = new ThreadLocal[Boolean] {
     override def initialValue(): Boolean = false
   }
 
+  /** [[Sizing.sideStats]] of `side` projected to (keys, s, e): the
+    * ops layer's bounded, memoized take, so the optimizer's fixed-point
+    * re-runs and repeated self-join sides sample once. The sample
+    * query is optimized too; [[inSample]] keeps this rule out of it. */
   private def sampledStats(side: LogicalPlan, keys: Seq[Expression],
-                           s: Expression, e: Expression,
-                           sampleRows: Int = 100000): SideStats = {
-    val key = (side.canonicalized, keys.map(_.canonicalized), s.canonicalized,
-      e.canonicalized)
-    val cached = statsCache.get(key)
-    if (cached ne null) return cached
-    val stats: SideStats =
-      try {
-        inSample.set(true)
-        import org.apache.spark.sql.functions.{count, lit, max, min, sum}
-        val spark = SparkSession.active
-        val sCol = Alias(Cast(s, LongType), "_graft_s")()
-        val eCol = Alias(Cast(e, LongType), "_graft_e")()
-        val kCols = keys.zipWithIndex.map { case (k, i) => Alias(k, s"_graft_k$i")() }
-        val sample = GraftColumnBridge.ofRows(spark,
-          Project(kCols ++ Seq(sCol, eCol), side)).limit(sampleRows)
-        if (keys.isEmpty) {
-          val r = sample.agg(count(lit(1)),
-            sum(org.apache.spark.sql.functions.col("_graft_e")
-              - org.apache.spark.sql.functions.col("_graft_s")).cast("double"),
-            min(org.apache.spark.sql.functions.col("_graft_s")),
-            max(org.apache.spark.sql.functions.col("_graft_e"))).head()
-          val n = r.getLong(0)
-          if (n == 0) SideStats(1.0, 0L, 0L, 0.0)
-          else SideStats(math.max(r.getDouble(1) / n, 1.0),
-            math.max(r.getLong(3) - r.getLong(2), 1L), 1L, 1.0)
-        } else {
-          import org.apache.spark.sql.functions.col
-          val r = sample.groupBy(kCols.indices.map(i => col(s"_graft_k$i")): _*)
-            .agg(count(lit(1)).as("_n"),
-              sum(col("_graft_e") - col("_graft_s")).cast("double").as("_sl"),
-              min(col("_graft_s")).as("_mns"), max(col("_graft_e")).as("_mxe"))
-            .agg(count(lit(1)), max(col("_n")), sum(col("_n")), sum(col("_sl")),
-              min(col("_mns")), max(col("_mxe"))).head()
-          val distinct = r.getLong(0)
-          if (distinct == 0) SideStats(1.0, 0L, 0L, 0.0)
-          else {
-            val total = math.max(r.getLong(2), 1L)
-            SideStats(math.max(r.getDouble(3) / total, 1.0),
-              math.max(r.getLong(5) - r.getLong(4), 1L),
-              distinct, r.getLong(1).toDouble / total)
-          }
-        }
-      } finally inSample.set(false)
-    if (statsCache.size > 512) statsCache.clear()
-    statsCache.put(key, stats)
-    stats
-  }
-
-  /** autoBinSize rule (SURVEY §4.3): next power of four >= 4x the mean
-    * interval length, clamped to [64, 65536]. */
-  private def autoWidth(meanLen: Double): Long = {
-    val target = 4.0 * meanLen
-    var bin = 64L
-    while (bin < target && bin < 65536L) bin *= 4
-    bin
+                           s: Expression, e: Expression): Sizing.SideStats = {
+    val kCols = keys.zipWithIndex.map { case (k, i) => Alias(k, s"_graft_k$i")() }
+    val df = GraftColumnBridge.ofRows(SparkSession.active,
+      Project(kCols ++ Seq(Alias(s, Cols.Start)(), Alias(e, Cols.End)()), side))
+    inSample.set(true)
+    try Sizing.sideStats(df, kCols.map(_.name))
+    finally inSample.set(false)
   }
 
   /** (useSweep, binWidth, sweepMegaBin) for one matched join. The
@@ -197,8 +146,8 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       case _ => // auto
         val ls = sampledStats(l, keyPairs.map(_._1), lStart, lEnd)
         val rs = sampledStats(r, Nil, rStart, rEnd)
-        val mean = math.max(ls.mean, rs.mean)
-        val width = confBinSize.getOrElse(autoWidth(mean))
+        val mean = math.max(ls.meanLen, rs.meanLen)
+        val width = confBinSize.getOrElse(RangeJoin.widthFor(mean))
         // depth demotion: the sweep holds `depth` row copies in its
         // active buffers per task (in-heap to sweepSpillDepth, then a
         // disk-spillable overflow — it degrades rather than OOMs); the
@@ -215,9 +164,7 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
           else {
             val cores = math.max(
               SparkSession.active.sparkContext.defaultParallelism, 1)
-            val manyBalanced =
-              ls.distinct >= 4L * cores && ls.hottest <= 1.0 / (2 * cores)
-            if (manyBalanced) None
+            if (ls.manyBalancedKeys(cores)) None
             else {
               var w = 16384L
               while (w < ls.span / (8L * cores)) w *= 2
@@ -229,7 +176,7 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
           else megaBin.fold("sweep")(_ => "sweep-salted")
         lastChoice.set((tag, mean, width))
         logInfo(s"[graft.rewrite] auto interval join: meanLen=$mean " +
-          s"bin=$width span=${ls.span} keys=${ls.distinct} -> $tag")
+          s"bin=$width span=${ls.span} keys=${ls.distinctKeys} -> $tag")
         (sweep, width, megaBin)
     }
     if (decision._1) IntervalSweepJoinExec.ensureStrategy(SparkSession.active)

@@ -271,6 +271,80 @@ class PlanContractSpec extends AnyFunSuite {
       graft.io.TableIO.empty(spark)) == 16384L)
   }
 
+  test("gate sample: one bounded take per input, labelled, then memoized") {
+    // 64 splits of 100k rows each: a limit().agg() sample ran a task on
+    // every split; the take reads the first split and stops
+    val df = spark.range(0L, 64L * 100000L, 1L, 64)
+      .select(concat(lit("c"), pmod(col("id"), lit(8L))).as(Chrom),
+        (col("id") * 10L).as(Start), (col("id") * 10L + 50L).as(End))
+    assert(df.rdd.getNumPartitions == 64)
+    val sc = spark.sparkContext
+    val tracker = sc.statusTracker
+    val group = s"gate-sample-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description")))
+    }
+    def jobs(): Seq[Int] = {
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+      tracker.getJobIdsForGroup(group).toSeq
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "gate sample contract")
+    sc.setJobDescription("caller's description")
+    try {
+      graft.core.Sizing.saltPlan(df, Seq(Chrom))
+      val first = jobs()
+      val tasks = first.flatMap(tracker.getJobInfo(_)).flatMap(_.stageIds)
+        .flatMap(tracker.getStageInfo(_)).map(_.numTasks).sum
+      assert(first.nonEmpty && first.size <= 2, s"sample jobs: $first")
+      assert(tasks <= 8, s"$tasks sample tasks over 64 splits")
+      assert(seen.toArray.toSet == Set((group, "graft gate sample")),
+        "sample jobs keep the caller's group and carry their own description")
+      assert(sc.getLocalProperty("spark.job.description") == "caller's description")
+      // a second gate on the same frame, same keys: the memo answers
+      graft.core.Sizing.saltPlan(df, Seq(Chrom))
+      graft.core.Sizing.sideStats(df, Seq(Chrom))
+      assert(jobs() == first, "a memoized gate must launch no job")
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("gate memo: rewritten input resamples, empty floors, plans stay apart") {
+    import graft.join.RangeJoin
+    // the same path rewritten with 100x longer intervals: the plan is
+    // unchanged, the input files are not
+    val dir = java.nio.file.Files.createTempDirectory("graft_gate_memo_").toString
+    def rewrite(len: Long): Long = {
+      spark.range(20000)
+        .select(lit("c").as(Chrom), (col("id") * 1000L).as(Start),
+          (col("id") * 1000L + len).as(End))
+        .write.mode("overwrite").parquet(dir)
+      RangeJoin.autoBinSize(spark.read.parquet(dir), spark.read.parquet(dir))
+    }
+    try {
+      assert(rewrite(10L) == 64L)
+      assert(rewrite(1000L) == 4096L, "a rewritten input must be sampled again")
+    } finally new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+    // empty input: the floors, on a miss and on a memo hit alike
+    val empty = graft.io.TableIO.empty(spark)
+    assert(graft.core.Sizing.autoSaltBin(empty) == 16384L)
+    assert(graft.core.Sizing.autoSaltBin(empty) == 16384L)
+    assert(RangeJoin.autoBinSize(empty, empty) == 64L)
+    // two frames of one shape but different spans (1M vs 100M
+    // coordinates on local[4]): separate memo entries, separate bins
+    def spaced(step: Long) = spark.range(100000)
+      .select(lit("c").as(Chrom), (col("id") * step).as(Start),
+        (col("id") * step + 10L).as(End))
+    assert(graft.core.Sizing.autoSaltBin(spaced(10L)) == 32768L)
+    assert(graft.core.Sizing.autoSaltBin(spaced(1000L)) == (1L << 22))
+  }
+
   test("empty constructor carries the genomic schema contract") {
     val e = graft.io.TableIO.empty(spark)
     assert(e.count() == 0)
