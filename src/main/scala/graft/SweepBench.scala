@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A/B harness for the binned-vs-sweep interval-join crossover — the
-  * measurement behind `spark.graft.join.sweepFanout`
-  * (IntervalJoinRewrite's auto dispatch). Generates interval tables
+  * measurement behind the fan-out bar of the interval-join chooser
+  * (`RangeJoin.choose`). Generates interval tables
   * whose MEAN LENGTH is the swept axis while coverage depth is held
   * constant (span scales with n*len/depth), so the only thing changing
   * between rows of the result table is the binned plan's explode
@@ -159,8 +159,12 @@ object SweepBench {
       val r = mkTable(spark, n / 4, len, span, 97L, s"$dir/${tag}r_n${n}_len$len.parquet", hot)
       val autoBin = graft.join.RangeJoin.autoBinSize(l, r)
       val fanout = len.toDouble / autoBin
-      // the span-scaled salt bin autoPairs would pick
-      val mb = graft.join.RangeJoin.sweepMegaBin(l, Seq(Chrom), len.toDouble)
+      // the salt bin the count/pick dispatch would pick
+      import graft.join.RangeJoin.{Sweep, Use, choose}
+      val mb = choose(l, r, Seq(Chrom), Use.Count) match {
+        case Sweep(m) => m
+        case _ => None
+      }
 
       if (args.contains("--pick")) {
         // derived-mode A/B: first-match pick and per-row count, binned

@@ -213,7 +213,7 @@ object Sizing {
     * shapes without terabyte fixtures. */
   val ForceKey = "spark.graft.sizing.force"
 
-  private def forced(): Option[Boolean] =
+  private[graft] def forced(): Option[Boolean] =
     org.apache.spark.sql.internal.SQLConf.get
       .getConfString(ForceKey, "") match {
       case "salted" => Some(true)

@@ -26,11 +26,16 @@ import org.apache.spark.sql.functions._
   * methods/overlap.py:20-47) — sort-sweep per (factorized) key; `slack`
   * extends the LEFT side's intervals for matching only (reference
   * core/pyranges_main.py:2393-2615).
+  *
+  * Which spelling runs — binned at a sampled bin, plain sweep or salted
+  * sweep — is decided in ONE place, [[choose]], for the ops dispatchers
+  * here and in BinaryOps and for the optimizer rule IntervalJoinRewrite.
   */
 object RangeJoin {
   import Cols.{Start, End}
 
-  /** Session conf key overriding the default genomic bin width. */
+  /** Session conf key overriding the default genomic bin width; it also
+    * pins the width IntervalJoinRewrite would otherwise sample. */
   val BinSizeKey = "spark.graft.join.binSize"
 
   /** Default genomic bin width. Tune toward the typical interval length:
@@ -66,199 +71,161 @@ object RangeJoin {
       Sizing.sideStats(right, Nil, sampleRows).meanLen))
 
   /** The autoBinSize rule: next power of four >= 4x `meanLen`, clamped
-    * to [64, 65536]. Shared with IntervalJoinRewrite. */
+    * to [64, 65536]. */
   def widthFor(meanLen: Double): Long = {
     var bin = 64L
     while (bin < 4.0 * meanLen && bin < 65536L) bin *= 4
     bin
   }
 
-  /** (larger sampled mean length of the two sides, left span). Both
-    * sides are sampled with `keys`, so a frame's length, span and salt
-    * statistics share one memoized take whichever gate asks first. */
-  private def sampledLenSpan(left: DataFrame, right: DataFrame,
-                             keys: Seq[String]): (Double, Long) = {
-    val l = Sizing.sideStats(left, keys)
-    (math.max(l.meanLen, Sizing.sideStats(right, keys).meanLen), l.span)
+  /** An interval join's physical spelling: the binned equi-join at
+    * `bin`, or the sort-merge sweep ([[IntervalSweepJoin]]), salted with
+    * span-scale mega-bins when `megaBin` is set. */
+  sealed trait Route
+  final case class Binned(bin: Long) extends Route
+  final case class Sweep(megaBin: Option[Long]) extends Route
+
+  /** What the caller does with the join's matches: it names the size
+    * gate, suffixes the recorded tag, says whether the sweep may be
+    * salted (not for exists/outer: salting copies rows across mega-bins,
+    * and those joins decide each left row once, not per copy) and
+    * whether the sweep folds matches instead of emitting pairs
+    * (pick/count). */
+  sealed abstract class Use(val gate: String, val tagSuffix: String,
+                            val salts: Boolean = true, val folds: Boolean = false)
+  object Use {
+    case object Pairs extends Use("rangejoin/auto", "")
+    case object Exists extends Use("rangejoin/existsAuto", "-exists", salts = false)
+    case object Outer extends Use("rangejoin/outerAuto", "-outer", salts = false)
+    case object Pick extends Use("rangejoin/pickAuto", "-rangejoin/pickAuto", folds = true)
+    case object Count extends Use("rangejoin/countAuto", "-rangejoin/countAuto", folds = true)
   }
 
-  /** The salted sweep's mega-bin, when [[Sizing.saltPlan]] salts the
-    * left side: the span-scaled bin, widened until explode fan-out
-    * stays ~1 copy per row. */
-  private[graft] def sweepMegaBin(left: DataFrame, keys: Seq[String],
-                           mean: Double): Option[Long] =
-    Sizing.saltPlan(left, keys).map { b =>
-      var w = b
-      while (w < 4.0 * mean) w *= 2
-      w
-    }
-
-  /** Estimated max concurrent overlap depth: rows (from leaf bytes /
-    * ~64 B) x meanLen / span. The sweep's active buffers hold `depth`
-    * row copies per task up to `sweepSpillDepth` (262144), then
-    * stateless entries overflow to disk-spillable generations
-    * (SweepOverflow — measured: 1M concurrent entries complete in
-    * ~0.9 s, BASELINE.md "sweep depth stress"), so depth no longer
-    * OOMs; past `spark.graft.join.sweepMaxDepth` (default 262144, the
-    * in-heap cap) the binned join is still PREFERRED — its codegen'd
-    * hash join streams the same candidate volume faster than the
-    * overflow's re-scans, and stateful sweep modes (pick/count fold
-    * state) cannot ride the overflow at all. */
-  private[join] def depthOk(left: DataFrame, right: DataFrame,
-                            mean: Double, span: Long): Boolean = {
-    val bar = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.join.sweepMaxDepth", "262144").toDouble
-    val estRows = Sizing.leafScanBytes(left, right).toDouble / 64.0
-    estRows * mean / math.max(span, 1L) <= bar
-  }
-
-  /** Last autoPairs decision: (strategy, mean len, bin width) —
-    * test/debug observability (the Sizing.lastDecision contract). */
+  /** Last chooser decision: (tag, mean len, bin width) — test/debug
+    * observability (the Sizing.lastDecision contract). Tags: `binned`,
+    * `sweep` or `sweep-salted`, then the use's suffix; a pick/count
+    * that stays binned records nothing (its pair join records). */
   val lastAutoPairs =
     new java.util.concurrent.atomic.AtomicReference[(String, Double, Long)]()
 
-  /** Statistics-driven pair join: the sampled mean interval length of
-    * both sides sizes the bin ([[widthFor]]) and routes to the binned
-    * join or the sort-merge sweep operator ([[IntervalSweepJoin]]) when
-    * the binned plan's explode fan-out mean/bin would exceed
-    * `fanoutBar` — the MEASURED crossover (graft.SweepBench,
-    * BASELINE.md "binned vs sweep": parity at fan-out 2, sweep 4x ahead
-    * at 16). The sweep is salted when the key statistics of the same
-    * left sample say per-key parallelism is scarce (same saltPlan gates
-    * as the window ops: wide span, not many balanced keys). The
-    * DataFrame-API counterpart of IntervalJoinRewrite's
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** THE interval-join decision, shared by the ops dispatchers and
+    * IntervalJoinRewrite. It reads [[Sizing.sideStats]] of both sides
+    * with `keys` (one memoized take per frame) and picks:
+    *
+    *  - the bin: `pinnedBin`, else [[widthFor]] of the larger mean.
+    *  - SWEEP when the binned plan's explode fan-out mean/bin exceeds
+    *    2 — the MEASURED crossover (graft.SweepBench, BASELINE.md
+    *    "binned vs sweep": binned wins 1.4-2x at fan-out <= 1, parity at
+    *    2, sweep 4x ahead at 16). Pick/count also sweep whenever salt is
+    *    available: their salted fold modes never materialize the pair
+    *    set and beat binned pairs+aggregation at EVERY length (1.4x at
+    *    fan-out 0.08 up to 11x at 16, BASELINE.md "sweep pick/count"),
+    *    while the PLAIN sweep still loses at low fan-out on scarce keys
+    *    (one task per key, 10.9 s vs binned 2.6 s) — the case salt fixes.
+    *  - but BINNED when the estimated max overlap depth, rows (leaf bytes
+    *    / ~64 B) x mean / span, passes `spark.graft.join.sweepMaxDepth`
+    *    (default 262144, the sweep's in-heap cap). Past it the sweep
+    *    overflows to disk-spillable generations (1M concurrent entries
+    *    in ~0.9 s, BASELINE.md "sweep depth stress") rather than OOM,
+    *    but the codegen'd hash join streams the same candidates faster,
+    *    and the stateful pick/count modes cannot overflow at all.
+    *  - the salt, for uses that allow it: [[Sizing.saltPlan]]'s
+    *    span-scaled bin (demoted on a narrow span or many balanced keys),
+    *    widened until explode fan-out stays ~1 copy per row, and kept
+    *    only while the span still covers >= 4 of the widened bins — the
+    *    narrow-span failure saltPlan guards (0.78x, BASELINE.md "salted
+    *    crossover") — unless the gate is forced salted. Salting fixes the
+    *    one-task-per-hot-key serialization of a plain sweep: 4.3-5.5x on
+    *    one hot key, 1.7-2.6x on 3 balanced keys (BASELINE.md "salted
+    *    sweep").
+    *
+    * Records its tag in [[lastAutoPairs]]. No size gate: that is
+    * [[gatedChoice]]. */
+  private[graft] def choose(left: DataFrame, right: DataFrame, keys: Seq[String],
+                            use: Use, pinnedBin: Option[Long] = None): Route = {
+    val l = Sizing.sideStats(left, keys)
+    val mean = math.max(l.meanLen, Sizing.sideStats(right, keys).meanLen)
+    val bin = pinnedBin.getOrElse(widthFor(mean))
+    lazy val megaBin =
+      if (!use.salts) None
+      else Sizing.saltPlan(left, keys).flatMap { b =>
+        var w = b
+        while (w < 4.0 * mean) w *= 2
+        Option.when(l.span >= 4L * w || Sizing.forced().contains(true))(w)
+      }
+    def depthOk: Boolean =
+      Sizing.leafScanBytes(left, right).toDouble / 64.0 * mean / l.span <=
+        org.apache.spark.sql.internal.SQLConf.get
+          .getConfString("spark.graft.join.sweepMaxDepth", "262144").toDouble
+    val route =
+      if ((mean / bin > 2.0 || use.folds && megaBin.isDefined) && depthOk) Sweep(megaBin)
+      else Binned(bin)
+    val tag = route match {
+      case Sweep(mb) => Some(mb.fold("sweep")(_ => "sweep-salted"))
+      case Binned(_) => Option.unless(use.folds)("binned")
+    }
+    tag.foreach(t => lastAutoPairs.set((t + use.tagSuffix, mean, bin)))
+    log.info(s"[graft.join] ${use.gate}: meanLen=$mean bin=$bin span=${l.span} " +
+      s"keys=${l.distinctKeys} -> $route")
+    route
+  }
+
+  /** The size gate in front of [[choose]]: None — the caller's plain
+    * binned plan at its own bin, with zero sampling — for containment
+    * (its binned plan is already optimal: a single computed left bin, no
+    * explode; the sweep's residual is overlap-shaped) and below
+    * `threshold` leaf bytes (conf `spark.graft.join.autoThreshold`,
+    * default the measured 32 MB salt gate, which every sf0.1 bench
+    * input stays under). */
+  private[graft] def gatedChoice(left: DataFrame, right: DataFrame, keys: Seq[String],
+                                 use: Use, contained: Boolean = false,
+                                 threshold: Option[Long] = None): Option[Route] = {
+    val bar = threshold.getOrElse(org.apache.spark.sql.internal.SQLConf.get
+      .getConfString("spark.graft.join.autoThreshold",
+        Sizing.saltedInputThreshold.toString).toLong)
+    Option.when(!contained && Sizing.decide(use.gate, bar, left, right))(
+      choose(left, right, keys, use))
+  }
+
+  /** Statistics-driven pair join: the binned join at the sampled bin or
+    * the (salted) sweep, as [[choose]] decides. The DataFrame-API
+    * counterpart of IntervalJoinRewrite's
     * `spark.graft.join.strategy=auto`. */
   def autoPairs(left: DataFrame, right: DataFrame, keys: Seq[String],
-                slack: Long = 0, suffix: String = "_b",
-                fanoutBar: Double = 2.0): DataFrame = {
-    val (mean, lSpan) = sampledLenSpan(left, right, keys)
-    val bin = widthFor(mean)
-    if (mean / bin > fanoutBar && depthOk(left, right, mean, lSpan)) {
-      val mb = sweepMegaBin(left, keys, mean)
-      lastAutoPairs.set((mb.fold("sweep")(_ => "sweep-salted"), mean, bin))
-      IntervalSweepJoin.pairs(left, right, keys, slack, suffix, megaBin = mb)
-    } else {
-      lastAutoPairs.set(("binned", mean, bin))
-      pairs(left, right, keys, slack, bin, suffix)
-    }
-  }
+                slack: Long = 0, suffix: String = "_b"): DataFrame =
+    routedPairs(choose(left, right, keys, Use.Pairs), left, right, keys, slack, suffix)
 
-  /** Size-gated strategy dispatch for the ops layer: below the gate
-    * (every sf0.1 bench input) this IS `pairs` at the caller's bin —
-    * zero sampling cost on small inputs; above it (conf
-    * `spark.graft.join.autoThreshold` leaf bytes, default the measured
-    * 32 MB salt gate) the sampled [[autoPairs]] choice takes over —
-    * bin width from the data, sweep (salted if keys are scarce) when
-    * the binned fan-out would explode. Containment keeps the binned
-    * fast path at any size (the sweep's residual is overlap-shaped). */
+  private def routedPairs(route: Route, left: DataFrame, right: DataFrame,
+                          keys: Seq[String], slack: Long, suffix: String): DataFrame =
+    route match {
+      case Sweep(mb) => IntervalSweepJoin.pairs(left, right, keys, slack, suffix, megaBin = mb)
+      case Binned(bin) => pairs(left, right, keys, slack, bin, suffix)
+    }
+
+  /** Size-gated pair join for the ops layer: below the gate (every sf0.1
+    * bench input) this IS `pairs` at the caller's bin; above it the
+    * sampled [[autoPairs]] choice takes over. */
   def pairsDispatch(left: DataFrame, right: DataFrame, keys: Seq[String],
                     slack: Long = 0, binSize: Long = RangeJoin.defaultBinSize,
-                    suffix: String = "_b", contained: Boolean = false): DataFrame = {
-    val threshold = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.join.autoThreshold",
-        Sizing.saltedInputThreshold.toString).toLong
-    if (!contained &&
-        Sizing.decide("rangejoin/auto", threshold, left, right)) {
-      autoPairs(left, right, keys, slack, suffix)
-    } else {
-      pairs(left, right, keys, slack, binSize, suffix, contained)
+                    suffix: String = "_b", contained: Boolean = false): DataFrame =
+    gatedChoice(left, right, keys, Use.Pairs, contained) match {
+      case Some(route) => routedPairs(route, left, right, keys, slack, suffix)
+      case None => pairs(left, right, keys, slack, binSize, suffix, contained)
     }
-  }
 
-  /** Shared auto decision for the sweep-native derived modes (pick /
-    * count): None = stay on the binned plan; Some(megaBin) = sweep,
-    * with the salt bin the key statistics demand (None inside = plain
-    * per-key sweep). The statistics are one memoized take per side
-    * (left with `keys`), the gates those of [[autoPairs]] /
-    * [[existsDispatch]] — EXCEPT the fan-out bar, which
-    * for pick/count is OR'd with salt availability: the MEASURED table
-    * (BASELINE.md "sweep pick/count", graft.SweepBench --pick) shows
-    * the salted sweep's fold modes beating the binned pairs+aggregation
-    * at EVERY interval length (1.4x at fan-out 0.08 up to 11x at 16)
-    * because they never materialize the pair set, while the PLAIN
-    * sweep still loses at low fan-out when keys are scarce (one task
-    * per key, 10.9 s vs binned 2.6 s) — exactly the case saltPlan
-    * detects. So: salt available -> salted sweep at any length;
-    * many balanced keys (salt demoted) -> fan-out bar as for pairs. */
-  private[graft] def sweepAutoChoice(left: DataFrame, right: DataFrame,
-                                     keys: Seq[String], op: String,
-                                     contained: Boolean,
-                                     thresholdOverride: Option[Long] = None)
-      : Option[Option[Long]] = {
-    val threshold = thresholdOverride.getOrElse(
-      org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.join.autoThreshold",
-          Sizing.saltedInputThreshold.toString).toLong)
-    if (contained || !Sizing.decide(op, threshold, left, right)) return None
-    val (mean, lSpan) = sampledLenSpan(left, right, keys)
-    val bin = widthFor(mean)
-    val mb = sweepMegaBin(left, keys, mean)
-    if ((mean / bin > 2.0 || mb.isDefined) && depthOk(left, right, mean, lSpan)) {
-      lastAutoPairs.set((mb.fold("sweep")(_ => "sweep-salted") + s"-$op", mean, bin))
-      Some(mb)
-    } else None
-  }
-
-  /** Existence-join counterpart of [[pairsDispatch]]: same size gate,
-    * same sampled fan-out bar; above both, semi/anti run through the
-    * sweep operator's native modes (no explode, no rid machinery)
-    * instead of the binned exists. Containment keeps the binned fast
-    * path (single computed left bin, no explode — already optimal). */
+  /** Existence-join counterpart of [[pairsDispatch]]: above the gate
+    * semi/anti run through the sweep operator's native modes (no
+    * explode, no rid machinery) when the chooser picks the sweep. */
   def existsDispatch(left: DataFrame, right: DataFrame, keys: Seq[String],
                      slack: Long = 0, binSize: Long = RangeJoin.defaultBinSize,
-                     contained: Boolean = false, anti: Boolean = false): DataFrame = {
-    val threshold = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.join.autoThreshold",
-        Sizing.saltedInputThreshold.toString).toLong
-    if (!contained &&
-        Sizing.decide("rangejoin/existsAuto", threshold, left, right)) {
-      val (mean, bin, go) = plainSweepBar(left, right, keys)
-      if (go) {
-        lastAutoPairs.set(("sweep-exists", mean, bin))
-        IntervalSweepJoin.exists(left, right, keys, slack, anti = anti)
-      } else {
-        lastAutoPairs.set(("binned-exists", mean, bin))
-        exists(left, right, keys, slack, bin, contained, anti)
-      }
-    } else {
-      exists(left, right, keys, slack, binSize, contained, anti)
+                     contained: Boolean = false, anti: Boolean = false): DataFrame =
+    gatedChoice(left, right, keys, Use.Exists, contained) match {
+      case Some(Sweep(_)) => IntervalSweepJoin.exists(left, right, keys, slack, anti = anti)
+      case Some(Binned(bin)) => exists(left, right, keys, slack, bin, contained, anti)
+      case None => exists(left, right, keys, slack, binSize, contained, anti)
     }
-  }
-
-  /** The plain-sweep bar shared by [[existsDispatch]] and
-    * [[sweepOuterChoice]]: sampled mean interval length vs the bin the
-    * binned plan would pick — the regime where binned explode fan-out
-    * loses — plus the depth guard. Returns (mean, bin, clears). Kept in
-    * ONE place so a future bar/bin tuning cannot silently diverge the
-    * dispatchers. */
-  private def plainSweepBar(left: DataFrame, right: DataFrame, keys: Seq[String])
-      : (Double, Long, Boolean) = {
-    val (mean, lSpan) = sampledLenSpan(left, right, keys)
-    val bin = widthFor(mean)
-    (mean, bin, mean / bin > 2.0 && depthOk(left, right, mean, lSpan))
-  }
-
-  /** Outer-join counterpart of [[existsDispatch]]'s gate: above the
-    * size gate and the plain-sweep fan-out bar, outer joins route
-    * through the sweep operator's native outer modes — the binned outer
-    * pays two extra anti-joins AND amplifies rows by bin fan-out, the
-    * sweep does neither. Salt never applies (matched-ness is per-row
-    * across bin copies, like exists), so the bar is the plain-sweep
-    * one: long intervals / deep overlap where binned fan-out explodes.
-    * Returns whether to route through [[IntervalSweepJoin.outer]]. */
-  private[graft] def sweepOuterChoice(left: DataFrame, right: DataFrame,
-                                      keys: Seq[String],
-                                      contained: Boolean): Boolean = {
-    val threshold = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.join.autoThreshold",
-        Sizing.saltedInputThreshold.toString).toLong
-    if (contained ||
-        !Sizing.decide("rangejoin/outerAuto", threshold, left, right))
-      return false
-    val (mean, bin, go) = plainSweepBar(left, right, keys)
-    lastAutoPairs.set(((if (go) "sweep" else "binned") + "-outer", mean, bin))
-    go
-  }
 
   /** floor(x / b) as a Column, exact for |x| < 2^52. */
   private def floorDiv(x: Column, b: Long): Column =
@@ -276,32 +243,6 @@ object RangeJoin {
 
   private def maybeBroadcast(df: DataFrame, small: Boolean): DataFrame =
     if (small) broadcast(df) else df
-
-  /** Conf key for the probe-side fan-out gate (leaf bytes; 0 disables).
-    * Alias of [[Sizing.FanoutKey]]. */
-  val FanoutKey: String = Sizing.FanoutKey
-
-  /** Minimum probe-side parallelism under a broadcast build.
-    *
-    * When the build side broadcasts, the whole probe pipeline (scan →
-    * bin explode → hash probe → downstream partial aggregates) executes
-    * inside the probe's SCAN stage, so its parallelism is the scan's
-    * split count — and a small parquet input is often a single row
-    * group, i.e. ONE task, serializing a 32-core join behind one core.
-    * [[Sizing.fanOutSmallScan]] restores parallelism for the
-    * price of one narrow exchange (MEASURED at sf0.1/local[32],
-    * BASELINE.md "probe fan-out": pairs 3.8→1.4 s, join-first 5.2→1.8 s,
-    * join+overlap 3.5→1.0 s steady); a no-op against 100 TB inputs.
-    *
-    * Applied to the PAIR join only: its probe does heavy per-row work
-    * (every bin-mate candidate checked, ~17 matched pairs emitted per
-    * probe row on the bench corpus, plus downstream pick/count partial
-    * aggregates in the same stage). The exists (semi/anti) and
-    * containment probes do a light early-out hash probe per row —
-    * measured there, the extra exchange costs MORE than it saves
-    * (q12 1.4→2.0 s, q13 1.2→1.8 s), so they stay un-fanned. */
-  private def fanOutProbe(df: DataFrame): DataFrame =
-    Sizing.fanOutSmallScan(df)
 
   /** Explode `df` into (row, bin) with the interval extended by `pad`. */
   private def binned(df: DataFrame, binSize: Long, pad: Long,
@@ -329,7 +270,17 @@ object RangeJoin {
     val rs = Start + suffix
     val re = End + suffix
     val rightSmall = broadcastable(right)
-    val probe = if (rightSmall) fanOutProbe(left) else left
+    // Under a broadcast build the whole probe pipeline (scan -> bin
+    // explode -> hash probe -> downstream partial aggregates) runs in
+    // the probe's SCAN stage, and a small parquet input is often one
+    // row group, i.e. ONE task. Fanning the scan out costs one narrow
+    // exchange (MEASURED at sf0.1/local[32], BASELINE.md "probe
+    // fan-out": pairs 3.8->1.4 s, join-first 5.2->1.8 s, join+overlap
+    // 3.5->1.0 s steady); a no-op against 100 TB inputs. Pair joins
+    // only: their probe does heavy per-row work (~17 matched pairs per
+    // row on the bench corpus); the light early-out exists/containment
+    // probes measured SLOWER with it (q12 1.4->2.0 s, q13 1.2->1.8 s).
+    val probe = if (rightSmall) Sizing.fanOutSmallScan(left) else left
     val lb = binned(probe, binSize, slack, Start, End).alias("l")
     // hash-shuffle join on (keys, bin) by default; small right sides
     // (dimension-table-sized annotation sets) broadcast instead, judged

@@ -52,7 +52,8 @@ object BinaryOps {
     // instead of the binned pairs + two anti-joins, and no bin fan-out
     // row amplification on the unmatched scans.
     if (multiple == "all" && joinType != "inner" &&
-        RangeJoin.sweepOuterChoice(left, right, keys, contained)) {
+        RangeJoin.gatedChoice(left, right, keys, RangeJoin.Use.Outer, contained)
+          .exists(_.isInstanceOf[RangeJoin.Sweep])) {
       val p0 = graft.join.IntervalSweepJoin.outer(left, right, keys,
         joinType, slack = slack, suffix = suffix)
       return reportOverlapCol.fold(p0)(c => p0.withColumn(c,
@@ -69,19 +70,19 @@ object BinaryOps {
     // hashes — pair materialization dominates well below the shared
     // 32 MB gate. Short-interval many-balanced-keys shapes still stay
     // binned via the fan-out bar + saltPlan demotion inside the choice.
-    val sweepPick: Option[Option[Long]] =
+    val sweepPick: Option[RangeJoin.Route] =
       if (multiple == "first" || multiple == "last") {
         val pickGate = org.apache.spark.sql.internal.SQLConf.get
           .getConfString("spark.graft.join.pickAutoThreshold",
             (4L << 20).toString).toLong
-        RangeJoin.sweepAutoChoice(left, right, keys, "rangejoin/pickAuto",
-          contained, thresholdOverride = Some(pickGate))
+        RangeJoin.gatedChoice(left, right, keys, RangeJoin.Use.Pick,
+          contained, threshold = Some(pickGate))
       } else None
     var p = sweepPick match {
-      case Some(mb) =>
+      case Some(RangeJoin.Sweep(mb)) =>
         graft.join.IntervalSweepJoin.pick(left, right, keys,
           last = multiple == "last", slack = slack, suffix = suffix, megaBin = mb)
-      case None =>
+      case _ =>
         RangeJoin.pairsDispatch(left, right, keys, slack, binSize, suffix, contained)
     }
     // multiple=first/last pick one right match per left row. A window
@@ -202,11 +203,10 @@ object BinaryOps {
     // sweep regime: the operator's native count mode bumps a counter per
     // candidate instead of emitting the pair set, and (unsalted) already
     // yields every left row with its count — no rejoin at all
-    RangeJoin.sweepAutoChoice(left, right, keys, "rangejoin/countAuto",
-        contained = false) match {
-      case Some(mb) =>
+    RangeJoin.gatedChoice(left, right, keys, RangeJoin.Use.Count) match {
+      case Some(RangeJoin.Sweep(mb)) =>
         graft.join.IntervalSweepJoin.count(left, right, keys, slack, countCol, mb)
-      case None =>
+      case _ =>
         val p = RangeJoin.pairsDispatch(left, right, keys, slack, binSize)
         // row identity = the FULL left row, not row_id alone (round-18
         // correctness find): the sf0.001 lineitem data carries one

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.core.{Cols, Sizing}
+import graft.core.Cols
 import graft.join.RangeJoin
 import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
@@ -31,22 +31,19 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *    len/binSize copies, the sweep never amplifies rows.
   *
   * `spark.graft.join.strategy` picks: `binned`, `sweep`, or `auto`
-  * (default). Auto is STATISTICS-DRIVEN: the ops layer's gate sampler,
-  * [[graft.core.Sizing.sideStats]] — one bounded take of the first 100k
-  * rows per join side, memoized per plan — estimates the mean interval
-  * length, from which it derives (1) the bin width, when
-  * `spark.graft.binSize` does not pin one: next power of four >= 4x the
-  * larger mean, clamped to [64, 65536] (RangeJoin.widthFor); and
-  * (2) the binned plan's explode fan-out at that
-  * width, mean/bin. Fan-out above `spark.graft.join.sweepFanout`
-  * (default 2, MEASURED — graft.SweepBench, BASELINE.md "binned vs
-  * sweep" table: binned wins 1.4-2x at fan-out <= 1, parity at 2,
-  * sweep wins 1.2x at 3, 1.35x at 4 and 4x at 16) routes to the
-  * sweep. The sweep is additionally SALTED (mega-binned — span-scale
-  * bins join the cluster keys, greatest-start-bin dedup) when the same
-  * sample shows per-key parallelism is scarce, fixing the one-task-
-  * per-hot-key serialization of a plain sweep (measured 4.3-5.5x on a
-  * single hot key, BASELINE.md "salted sweep"); inner joins only.
+  * (default). Auto asks the interval-join chooser the ops layer uses,
+  * [[graft.join.RangeJoin.choose]], which reads
+  * [[graft.core.Sizing.sideStats]] of both sides — one bounded take of
+  * the first 100k rows per side, memoized per plan — and picks the bin
+  * width (sampled, unless `spark.graft.join.binSize` pins it), binned
+  * vs sweep by the measured fan-out bar and depth guard, and, for inner
+  * joins only, whether to SALT the sweep (mega-binned — span-scale bins
+  * join the cluster keys, greatest-start-bin dedup) when per-key
+  * parallelism is scarce. This rule only recognizes the join shape and
+  * builds the chosen plan; unlike the ops dispatchers it applies no
+  * size gate, so auto decides at any input size. The decision is
+  * recorded in `RangeJoin.lastAutoPairs` (`binned` / `sweep` /
+  * `sweep-salted`, `-exists` for semi/anti).
   *
   * Users opt in per session:
   *
@@ -64,8 +61,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * Stale memoized statistics can only change the strategy picked,
   * never the join's result: every strategy is result-identical. Pin
   * `SET spark.graft.join.strategy = binned` (or `sweep`) to make
-  * planning job-free; `spark.graft.binSize` then pins the bin width
-  * the binned plan would otherwise sample.
+  * planning job-free; `spark.graft.join.binSize` then sets the bin
+  * width of the binned plan (default 256).
   *
   * Covers Inner, LeftSemi and LeftAnti joins. Inner preserves the join's
   * output exactly (a Project restores the original attribute list).
@@ -83,104 +80,45 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   */
 object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** Bin width: tunable per session without recompiling —
-    * `SET spark.graft.binSize=1024` (e.g. to the value
-    * `RangeJoin.autoBinSize` reports for the workload's tables). Unset
-    * (the default), `auto` samples a width instead; the non-auto
-    * `binned` strategy falls back to 256. */
-  private def confBinSize: Option[Long] =
-    Option(conf.getConfString("spark.graft.binSize", null)).map(_.toLong)
-
   private def strategyConf: String =
     conf.getConfString("spark.graft.join.strategy", "auto")
 
-  private def sweepFanout: Double =
-    conf.getConfString("spark.graft.join.sweepFanout", "2").toDouble
-
   private val BIN_PREFIX = "_graft_bin_"
-
-  /** Last auto decision: (strategy, sampled mean len, bin width).
-    * Test/debug observability only (the Sizing.lastDecision contract). */
-  val lastChoice =
-    new java.util.concurrent.atomic.AtomicReference[(String, Double, Long)]()
-
-  // ---- sampled statistics (auto mode) ----
 
   private val inSample = new ThreadLocal[Boolean] {
     override def initialValue(): Boolean = false
   }
 
-  /** [[Sizing.sideStats]] of `side` projected to (keys, s, e): the
-    * ops layer's bounded, memoized take, so the optimizer's fixed-point
-    * re-runs and repeated self-join sides sample once. The sample
-    * query is optimized too; [[inSample]] keeps this rule out of it. */
-  private def sampledStats(side: LogicalPlan, keys: Seq[Expression],
-                           s: Expression, e: Expression): Sizing.SideStats = {
-    val kCols = keys.zipWithIndex.map { case (k, i) => Alias(k, s"_graft_k$i")() }
-    val df = GraftColumnBridge.ofRows(SparkSession.active,
-      Project(kCols ++ Seq(Alias(s, Cols.Start)(), Alias(e, Cols.End)()), side))
-    inSample.set(true)
-    try Sizing.sideStats(df, kCols.map(_.name))
-    finally inSample.set(false)
-  }
-
-  /** (useSweep, binWidth, sweepMegaBin) for one matched join. The
-    * mega-bin (Some = salt the sweep) fires when per-key parallelism is
-    * scarce — NOT (>= 4x-cores distinct keys AND hottest <= 1/(2*cores)),
-    * the measured Sizing.saltPlan demotion — and the span fits >= 4
-    * bins; the span-scaled bin (~8/core) widens until explode fan-out
-    * stays ~1 (BASELINE.md "salted sweep": 4.3-5.5x over the plain
-    * sweep on one hot key, 1.7-2.6x on 3 balanced keys). */
+  /** The physical route for one matched join: pinned by the strategy
+    * conf, binned for streams (no sample job can run against a stream,
+    * and the binned form composes with micro-batches), else
+    * [[RangeJoin.choose]] on the sides projected to (keys, Start, End).
+    * Those projections are optimized too; [[inSample]] keeps this rule
+    * out of them. No size gate: auto mode decides at any input size. */
   private def choose(l: LogicalPlan, r: LogicalPlan,
                      keyPairs: Seq[(Attribute, Attribute)],
                      lStart: Expression, lEnd: Expression,
                      rStart: Expression, rEnd: Expression,
-                     allowSalt: Boolean = true): (Boolean, Long, Option[Long]) = {
-    val decision = strategyConf match {
-      case "sweep"  => (true, confBinSize.getOrElse(256L), None)
-      case "binned" => (false, confBinSize.getOrElse(256L), None)
-      case _ if l.isStreaming || r.isStreaming =>
-        // can't run a sample job against a stream; the binned form is
-        // the one that composes with micro-batch execution
-        (false, confBinSize.getOrElse(256L), None)
-      case _ => // auto
-        val ls = sampledStats(l, keyPairs.map(_._1), lStart, lEnd)
-        val rs = sampledStats(r, Nil, rStart, rEnd)
-        val mean = math.max(ls.meanLen, rs.meanLen)
-        val width = confBinSize.getOrElse(RangeJoin.widthFor(mean))
-        // depth demotion: the sweep holds `depth` row copies in its
-        // active buffers per task (in-heap to sweepSpillDepth, then a
-        // disk-spillable overflow — it degrades rather than OOMs); the
-        // binned join's codegen'd hash join still streams extreme
-        // candidate volumes faster, so estimated overlap depth
-        // (rows x meanLen / span) past the in-heap cap prefers binned
-        val depthBar = conf
-          .getConfString("spark.graft.join.sweepMaxDepth", "262144").toDouble
-        val estRows = (l.stats.sizeInBytes + r.stats.sizeInBytes).toDouble / 64.0
-        val depthOk = estRows * mean / math.max(ls.span, 1L) <= depthBar
-        val sweep = mean / width > sweepFanout && depthOk
-        val megaBin: Option[Long] =
-          if (!sweep || !allowSalt) None
-          else {
-            val cores = math.max(
-              SparkSession.active.sparkContext.defaultParallelism, 1)
-            if (ls.manyBalancedKeys(cores)) None
-            else {
-              var w = 16384L
-              while (w < ls.span / (8L * cores)) w *= 2
-              while (w < 4.0 * mean) w *= 2
-              if (ls.span >= 4L * w) Some(w) else None
-            }
-          }
-        val tag = if (!sweep) "binned"
-          else megaBin.fold("sweep")(_ => "sweep-salted")
-        lastChoice.set((tag, mean, width))
-        logInfo(s"[graft.rewrite] auto interval join: meanLen=$mean " +
-          s"bin=$width span=${ls.span} keys=${ls.distinctKeys} -> $tag")
-        (sweep, width, megaBin)
+                     use: RangeJoin.Use): RangeJoin.Route = {
+    val route = strategyConf match {
+      case "sweep" => RangeJoin.Sweep(None)
+      case "binned" => RangeJoin.Binned(RangeJoin.defaultBinSize)
+      case _ if l.isStreaming || r.isStreaming => RangeJoin.Binned(RangeJoin.defaultBinSize)
+      case _ =>
+        val keyNames = keyPairs.indices.map(i => s"_graft_k$i")
+        def side(p: LogicalPlan, keys: Seq[Expression], s: Expression, e: Expression) =
+          GraftColumnBridge.ofRows(SparkSession.active, Project(
+            keys.zip(keyNames).map { case (k, n) => Alias(k, n)() } ++
+              Seq(Alias(s, Cols.Start)(), Alias(e, Cols.End)()), p))
+        val pinned = Option(conf.getConfString(RangeJoin.BinSizeKey, null)).map(_.toLong)
+        inSample.set(true)
+        try RangeJoin.choose(side(l, keyPairs.map(_._1), lStart, lEnd),
+          side(r, keyPairs.map(_._2), rStart, rEnd), keyNames, use, pinned)
+        finally inSample.set(false)
     }
-    if (decision._1) IntervalSweepJoinExec.ensureStrategy(SparkSession.active)
-    decision
+    if (route.isInstanceOf[RangeJoin.Sweep])
+      IntervalSweepJoinExec.ensureStrategy(SparkSession.active)
+    route
   }
 
   // ---- shape recognition ----
@@ -279,18 +217,17 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
           if !cond.references.exists(_.name.startsWith(BIN_PREFIX)) =>
         intervalShape(cond, l, r) match {
           case Some((conjuncts, lStart, lEnd, rStart, rEnd, keyPairs)) =>
-            val (useSweep, bin, megaBin) =
-              choose(l, r, keyPairs, lStart, lEnd, rStart, rEnd)
-            if (useSweep) {
-              Project(j.output,
-                sweepNode(l, r, cond, lStart, lEnd, rStart, rEnd, keyPairs, megaBin))
-            } else {
-              val binL = AttributeReference(BIN_PREFIX + "l", LongType, nullable = false)()
-              val binR = AttributeReference(BIN_PREFIX + "r", LongType, nullable = false)()
-              val lGen = Generate(seqExpr(lStart, lEnd, bin), Nil, outer = false, None, Seq(binL), l)
-              val rGen = Generate(seqExpr(rStart, rEnd, bin), Nil, outer = false, None, Seq(binR), r)
-              val newCond = binnedCond(conjuncts, binL, binR, lStart, rStart, bin)
-              Project(j.output, Join(lGen, rGen, Inner, Some(newCond), hint))
+            choose(l, r, keyPairs, lStart, lEnd, rStart, rEnd, RangeJoin.Use.Pairs) match {
+              case RangeJoin.Sweep(megaBin) =>
+                Project(j.output,
+                  sweepNode(l, r, cond, lStart, lEnd, rStart, rEnd, keyPairs, megaBin))
+              case RangeJoin.Binned(bin) =>
+                val binL = AttributeReference(BIN_PREFIX + "l", LongType, nullable = false)()
+                val binR = AttributeReference(BIN_PREFIX + "r", LongType, nullable = false)()
+                val lGen = Generate(seqExpr(lStart, lEnd, bin), Nil, outer = false, None, Seq(binL), l)
+                val rGen = Generate(seqExpr(rStart, rEnd, bin), Nil, outer = false, None, Seq(binR), r)
+                val newCond = binnedCond(conjuncts, binL, binR, lStart, rStart, bin)
+                Project(j.output, Join(lGen, rGen, Inner, Some(newCond), hint))
             }
           case None => j
         }
@@ -299,52 +236,49 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
           if !cond.references.exists(_.name.startsWith(BIN_PREFIX)) =>
         intervalShape(cond, l, r) match {
           case Some((conjuncts, lStart, lEnd, rStart, rEnd, keyPairs)) =>
-            // mega-binning never applies to semi/anti (a left row would
-            // be decided per bin copy, not per row) — unsalted sweep;
-            // allowSalt=false also keeps lastChoice from reporting a
-            // 'sweep-salted' tag this branch would then discard
-            val (useSweep, bin, _) =
-              choose(l, r, keyPairs, lStart, lEnd, rStart, rEnd, allowSalt = false)
-            if (useSweep) {
-              // the sweep supports semi/anti natively — each left row
-              // emitted at most once by row identity, no rid tagging and
-              // no second evaluation of the probe side
-              Project(j.output, IntervalSweepJoinNode(l, r,
-                keyPairs.map(_._1), keyPairs.map(_._2),
-                lStart, lEnd, rStart, rEnd, slack = 0L,
-                condition = cond, joinType = jt))
-            } else {
-              val ridAlias = Alias(MonotonicallyIncreasingID(), "_graft_rid")()
-              val lRid = Project(l.output :+ ridAlias, l)
-              val rid = ridAlias.toAttribute
-              val binL = AttributeReference(BIN_PREFIX + "l", LongType, nullable = true)()
-              val binR = AttributeReference(BIN_PREFIX + "r", LongType, nullable = false)()
-              // outer=true: a left row with NULL Start/End explodes into a
-              // single null-bin copy instead of vanishing — it can never
-              // equi-match (NULL bin), so semi correctly drops it and anti
-              // correctly EMITS it (SQL three-valued logic: such rows
-              // match nothing). outer=false here silently swallowed
-              // null-bound rows from the anti output while the sweep
-              // strategy kept them — the auto dispatch diverged.
-              val lGen = Generate(seqExpr(lStart, lEnd, bin), Nil, outer = true, None, Seq(binL), lRid)
-              val rGen = Generate(seqExpr(rStart, rEnd, bin), Nil, outer = false, None, Seq(binR), r)
-              val newCond = binnedCond(conjuncts, binL, binR, lStart, rStart, bin)
-              if (jt == LeftSemi) {
-                // each matching (leftRow, rightRow) pair survives the dedup
-                // predicate exactly once; collapsing on the rid yields each
-                // matched left row exactly once, duplicates preserved
-                val pairs = Join(lGen, rGen, Inner, Some(newCond), JoinHint.NONE)
-                Project(j.output, Aggregate(rid +: l.output, l.output, pairs))
-              } else {
-                // anti: keep every left bin-copy (LeftOuter), flag per-copy
-                // matches, collapse per rid, keep rows where no copy matched
-                val outerJ = Join(lGen, rGen, LeftOuter, Some(newCond), JoinHint.NONE)
-                val flag = Alias(AggregateExpression(
-                  Max(IsNotNull(binR)), Complete, isDistinct = false), "_graft_matched")()
-                val agg = Aggregate(rid +: l.output, l.output :+ flag, outerJ)
-                val matched = flag.toAttribute
-                Project(j.output, Filter(Not(matched), agg))
-              }
+            // Use.Exists never salts: a left row would be decided per
+            // mega-bin copy, not per row
+            choose(l, r, keyPairs, lStart, lEnd, rStart, rEnd, RangeJoin.Use.Exists) match {
+              case RangeJoin.Sweep(_) =>
+                // the sweep supports semi/anti natively — each left row
+                // emitted at most once by row identity, no rid tagging and
+                // no second evaluation of the probe side
+                Project(j.output, IntervalSweepJoinNode(l, r,
+                  keyPairs.map(_._1), keyPairs.map(_._2),
+                  lStart, lEnd, rStart, rEnd, slack = 0L,
+                  condition = cond, joinType = jt))
+              case RangeJoin.Binned(bin) =>
+                val ridAlias = Alias(MonotonicallyIncreasingID(), "_graft_rid")()
+                val lRid = Project(l.output :+ ridAlias, l)
+                val rid = ridAlias.toAttribute
+                val binL = AttributeReference(BIN_PREFIX + "l", LongType, nullable = true)()
+                val binR = AttributeReference(BIN_PREFIX + "r", LongType, nullable = false)()
+                // outer=true: a left row with NULL Start/End explodes into a
+                // single null-bin copy instead of vanishing — it can never
+                // equi-match (NULL bin), so semi correctly drops it and anti
+                // correctly EMITS it (SQL three-valued logic: such rows
+                // match nothing). outer=false here silently swallowed
+                // null-bound rows from the anti output while the sweep
+                // strategy kept them — the auto dispatch diverged.
+                val lGen = Generate(seqExpr(lStart, lEnd, bin), Nil, outer = true, None, Seq(binL), lRid)
+                val rGen = Generate(seqExpr(rStart, rEnd, bin), Nil, outer = false, None, Seq(binR), r)
+                val newCond = binnedCond(conjuncts, binL, binR, lStart, rStart, bin)
+                if (jt == LeftSemi) {
+                  // each matching (leftRow, rightRow) pair survives the dedup
+                  // predicate exactly once; collapsing on the rid yields each
+                  // matched left row exactly once, duplicates preserved
+                  val pairs = Join(lGen, rGen, Inner, Some(newCond), JoinHint.NONE)
+                  Project(j.output, Aggregate(rid +: l.output, l.output, pairs))
+                } else {
+                  // anti: keep every left bin-copy (LeftOuter), flag per-copy
+                  // matches, collapse per rid, keep rows where no copy matched
+                  val outerJ = Join(lGen, rGen, LeftOuter, Some(newCond), JoinHint.NONE)
+                  val flag = Alias(AggregateExpression(
+                    Max(IsNotNull(binR)), Complete, isDistinct = false), "_graft_matched")()
+                  val agg = Aggregate(rid +: l.output, l.output :+ flag, outerJ)
+                  val matched = flag.toAttribute
+                  Project(j.output, Filter(Not(matched), agg))
+                }
             }
           case None => j
         }

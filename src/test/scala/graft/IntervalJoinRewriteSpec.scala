@@ -122,7 +122,7 @@ class IntervalJoinRewriteSpec extends AnyFunSuite {
     assert(pairSet(bShort) == pairSet(RangeJoin.defaultBinSize))
   }
 
-  test("spark.graft.binSize conf retunes the rewrite's bin width") {
+  test("spark.graft.join.binSize conf retunes the rewrite's bin width") {
     val l = mkDF(100, 2000, 50, 2654435761L)
     val r = mkDF(80, 2000, 30, 40503L).toDF(Chrom + "2", "s2", "e2", "id2")
     def joined = l.join(r,
@@ -130,13 +130,13 @@ class IntervalJoinRewriteSpec extends AnyFunSuite {
     val naive = joined.collect().map(_.toSeq.toList).toSet
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ IntervalJoinRewrite
-    spark.conf.set("spark.graft.binSize", "1024")
+    spark.conf.set(graft.join.RangeJoin.BinSizeKey, "1024")
     try {
       val plan = joined.queryExecution.optimizedPlan.toString
       assert(plan.contains("1024"), s"conf bin width not used:\n$plan")
       assert(joined.collect().map(_.toSeq.toList).toSet == naive)
     } finally {
-      spark.conf.unset("spark.graft.binSize")
+      spark.conf.unset(graft.join.RangeJoin.BinSizeKey)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == IntervalJoinRewrite)
     }
@@ -320,16 +320,16 @@ class IntervalJoinRewriteSpec extends AnyFunSuite {
       val execLong = joinedLong.queryExecution.executedPlan.toString
       assert(execLong.contains("IntervalSweepJoin"),
         s"auto did not pick sweep for long intervals:\n$execLong")
-      val (choice, meanLen, _) = IntervalJoinRewrite.lastChoice.get()
+      val (choice, meanLen, _) = graft.join.RangeJoin.lastAutoPairs.get()
       assert(choice.startsWith("sweep") && meanLen > 500000,
-        s"lastChoice=$choice meanLen=$meanLen")
+        s"lastAutoPairs=$choice meanLen=$meanLen")
       assert(joinedLong.collect().map(_.toSeq.toList).toSet == naiveLong)
       assert(naiveLong.nonEmpty)
 
       val planShort = joinedShort.queryExecution.optimizedPlan.toString
       assert(planShort.contains("_graft_bin_"),
         s"auto did not pick binned for short intervals:\n$planShort")
-      assert(IntervalJoinRewrite.lastChoice.get()._1 == "binned")
+      assert(graft.join.RangeJoin.lastAutoPairs.get()._1 == "binned")
     } finally {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == IntervalJoinRewrite)
@@ -355,12 +355,72 @@ class IntervalJoinRewriteSpec extends AnyFunSuite {
       val exec = joined.queryExecution.executedPlan.toString
       assert(exec.contains("IntervalSweepJoin"), s"no sweep in:\n$exec")
       assert(exec.contains("_graft_bin_mbl"), s"sweep not salted in:\n$exec")
-      assert(IntervalJoinRewrite.lastChoice.get()._1 == "sweep-salted")
+      assert(graft.join.RangeJoin.lastAutoPairs.get()._1 == "sweep-salted")
       assert(joined.collect().map(_.toSeq.toList).toSet == naive)
       assert(naive.nonEmpty)
     } finally {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == IntervalJoinRewrite)
+    }
+  }
+
+  test("the rule and the ops dispatchers make the same interval-join decision") {
+    import graft.join.RangeJoin
+    import spark.implicits._
+    type DF = org.apache.spark.sql.DataFrame
+    def mk(n: Int, seed: Long, keys: Int, span: Long, minLen: Long, lenRange: Long, id: String) =
+      (0 until n).map { i =>
+        val s = (i * seed) % span
+        ("c" + (i % keys), s, s + minLen + (i * 31L) % lenRange, i.toLong)
+      }.toDF(Chrom, Start, End, id)
+    def sides(keys: Int, span: Long, minLen: Long, lenRange: Long) =
+      (mk(300, 2654435761L, keys, span, minLen, lenRange, "id"),
+        mk(200, 40503L, keys, span, minLen, lenRange, "rid"))
+    // (shape, frames, expected inner tag, expected semi/anti tag)
+    val shapes = Seq(
+      ("short intervals", sides(3, 5000L, 1L, 100L), "binned", "binned-exists"),
+      ("long intervals on 3 keys", sides(3, 100000000L, 500000L, 1000000L),
+        "sweep.*", "sweep-exists"),
+      // the salt bin widens to 2,097,152 over a ~1.9M span: too few bins
+      ("one key, narrow span", sides(1, 1500000L, 200000L, 200000L), "sweep", "sweep-exists"))
+    def withRule[T](body: => T): T = {
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ IntervalJoinRewrite
+      try body finally spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations.filterNot(_ == IntervalJoinRewrite)
+    }
+    def decision = {
+      val (tag, _, bin) = RangeJoin.lastAutoPairs.get()
+      (tag, bin)
+    }
+    def pairIds(df: DF) = df.select("id", "rid").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    def leftIds(df: DF) = df.select("id").collect().map(_.getLong(0)).toSeq.sorted
+
+    for ((shape, (l, r), innerTag, existsTag) <- shapes) {
+      val r2 = r.toDF(Chrom + "2", "s2", "e2", "rid")
+      def joined(jt: String) = l.join(r2,
+        l(Chrom) === r2(Chrom + "2") && l(Start) < r2("e2") && r2("s2") < l(End), jt)
+
+      val naive = pairIds(joined("inner"))
+      assert(naive.nonEmpty, shape)
+      val (ruleRows, ruleChoice) = withRule((pairIds(joined("inner")), decision))
+      val opsRows = pairIds(RangeJoin.autoPairs(l, r, Seq(Chrom)))
+      assert(ruleChoice._1.matches(innerTag), s"$shape: rule chose $ruleChoice")
+      assert(decision == ruleChoice, s"$shape: ops chose $decision, rule $ruleChoice")
+      assert(ruleRows == naive, s"$shape: rule rows")
+      assert(opsRows == naive, s"$shape: ops rows")
+
+      spark.conf.set("spark.graft.join.autoThreshold", "1")
+      try for (anti <- Seq(false, true)) {
+        val jt = if (anti) "left_anti" else "left_semi"
+        val naiveIds = leftIds(joined(jt))
+        val (ruleIds, ruleExists) = withRule((leftIds(joined(jt)), decision))
+        val opsIds = leftIds(RangeJoin.existsDispatch(l, r, Seq(Chrom), anti = anti))
+        assert(ruleExists._1 == existsTag, s"$shape $jt: rule chose $ruleExists")
+        assert(decision == ruleExists, s"$shape $jt: ops chose $decision, rule $ruleExists")
+        assert(ruleIds == naiveIds && opsIds == naiveIds, s"$shape $jt rows")
+      } finally spark.conf.unset("spark.graft.join.autoThreshold")
     }
   }
 
