@@ -289,13 +289,8 @@ object SparkEntry {
     "q51_split_between" -> ((s, dir) =>
       out(UnaryOps.split(grSparse(s, dir), Seq(Chrom), between = true))),
     "q52_join_first" -> ((s, dir) =>
-      // packedPick: gr2 starts are unique per chromosome, so the packed
-      // u32 (Start_b<<32|End_b) ordering is exactly the oracle's
-      // (istart_b, iend_b) row_number order — and the pick runs as a
-      // HashAggregate over two longs instead of a SortAggregate over
-      // full-row payloads (see BinaryOps.pickOnePacked)
       out(BinaryOps.joinOverlaps(gr(s, dir), gr2(s, dir), Seq(Chrom),
-          multiple = "first", packedPick = true)
+          multiple = "first")
         .withColumnRenamed(Start + "_b", "istart_b")
         .withColumnRenamed(End + "_b", "iend_b")
         .drop("Strand_b"))),

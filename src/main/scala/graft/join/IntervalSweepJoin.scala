@@ -38,7 +38,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * every (key, bin) sweeps in parallel, and the greatest-start-bin
   * dedup predicate keeps each pair exactly once — the same two
   * exchanges, parallelism span/megaBin per key instead of 1.
-  * Mega-binning applies to the pair join AND (with a per-row-id rollup
+  * Mega-binning applies to the pair join AND (with a per-left-row rollup
   * of the per-bin-copy partials — a ~|L|-row aggregation, never the
   * pair set) to pick/count; semi/anti stay per-key (a left row would
   * be decided per bin copy, not per row, and has no rollup identity).
@@ -49,7 +49,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * keys match nothing), identical to RangeJoin.pairs.
   */
 object IntervalSweepJoin {
-  import Cols.{End, RowId, Start}
+  import Cols.{End, Start}
 
   private val MbCol = "_gx_mb"
 
@@ -108,7 +108,7 @@ object IntervalSweepJoin {
       ++ overlap ++ dedup).reduce[Expression](And)
     // pick tie-break: the non-coordinate right columns ascending, in
     // schema order — the same ordering tail the aggregation path's
-    // min_by struct uses (BinaryOps.pickOne)
+    // min_by struct uses (RangeJoin.pickRollup)
     val ties: Seq[Expression] =
       if (withTies)
         rPlan.output.filterNot(a =>
@@ -137,14 +137,12 @@ object IntervalSweepJoin {
     * (first) / largest (last) (rightStart, rightEnd), ties broken
     * ascending on the remaining right columns — the pair set is never
     * materialized. Salted (megaBin): each (key, bin) sweep emits its
-    * local winner per left bin copy, then one ~|L|-row min_by rollup on
-    * `rowIdCol` (which the left side must carry uniquely) picks the
-    * global winner; unmatched copies emit nothing. */
+    * local winner per left bin copy, then [[RangeJoin.pickRollup]] picks
+    * the global winner per left row over <= fan-out rows each;
+    * unmatched copies emit nothing. */
   def pick(left: DataFrame, right: DataFrame, keys0: Seq[String],
            last: Boolean, slack: Long = 0, suffix: String = "_b",
-           megaBin: Option[Long] = None,
-           rowIdCol: String = RowId): DataFrame = {
-    import org.apache.spark.sql.functions.{col, min_by, struct}
+           megaBin: Option[Long] = None): DataFrame = {
     val (l1, r1, keys) = salted(left, right, keys0, slack, megaBin)
     val r0 = RangeJoin.suffixRight(l1, r1, suffix)
     val rKeys = keys.map(_ + suffix)
@@ -153,50 +151,22 @@ object IntervalSweepJoin {
       withTies = true)
     val spark = left.sparkSession
     IntervalSweepJoinExec.ensureStrategy(spark)
-    val raw0 = GraftColumnBridge.ofRows(spark, node).drop(rKeys: _*)
-    val raw = if (megaBin.isDefined) raw0.drop(MbCol) else raw0
-    megaBin match {
-      case None => raw
-      case Some(_) =>
-        // global winner across the per-(key, bin) local winners: the
-        // same (coords, right-columns) ordering, over <= fan-out rows
-        // per left row instead of the pair set
-        require(raw.columns.contains(rowIdCol),
-          s"salted sweep pick needs a unique '$rowIdCol' on the left side")
-        val rs = Start + suffix
-        val re = End + suffix
-        val sortKeys = Seq(rs, re)
-        val rCols = raw.columns.filterNot(left.columns.contains).toSeq
-        val lCols = raw.columns.filter(left.columns.contains).filterNot(_ == rowIdCol).toSeq
-        val ord = struct((sortKeys ++ rCols.filterNot(sortKeys.contains)).map { c =>
-          if (!last) col(c) else (if (c == re || c == rs) (-col(c)).as(c) else col(c))
-        }: _*)
-        val payload = struct((rCols ++ lCols).map(col): _*)
-        // the global reduce keys on the FULL left row (round-18, the
-        // duplicate-row_id find): two distinct left rows sharing a
-        // row_id each keep their own winner — the unsalted sweep
-        // decides per physical row, and the binned pickOne fix
-        // mirrors this; group keys are null-safe, no rejoin either way
-        val m = raw.groupBy((Seq(rowIdCol) ++ lCols).map(col): _*)
-          .agg(min_by(payload, ord).as("_m"))
-        val unpacked = (rCols ++ lCols).foldLeft(m)((d, c) =>
-          d.withColumn(c, col(s"_m.$c"))).drop("_m")
-        unpacked.select(raw.columns.map(col): _*)
-    }
+    val raw = GraftColumnBridge.ofRows(spark, node).drop(rKeys: _*)
+    if (megaBin.isEmpty) raw
+    else RangeJoin.pickRollup(left, raw.drop(MbCol), suffix, last)
   }
 
   /** Per-left-row overlap count through the operator's native count
     * mode: EVERY left row (unmatched, null-key and null-bound rows
     * count 0), so unsalted callers need no rejoin. Salted (megaBin):
     * per-bin-copy partial counts (each pair counted in exactly one copy
-    * by the dedup predicate) are summed per `rowIdCol` and left-joined
-    * back to the original left — null-bound rows produce no bin copies,
-    * the rejoin restores them at 0. */
+    * by the dedup predicate) go through [[RangeJoin.countRollup]] —
+    * null-bound rows produce no bin copies, the rejoin restores them
+    * at 0. */
   def count(left: DataFrame, right: DataFrame, keys0: Seq[String],
             slack: Long = 0, countCol: String = "NumberOverlaps",
-            megaBin: Option[Long] = None,
-            rowIdCol: String = RowId): DataFrame = {
-    import org.apache.spark.sql.functions.{col, sum}
+            megaBin: Option[Long] = None): DataFrame = {
+    import org.apache.spark.sql.functions.col
     val suffix = "_b"
     val rMin = right.select((keys0 :+ Start :+ End).map(col): _*)
     val (l1, r1, keys) = salted(left, rMin, keys0, slack, megaBin)
@@ -208,25 +178,7 @@ object IntervalSweepJoin {
     val spark = left.sparkSession
     IntervalSweepJoinExec.ensureStrategy(spark)
     val raw = GraftColumnBridge.ofRows(spark, node)
-    megaBin match {
-      case None => raw
-      case Some(_) =>
-        // per-bin partials reduce by the FULL left row, not rowIdCol
-        // alone (round-18, the duplicate-row_id find): two distinct
-        // left rows sharing a row_id must keep separate counts — the
-        // unsalted branch counts per physical row, and the binned
-        // dispatch fix mirrors this. The bin copies carry every left
-        // column unchanged, so the group key is exactly the left row;
-        // groupBy is null-safe, the rejoin's equality is not (the
-        // coordinate/key columns are non-null by the library contract).
-        require(left.columns.contains(rowIdCol),
-          s"salted sweep count needs '$rowIdCol' on the left side")
-        val lcols = left.columns.toSeq
-        val partials = raw.groupBy(lcols.map(col): _*)
-          .agg(sum(col(countCol)).as(countCol))
-        left.join(partials, lcols, "left")
-          .na.fill(0L, Seq(countCol))
-    }
+    if (megaBin.isEmpty) raw else RangeJoin.countRollup(left, raw, countCol)
   }
 
   /** Existence-only sweep: left_semi / left_anti through the operator's

@@ -92,19 +92,28 @@ object RangeJoin {
     * whether the sweep folds matches instead of emitting pairs
     * (pick/count). */
   sealed abstract class Use(val gate: String, val tagSuffix: String,
-                            val salts: Boolean = true, val folds: Boolean = false)
+                            val salts: Boolean = true, val folds: Boolean = false,
+                            val gateBytes: Option[Long] = None)
   object Use {
     case object Pairs extends Use("rangejoin/auto", "")
     case object Exists extends Use("rangejoin/existsAuto", "-exists", salts = false)
     case object Outer extends Use("rangejoin/outerAuto", "-outer", salts = false)
-    case object Pick extends Use("rangejoin/pickAuto", "-rangejoin/pickAuto", folds = true)
+    // the pick's own 4 MB size gate: the round-8 A/B on q52's natural
+    // sf0.1 shape (17 MB leaves, 10.2M pairs, 3 hot keys — BASELINE.md
+    // "q52 pick crossover") measured the sweep pick at 1.0-1.4 s steady
+    // / 2.0 s cold vs the binned pick's 1.4-1.7 s / 5.4 s, with identical
+    // output hashes — pair materialization dominates well below the
+    // shared 32 MB gate
+    case object Pick extends Use("rangejoin/pickAuto", "-rangejoin/pickAuto", folds = true,
+      gateBytes = Some(4L << 20))
     case object Count extends Use("rangejoin/countAuto", "-rangejoin/countAuto", folds = true)
   }
 
   /** Last chooser decision: (tag, mean len, bin width) — test/debug
     * observability (the Sizing.lastDecision contract). Tags: `binned`,
     * `sweep` or `sweep-salted`, then the use's suffix; a pick/count
-    * that stays binned records nothing (its pair join records). */
+    * that stays binned records nothing itself (a count's pair join
+    * records `binned`). */
   val lastAutoPairs =
     new java.util.concurrent.atomic.AtomicReference[(String, Double, Long)]()
 
@@ -175,14 +184,13 @@ object RangeJoin {
   /** The size gate in front of [[choose]]: None — the caller's plain
     * binned plan at its own bin, with zero sampling — for containment
     * (its binned plan is already optimal: a single computed left bin, no
-    * explode; the sweep's residual is overlap-shaped) and below
-    * `threshold` leaf bytes (conf `spark.graft.join.autoThreshold`,
-    * default the measured 32 MB salt gate, which every sf0.1 bench
-    * input stays under). */
+    * explode; the sweep's residual is overlap-shaped) and below the
+    * use's own `gateBytes` of leaf bytes, else conf
+    * `spark.graft.join.autoThreshold` (default the measured 32 MB salt
+    * gate, which every sf0.1 bench input stays under). */
   private[graft] def gatedChoice(left: DataFrame, right: DataFrame, keys: Seq[String],
-                                 use: Use, contained: Boolean = false,
-                                 threshold: Option[Long] = None): Option[Route] = {
-    val bar = threshold.getOrElse(org.apache.spark.sql.internal.SQLConf.get
+                                 use: Use, contained: Boolean = false): Option[Route] = {
+    val bar = use.gateBytes.getOrElse(org.apache.spark.sql.internal.SQLConf.get
       .getConfString("spark.graft.join.autoThreshold",
         Sizing.saltedInputThreshold.toString).toLong)
     Option.when(!contained && Sizing.decide(use.gate, bar, left, right))(
@@ -256,6 +264,51 @@ object RangeJoin {
     val lcols = left.columns.toSet
     right.columns.foldLeft(right)((d, c) =>
       if (lcols.contains(c)) d.withColumnRenamed(c, c + suffix) else d)
+  }
+
+  /** join_overlaps(multiple=first/last) as a per-left-row reduce of
+    * `matches` (left columns plus suffixed right columns: the binned
+    * pairs, or a salted sweep pick's per-bin-copy winners). first =
+    * smallest (Start_b, End_b), last = LARGEST — position order of the
+    * other side (reference intersect doctest
+    * core/pyranges_main.py:5406-5415: "last" on [25,33),[28,32) picks the
+    * [28,32) row, i.e. max start, not max end); ties go ascending on the
+    * remaining right columns, the order the sweep's native pick uses.
+    * Row identity is the FULL left row (round-18, the duplicate-row_id
+    * find): group keys are null-safe and no rejoin is needed. min_by
+    * carries the right columns as an OPAQUE payload and compares only
+    * the ordering struct; min(struct(...)) re-compares every payload
+    * field on ties, which measurably drags on multi-million-pair sets. */
+  private[graft] def pickRollup(left: DataFrame, matches: DataFrame, suffix: String,
+                                last: Boolean): DataFrame = {
+    val sortKeys = Seq(Start + suffix, End + suffix)
+    val lCols = left.columns.toSeq
+    val rCols = matches.columns.filterNot(lCols.contains).toSeq
+    val ord = struct((sortKeys ++ rCols.filterNot(sortKeys.contains)).map { c =>
+      if (last && sortKeys.contains(c)) (-col(c)).as(c) else col(c)
+    }: _*)
+    matches.groupBy(lCols.map(col): _*)
+      .agg(min_by(struct(rCols.map(col): _*), ord).as("_m"))
+      .select(matches.columns.map(c =>
+        if (rCols.contains(c)) col(s"_m.$c").as(c) else col(c)): _*)
+  }
+
+  /** count_overlaps as a per-left-row reduce: sums `partials`' `countCol`
+    * (1 per binned pair, or a salted sweep's per-bin-copy counts) per
+    * FULL left row — two distinct rows sharing a row_id keep separate
+    * counts (round-18, the duplicate-row_id find) — and rejoins `left`,
+    * rows without partials at 0. The rejoin is null-safe (`<=>` on every
+    * left column), so a NULL payload keeps its count. */
+  private[graft] def countRollup(left: DataFrame, partials: DataFrame,
+                                 countCol: String): DataFrame = {
+    val lCols = left.columns.toSeq
+    val ks = lCols.indices.map(i => s"_gx_k$i")
+    val sums = partials.groupBy(lCols.map(col): _*)
+      .agg(sum(col(countCol)).as(countCol))
+      .toDF(ks :+ countCol: _*)
+    val on = lCols.zip(ks).map { case (c, k) => col(c) <=> col(k) }.reduce(_ && _)
+    left.join(sums, on, "left").drop(ks: _*)
+      .na.fill(0L, Seq(countCol))
   }
 
   /** Inner pair join: left columns + suffixed right columns, one output

@@ -37,14 +37,14 @@ object BinaryOps {
   /** join_overlaps (reference core/pyranges_main.py:1147-1401): relational
     * join on interval overlap, right columns suffixed; joinType in
     * {inner, left, right, outer}; multiple in {all, first, last} picks one
-    * right match per left row (first = smallest Start_b, last = largest
-    * End_b); reportOverlapCol adds the overlap length. */
+    * right match per left row (first = smallest (Start_b, End_b), last =
+    * largest); reportOverlapCol adds the overlap length. */
   def joinOverlaps(left: DataFrame, right: DataFrame, keys: Seq[String],
                    joinType: String = "inner", multiple: String = "all",
                    slack: Long = 0, suffix: String = "_b",
                    reportOverlapCol: Option[String] = None,
-                   contained: Boolean = false, binSize: Long = graft.join.RangeJoin.defaultBinSize,
-                   packedPick: Boolean = false): DataFrame = {
+                   contained: Boolean = false,
+                   binSize: Long = graft.join.RangeJoin.defaultBinSize): DataFrame = {
     val rs = Start + suffix
     val re = End + suffix
     // outer types in the sweep regime: the operator's native outer
@@ -62,99 +62,25 @@ object BinaryOps {
     // first/last in the sweep regime: the operator's native pick mode
     // decides each left row DURING the sweep — the pair set (the whole
     // cost of a first-match join on dense data) is never materialized.
-    // The pick path uses its OWN size gate (4 MB default, conf below):
-    // the round-8 A/B on q52's natural sf0.1 shape (17 MB leaves,
-    // 10.2M pairs, 3 hot keys — BASELINE.md "q52 pick crossover")
-    // measured the sweep pick at 1.0-1.4 s steady / 2.0 s cold vs the
-    // binned packed pick's 1.4-1.7 s / 5.4 s, with identical output
-    // hashes — pair materialization dominates well below the shared
-    // 32 MB gate. Short-interval many-balanced-keys shapes still stay
-    // binned via the fan-out bar + saltPlan demotion inside the choice.
-    val sweepPick: Option[RangeJoin.Route] =
-      if (multiple == "first" || multiple == "last") {
-        val pickGate = org.apache.spark.sql.internal.SQLConf.get
-          .getConfString("spark.graft.join.pickAutoThreshold",
-            (4L << 20).toString).toLong
-        RangeJoin.gatedChoice(left, right, keys, RangeJoin.Use.Pick,
-          contained, threshold = Some(pickGate))
-      } else None
-    var p = sweepPick match {
-      case Some(RangeJoin.Sweep(mb)) =>
-        graft.join.IntervalSweepJoin.pick(left, right, keys,
-          last = multiple == "last", slack = slack, suffix = suffix, megaBin = mb)
-      case _ =>
-        RangeJoin.pairsDispatch(left, right, keys, slack, binSize, suffix, contained)
+    // Otherwise the pairs reduce per left row (RangeJoin.pickRollup):
+    // at the chooser's bin when the pick gate opened but the choice
+    // stayed binned, at the caller's bin below the gate.
+    val matched = if (multiple != "first" && multiple != "last")
+      RangeJoin.pairsDispatch(left, right, keys, slack, binSize, suffix, contained)
+    else {
+      val last = multiple == "last"
+      RangeJoin.gatedChoice(left, right, keys, RangeJoin.Use.Pick, contained) match {
+        case Some(RangeJoin.Sweep(mb)) =>
+          graft.join.IntervalSweepJoin.pick(left, right, keys,
+            last = last, slack = slack, suffix = suffix, megaBin = mb)
+        case Some(RangeJoin.Binned(bin)) => RangeJoin.pickRollup(left,
+          RangeJoin.pairs(left, right, keys, slack, bin, suffix), suffix, last)
+        case None => RangeJoin.pickRollup(left,
+          RangeJoin.pairsDispatch(left, right, keys, slack, binSize, suffix, contained),
+          suffix, last)
+      }
     }
-    // multiple=first/last pick one right match per left row. A window
-    // over the full pair set would sort every pair; a min/max(struct)
-    // aggregation gets map-side partial combine — the pair set shrinks to
-    // one row per left row BEFORE the shuffle — then rejoins the (never
-    // exploded) left side.
-    // first = smallest (Start_b, End_b); last = LARGEST (Start_b, End_b)
-    // — position order of the other side (reference intersect doctest
-    // core/pyranges_main.py:5406-5415: "last" on [25,33),[28,32) picks
-    // the [28,32) row, i.e. max start, not max end).
-    def pickOne(minimize: Boolean): DataFrame = {
-      val rCols = p.columns.filterNot(left.columns.contains).toSeq
-      val sortKeys = Seq(rs, re)
-      // min_by carries the full row as an OPAQUE payload and compares
-      // only the (deterministic) ordering struct — sort keys first, then
-      // the remaining right columns as tie-breaks. min(struct(...)) here
-      // instead re-compares every payload field on ties, which measurably
-      // drags on multi-million-pair sets. Left columns ride in the
-      // payload (functionally determined by row_id), so no rejoin.
-      val lCols = left.columns.filterNot(_ == RowId).toSeq
-      val ord = struct((sortKeys ++ rCols.filterNot(sortKeys.contains)).map { c =>
-        if (minimize) col(c) else (if (c == re || c == rs) (-col(c)).as(c) else col(c))
-      }: _*)
-      val payload = struct((rCols ++ lCols).map(col): _*)
-      // group by the FULL left row, not row_id alone (round-18, the
-      // countOverlaps duplicate-row_id find): two distinct left rows
-      // sharing a row_id must each pick their own match — the group
-      // keys are null-safe and the payload already carries every
-      // column, so no rejoin is needed either way
-      val m = p.groupBy((Seq(RowId) ++ lCols).map(col): _*)
-        .agg(min_by(payload, ord).as("_m"))
-      val unpacked = (rCols ++ lCols).foldLeft(m)((d, c) =>
-        d.withColumn(c, col(s"_m.$c"))).drop("_m")
-      unpacked.select(p.columns.map(col): _*)
-    }
-    // Packed alternative to pickOne: fold the (Start_b, End_b) ordering
-    // into ONE long — (Start_b << 32) | End_b is the exact lexicographic
-    // order for u32 interval coordinates with Start_b < 2^31 (any
-    // genomic assembly; bigWig pins the same invariant) — so the
-    // per-left-row pick becomes min_by(row_id_b, packedLong): a
-    // fixed-width two-long buffer that HASH-aggregates with map-side
-    // partial combine (the pair set shrinks to one row per left row
-    // BEFORE the shuffle; min_by over the full-row struct payload falls
-    // back to SortAggregate and map-side-sorts every pair). The winner
-    // row is recovered by re-joining the (never exploded) inputs on
-    // their unique row ids. Exact when (Start_b, End_b) is unique per
-    // (keys) on the right side — deeper ties are broken by whichever
-    // row_id the combine saw, vs pickOne's full-column tie-break — so
-    // callers opt in where that holds (q52: right starts are unique).
-    // ALSO requires row_id unique on the LEFT (round-18: the rejoin
-    // would attach one shared winner to every row of a duplicated id,
-    // where pickOne/the sweep pick decide each physical row); q52's
-    // data satisfies it at every SF the pick gate routes here.
-    def pickOnePacked(minimize: Boolean): DataFrame = {
-      val rId = RowId + suffix
-      val pack0 = shiftleft(col(rs), 32) + col(re)
-      val ord = if (minimize) pack0 else -pack0
-      val winners = p.select(col(RowId), col(rId), ord.as("_ord"))
-        .groupBy(col(RowId)).agg(min_by(col(rId), col("_ord")).as(rId))
-      val r0 = RangeJoin.suffixRight(left, right, suffix)
-      winners.join(left, Seq(RowId)).join(r0, Seq(rId))
-        .select(p.columns.map(col): _*)
-    }
-    if (sweepPick.isEmpty) multiple match {
-      case "first" => p = if (packedPick) pickOnePacked(minimize = true)
-                          else pickOne(minimize = true)
-      case "last"  => p = if (packedPick) pickOnePacked(minimize = false)
-                          else pickOne(minimize = false)
-      case _       => ()
-    }
-    p = reportOverlapCol.fold(p)(c => p.withColumn(c,
+    val p = reportOverlapCol.fold(matched)(c => matched.withColumn(c,
       least(col(End), col(re)) - greatest(col(Start), col(rs))))
     def nullRight(d: DataFrame): DataFrame =
       p.columns.filterNot(d.columns.contains).foldLeft(d)((acc, c) =>
@@ -207,23 +133,9 @@ object BinaryOps {
       case Some(RangeJoin.Sweep(mb)) =>
         graft.join.IntervalSweepJoin.count(left, right, keys, slack, countCol, mb)
       case _ =>
-        val p = RangeJoin.pairsDispatch(left, right, keys, slack, binSize)
-        // row identity = the FULL left row, not row_id alone (round-18
-        // correctness find): the sf0.001 lineitem data carries one
-        // genuine duplicate (orderkey, linenumber, partkey, suppkey)
-        // key, so two distinct left rows can share a row_id — the
-        // oracle contract (GROUP BY every left column) and the sweep
-        // branch (a counter per physical row) both count such rows
-        // separately, while grouping by row_id alone summed both rows'
-        // counts into both (q16/q35 mismatched at sf0.001; row_id is
-        // unique at sf0.01/sf0.1, where this is a pure refinement).
-        // groupBy is null-safe; the rejoin's equality is not, but the
-        // coordinate/key columns are non-null by the library contract.
-        val lcols = left.columns.toSeq
-        val counts = p.groupBy(lcols.map(col): _*)
-          .agg(count(lit(1)).as(countCol))
-        left.join(counts, lcols, "left")
-          .na.fill(0L, Seq(countCol))
+        RangeJoin.countRollup(left,
+          RangeJoin.pairsDispatch(left, right, keys, slack, binSize)
+            .withColumn(countCol, lit(1L)), countCol)
     }
 
   /** Multi-set count_overlaps (reference core/multioverlap.py:11-143):

@@ -245,8 +245,12 @@ class OpsSpec extends AnyFunSuite {
     val r = Seq(("c", 5L, 8L), ("c", 25L, 30L), ("c", 26L, 31L), ("c", 55L, 56L))
       .toDF(Chrom, Start, End)
       .withColumn(RowId, monotonically_increasing_id())
-    for (force <- Seq("plain", "salted")) {
+    // both gate states, plus salted with sweepMaxDepth=0: the gate opens
+    // but the depth guard keeps the choice binned, so the pick must
+    // still roll up the pairs
+    for ((force, depth) <- Seq(("plain", None), ("salted", None), ("salted", Some("0")))) {
       spark.conf.set(graft.core.Sizing.ForceKey, force)
+      depth.foreach(spark.conf.set("spark.graft.join.sweepMaxDepth", _))
       try {
         val n = BinaryOps.countOverlaps(l, r, Seq(Chrom), countCol = "n")
           .select(Start, "n").collect()
@@ -256,9 +260,43 @@ class OpsSpec extends AnyFunSuite {
         val first = BinaryOps.joinOverlaps(l, r, Seq(Chrom),
             multiple = "first")
           .select(col(Start), col(Start + "_b")).collect()
-          .map(x => (x.getLong(0), x.getLong(1))).toMap
-        assert(first == Map(0L -> 5L, 20L -> 25L, 50L -> 55L),
-          s"join_first per-row pick wrong under force=$force: $first")
+          .map(x => (x.getLong(0), x.getLong(1))).toSeq.sorted
+        assert(first == Seq(0L -> 5L, 20L -> 25L, 50L -> 55L),
+          s"join_first per-row pick wrong under force=$force depth=$depth: $first")
+      } finally {
+        spark.conf.unset(graft.core.Sizing.ForceKey)
+        spark.conf.unset("spark.graft.join.sweepMaxDepth")
+      }
+    }
+  }
+
+  test("NULL payloads and a left side without row_id keep their counts " +
+    "and picks, under forced plain and salted gates") {
+    import spark.implicits._
+    // the NULL-Name row overlaps two right rows: a null-unsafe rejoin
+    // on the left columns would drop its count to 0
+    val l = Seq(("c", 0L, 10L, Some("a")), ("c", 20L, 40L, None),
+      ("c", 50L, 60L, Some("z")), ("c", 70L, 80L, None))
+      .toDF(Chrom, Start, End, "Name")
+    val r = Seq(("c", 5L, 8L), ("c", 25L, 30L), ("c", 26L, 31L), ("c", 55L, 56L))
+      .toDF(Chrom, Start, End)
+    for (left <- Seq(l, l.withColumn(RowId, monotonically_increasing_id()));
+         force <- Seq("plain", "salted")) {
+      spark.conf.set(graft.core.Sizing.ForceKey, force)
+      val ctx = s"force=$force row_id=${left.columns.contains(RowId)}"
+      try {
+        val n = BinaryOps.countOverlaps(left, r, Seq(Chrom), countCol = "n")
+          .select(Start, "n").collect()
+          .map(x => (x.getLong(0), x.getLong(1))).toSeq.sorted
+        assert(n == Seq(0L -> 1L, 20L -> 2L, 50L -> 1L, 70L -> 0L), s"count $ctx: $n")
+        for ((m, want) <- Seq("first" -> Seq(0L -> 5L, 20L -> 25L, 50L -> 55L),
+                              "last" -> Seq(0L -> 5L, 20L -> 26L, 50L -> 55L))) {
+          val got = BinaryOps.joinOverlaps(left, r, Seq(Chrom), multiple = m)
+            .select(col(Start), col(Start + "_b"), col("Name")).collect()
+            .map(x => (x.getLong(0), x.getLong(1), Option(x.getString(2)))).toSeq.sorted
+          assert(got.map(x => (x._1, x._2)) == want &&
+            got.map(_._3) == Seq(Some("a"), None, Some("z")), s"$m $ctx: $got")
+        }
       } finally spark.conf.unset(graft.core.Sizing.ForceKey)
     }
   }
@@ -379,26 +417,6 @@ class OpsSpec extends AnyFunSuite {
     val r = gf(("c", 50, 60), ("c", 10, 20), ("c", 70, 80))
     val j = BinaryOps.joinOverlaps(l, r, Seq(Chrom), multiple = "first")
     assert(j.count() == 1 && j.select(Start + "_b").collect().head.getLong(0) == 10L)
-  }
-
-  test("packedPick equals the min_by pick for first AND last (unique right starts)") {
-    // gr2-shaped right side: unique starts per key, so both strategies
-    // must agree row-for-row; exercises multiple left rows, multiple
-    // keys, and rows with a single match
-    val l = gf(("c", 0, 100), ("c", 55, 75), ("d", 5, 9), ("c", 200, 300))
-    val r = gf(("c", 50, 60), ("c", 10, 20), ("c", 70, 80), ("d", 0, 7),
-      ("c", 250, 260))
-    def canon(df: DataFrame): Set[(String, Long, Long, Long, Long)] =
-      df.select(Chrom, Start, End, Start + "_b", End + "_b").collect()
-        .map(x => (x.getString(0), x.getLong(1), x.getLong(2),
-          x.getLong(3), x.getLong(4))).toSet
-    for (m <- Seq("first", "last")) {
-      val plain = BinaryOps.joinOverlaps(l, r, Seq(Chrom), multiple = m)
-      val packed = BinaryOps.joinOverlaps(l, r, Seq(Chrom), multiple = m,
-        packedPick = true)
-      assert(packed.columns.toSeq == plain.columns.toSeq)
-      assert(canon(packed) == canon(plain), s"multiple=$m diverged")
-    }
   }
 
   // RangeJoin binning: pairs must be unique even when intervals span
