@@ -173,22 +173,9 @@ object SweepBench {
         // joinOverlaps(multiple=first/last) / countOverlaps through the
         // sweep in its regime
         import graft.join.{IntervalSweepJoin, RangeJoin}
-        def binnedPick: DataFrame = {
-          val p = RangeJoin.pairs(l, r, Seq(Chrom), binSize = autoBin)
-          val rCols = p.columns.filterNot(l.columns.contains).toSeq
-          val sortKeys = Seq(Start + "_b", End + "_b")
-          val lCols = l.columns.filterNot(_ == RowId).toSeq
-          val ord = struct((sortKeys ++ rCols.filterNot(sortKeys.contains)).map(col): _*)
-          val payload = struct((rCols ++ lCols).map(col): _*)
-          val m = p.groupBy(col(RowId)).agg(min_by(payload, ord).as("_m"))
-          (rCols ++ lCols).foldLeft(m)((d, c) => d.withColumn(c, col(s"_m.$c")))
-            .drop("_m")
-        }
-        def binnedCount: DataFrame = {
-          val p = RangeJoin.pairs(l, r, Seq(Chrom), binSize = autoBin)
-          val counts = p.groupBy(col(RowId)).agg(count(lit(1)).as("n"))
-          l.join(counts, Seq(RowId), "left").na.fill(0L, Seq("n"))
-        }
+        def binnedPick: DataFrame = RangeJoin.pickRollup(l, RangeJoin.pairs(
+          RangeJoin.identified(l), r, Seq(Chrom), binSize = autoBin), "_b", last = false)
+        def binnedCount: DataFrame = RangeJoin.binnedCount(l, r, Seq(Chrom), 0, autoBin, "n")
         val reps = 2
         val (tPb, nPb) = time(reps)(binnedPick)
         val (tPs, nPs) = time(reps)(IntervalSweepJoin.pick(l, r, Seq(Chrom), last = false))

@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.join.RangeJoin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -121,7 +122,7 @@ final case class GenomicFrame(df: DataFrame) {
 
   def removeStrand: GenomicFrame = GenomicFrame(df.drop(Strand))
 
-  /** Attach a unique row id if absent (ingest-time; ops thread it). */
+  /** Attach a `row_id` column if absent (payload: ops number rows themselves). */
   def withRowId: GenomicFrame =
     if (df.columns.contains(RowId)) this
     else GenomicFrame(df.withColumn(RowId, monotonically_increasing_id()))
@@ -227,7 +228,7 @@ final case class GenomicFrame(df: DataFrame) {
                    contained: Boolean = false,
                    matchBy: Seq[String] = Nil): GenomicFrame = {
     val (keys, o) = prepareBinary(other, strandBehavior, matchBy)
-    GenomicFrame(BinaryOps.joinOverlaps(withRowId.df, o, keys, joinType,
+    GenomicFrame(BinaryOps.joinOverlaps(df, o, keys, joinType,
       multiple, slack, suffix, reportOverlapCol, contained))
   }
 
@@ -254,7 +255,7 @@ final case class GenomicFrame(df: DataFrame) {
                        strandBehavior: StrandBehavior = StrandBehavior.Auto,
                        matchBy: Seq[String] = Nil): GenomicFrame = {
     val (keys, o) = prepareBinary(other, strandBehavior, matchBy)
-    GenomicFrame(BinaryOps.subtract(withRowId.df, o, keys))
+    GenomicFrame(BinaryOps.subtract(df, o, keys))
   }
 
   def countOverlaps(other: GenomicFrame,
@@ -262,7 +263,7 @@ final case class GenomicFrame(df: DataFrame) {
                     slack: Long = 0, countCol: String = "NumberOverlaps",
                     matchBy: Seq[String] = Nil): GenomicFrame = {
     val (keys, o) = prepareBinary(other, strandBehavior, matchBy)
-    GenomicFrame(BinaryOps.countOverlaps(withRowId.df, o, keys, slack, countCol))
+    GenomicFrame(BinaryOps.countOverlaps(df, o, keys, slack, countCol))
   }
 
   def nearestRanges(other: GenomicFrame,
@@ -271,8 +272,10 @@ final case class GenomicFrame(df: DataFrame) {
                     excludeOverlaps: Boolean = false,
                     matchBy: Seq[String] = Nil): GenomicFrame = {
     val (keys, o) = prepareBinary(other, strandBehavior, matchBy)
-    GenomicFrame(BinaryOps.nearest(withRowId.df, o.withColumn(RowId,
-      monotonically_increasing_id()), keys, suffix, distCol, excludeOverlaps))
+    // neighbour id: the right's `row_id`, else a pinned engine id (read 3x)
+    val r = if (o.columns.contains(RowId)) o else RangeJoin.identifiedPinned(o)
+      .withColumnRenamed(RangeJoin.Rid, RowId)
+    GenomicFrame(BinaryOps.nearest(df, r, keys, suffix, distCol, excludeOverlaps))
   }
 
   def sliceRanges(sliceStart: Long, sliceEnd: Option[Long],

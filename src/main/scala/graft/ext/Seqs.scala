@@ -113,24 +113,23 @@ object Seqs {
     * (Chromosome, cstart, chunk — from io.Fasta.readChunked): intervals
     * range-join their overlapping chunks, each contributes a substring
     * piece, pieces reassemble per row by chunk order. No executor holds a
-    * whole chromosome — the scale path for huge genomes. `df` must carry
-    * the row_id contract. */
+    * whole chromosome — the scale path for huge genomes. A row without
+    * chunks gets a null sequence. */
   def getSequenceChunked(df: DataFrame, chunks: DataFrame,
                          outCol: String = "sequence"): DataFrame = {
     import graft.core.Cols._
     val ch = chunks.select(col(Chrom), col("cstart").as(Start),
       (col("cstart") + length(col("chunk")).cast("long")).as(End), col("chunk"))
-    val p = graft.join.RangeJoin.pairs(df, ch, Seq(Chrom))
+    val p = graft.join.RangeJoin.leftOuterPairs(df, ch, Seq(Chrom))
     val cs = col(Start + "_b")
     val piece = expr(
       s"substring(chunk, CAST(greatest($Start - ${Start}_b, 0) AS INT) + 1, " +
       s"CAST(least($End, ${End}_b) - greatest($Start, ${Start}_b) AS INT))")
-    val assembled = p.withColumn("_piece", piece)
-      .groupBy(col(RowId))
-      .agg(array_join(transform(
-        array_sort(collect_list(struct(cs.as("_o"), col("_piece").as("_p")))),
-        s => s.getField("_p")), "").as("_raw"))
-    val joined = df.join(assembled, Seq(RowId), "left")
+    val joined = p.groupBy(col(graft.join.RangeJoin.Rid)).agg(first(struct(df.columns.map(col): _*))
+      .as("_l"), collect_list(when(cs.isNotNull, struct(cs.as("_o"), piece.as("_p")))).as("_ps"))
+      .select(df.columns.map(c => col(s"_l.$c").as(c)) :+
+        when(size(col("_ps")) > 0, array_join(transform(array_sort(col("_ps")),
+          s => s.getField("_p")), "")).as("_raw"): _*)
     val stranded =
       if (df.columns.contains(Strand))
         when(col(Strand) === RevStrand, reverseComplement(col("_raw")))

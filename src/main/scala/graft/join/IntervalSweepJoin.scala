@@ -41,7 +41,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * Mega-binning applies to the pair join AND (with a per-left-row rollup
   * of the per-bin-copy partials — a ~|L|-row aggregation, never the
   * pair set) to pick/count; semi/anti stay per-key (a left row would
-  * be decided per bin copy, not per row, and has no rollup identity).
+  * be decided per bin copy, not per row).
   *
   * Mirrors the reference's ruranges sort-sweep kernel semantics
   * (reference methods/overlap.py:20-47): `slack` extends the LEFT side
@@ -54,11 +54,12 @@ object IntervalSweepJoin {
   private val MbCol = "_gx_mb"
 
   /** Mega-bin explode of both sides (fan-out ~1: bin >> interval), or
-    * passthrough. Returns (left', right', cluster keys). */
+    * passthrough; a null-bound left row keeps one null-bin copy.
+    * Returns (left', right', cluster keys). */
   private def salted(left: DataFrame, right: DataFrame, keys0: Seq[String],
                      slack: Long, megaBin: Option[Long])
       : (DataFrame, DataFrame, Seq[String]) = {
-    import org.apache.spark.sql.functions.{col, explode, floor, greatest, sequence}
+    import org.apache.spark.sql.functions.{col, explode, explode_outer, floor, greatest, sequence}
     megaBin match {
       case Some(b) =>
         def fdiv(c: Column) =
@@ -67,7 +68,7 @@ object IntervalSweepJoin {
           val lo = fdiv(s)
           sequence(lo, greatest(lo, fdiv(e - 1))) // clamp degenerate rows to 1 bin
         }
-        (left.withColumn(MbCol, explode(binsOf(col(Start) - slack, col(End) + slack))),
+        (left.withColumn(MbCol, explode_outer(binsOf(col(Start) - slack, col(End) + slack))),
           right.withColumn(MbCol, explode(binsOf(col(Start), col(End)))),
           keys0 :+ MbCol)
       case None => (left, right, keys0)
@@ -143,7 +144,8 @@ object IntervalSweepJoin {
   def pick(left: DataFrame, right: DataFrame, keys0: Seq[String],
            last: Boolean, slack: Long = 0, suffix: String = "_b",
            megaBin: Option[Long] = None): DataFrame = {
-    val (l1, r1, keys) = salted(left, right, keys0, slack, megaBin)
+    val (l1, r1, keys) = salted(if (megaBin.isEmpty) left else RangeJoin.identified(left),
+      right, keys0, slack, megaBin)
     val r0 = RangeJoin.suffixRight(l1, r1, suffix)
     val rKeys = keys.map(_ + suffix)
     val mode = if (last) SweepMode.Last else SweepMode.First
@@ -160,16 +162,15 @@ object IntervalSweepJoin {
     * mode: EVERY left row (unmatched, null-key and null-bound rows
     * count 0), so unsalted callers need no rejoin. Salted (megaBin):
     * per-bin-copy partial counts (each pair counted in exactly one copy
-    * by the dedup predicate) go through [[RangeJoin.countRollup]] —
-    * null-bound rows produce no bin copies, the rejoin restores them
-    * at 0. */
+    * by the dedup predicate) go through [[RangeJoin.countRollup]]. */
   def count(left: DataFrame, right: DataFrame, keys0: Seq[String],
             slack: Long = 0, countCol: String = "NumberOverlaps",
             megaBin: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
     val suffix = "_b"
     val rMin = right.select((keys0 :+ Start :+ End).map(col): _*)
-    val (l1, r1, keys) = salted(left, rMin, keys0, slack, megaBin)
+    val (l1, r1, keys) = salted(if (megaBin.isEmpty) left else RangeJoin.identified(left),
+      rMin, keys0, slack, megaBin)
     val r0 = RangeJoin.suffixRight(l1, r1, suffix)
     val rKeys = keys.map(_ + suffix)
     val cntAttr = AttributeReference(countCol, LongType, nullable = false)()
@@ -226,8 +227,8 @@ object IntervalSweepJoin {
     * per-row-id unmatched rejoin (one ~|input|-row aggregation per
     * outer side) — fan-out-free pairs with full (key, bin)
     * parallelism, at the cost of the rejoin the native mode avoids.
-    * Deliberately NOT auto-dispatched: it needs the row-id contract on
-    * both sides, and no measured workload has hit the per-key bound
+    * Deliberately NOT auto-dispatched: it needs a row identity on both
+    * sides, and no measured workload has hit the per-key bound
     * (the gate only routes here when binned fan-out already loses). */
   def outer(left: DataFrame, right: DataFrame, keys: Seq[String],
             joinType: String, slack: Long = 0,

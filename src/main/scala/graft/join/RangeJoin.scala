@@ -3,6 +3,7 @@ package graft.join
 import graft.core.{Cols, Sizing}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Distributed interval (range) join.
   *
@@ -218,10 +219,13 @@ object RangeJoin {
   def pairsDispatch(left: DataFrame, right: DataFrame, keys: Seq[String],
                     slack: Long = 0, binSize: Long = RangeJoin.defaultBinSize,
                     suffix: String = "_b", contained: Boolean = false): DataFrame =
-    gatedChoice(left, right, keys, Use.Pairs, contained) match {
-      case Some(route) => routedPairs(route, left, right, keys, slack, suffix)
-      case None => pairs(left, right, keys, slack, binSize, suffix, contained)
-    }
+    pairsGatedOn(left, right, left, right, keys, slack, binSize, suffix, contained)
+
+  /** [[pairsDispatch]] of `l` and `r`, gated on the inputs they derive from. */
+  private[graft] def pairsGatedOn(gl: DataFrame, gr: DataFrame, l: DataFrame, r: DataFrame,
+      keys: Seq[String], slack: Long, binSize: Long, suffix: String, contained: Boolean = false) =
+    gatedChoice(gl, gr, keys, Use.Pairs, contained).fold(pairs(l, r, keys, slack, binSize,
+      suffix, contained))(routedPairs(_, l, r, keys, slack, suffix))
 
   /** Existence-join counterpart of [[pairsDispatch]]: above the gate
     * semi/anti run through the sweep operator's native modes (no
@@ -252,11 +256,13 @@ object RangeJoin {
   private def maybeBroadcast(df: DataFrame, small: Boolean): DataFrame =
     if (small) broadcast(df) else df
 
-  /** Explode `df` into (row, bin) with the interval extended by `pad`. */
-  private def binned(df: DataFrame, binSize: Long, pad: Long,
-                     s: String, e: String): DataFrame =
-    df.withColumn("_bin", explode(sequence(
-      floorDiv(col(s) - pad, binSize), floorDiv(col(e) + pad - 1, binSize))))
+  /** Explode `df` into (row, bin) with the interval extended by `pad`;
+    * `outer` keeps a null-bound row as one null-bin copy. */
+  private def binned(df: DataFrame, binSize: Long, pad: Long, s: String, e: String,
+                     outer: Boolean = false): DataFrame = {
+    val bins = sequence(floorDiv(col(s) - pad, binSize), floorDiv(col(e) + pad - 1, binSize))
+    df.withColumn("_bin", if (outer) explode_outer(bins) else explode(bins))
+  }
 
   /** Rename right-side columns that collide with the left, suffixing
     * (pyranges suffix contract, reference methods/join.py:34-35). */
@@ -266,50 +272,66 @@ object RangeJoin {
       if (lcols.contains(c)) d.withColumnRenamed(c, c + suffix) else d)
   }
 
+  /** The column every per-left-row reduce, window and rejoin keys on. */
+  private[graft] val Rid = "_gx_rid"
+
+  /** THE row-identity decision for per-left-row ops (the reference's
+    * pandas index): one long per PHYSICAL row, so identical rows differ
+    * and a user's `row_id` is payload. The id is not stable across
+    * re-evaluations of `df` whose upstream order is not, so a plan
+    * consumes the identified frame once, or via [[identifiedPinned]]. */
+  private[graft] def identified(df: DataFrame): DataFrame =
+    if (df.columns.contains(Rid)) df else df.withColumn(Rid, monotonically_increasing_id())
+
+  /** [[identified]] for several consumers: a lazy MEMORY_AND_DISK pin, so all
+    * read the ids of one evaluation, whatever the exchange-reuse conf. */
+  private[graft] def identifiedPinned(df: DataFrame): DataFrame =
+    identified(df).persist(StorageLevel.MEMORY_AND_DISK)
+
   /** join_overlaps(multiple=first/last) as a per-left-row reduce of
-    * `matches` (left columns plus suffixed right columns: the binned
-    * pairs, or a salted sweep pick's per-bin-copy winners). first =
-    * smallest (Start_b, End_b), last = LARGEST — position order of the
-    * other side (reference intersect doctest
+    * `matches` ([[identified]] left columns plus suffixed right columns:
+    * the binned pairs, or a salted sweep pick's per-bin-copy winners).
+    * first = smallest (Start_b, End_b), last = LARGEST — position order of
+    * the other side (reference intersect doctest
     * core/pyranges_main.py:5406-5415: "last" on [25,33),[28,32) picks the
     * [28,32) row, i.e. max start, not max end); ties go ascending on the
     * remaining right columns, the order the sweep's native pick uses.
-    * Row identity is the FULL left row (round-18, the duplicate-row_id
-    * find): group keys are null-safe and no rejoin is needed. min_by
-    * carries the right columns as an OPAQUE payload and compares only
-    * the ordering struct; min(struct(...)) re-compares every payload
-    * field on ties, which measurably drags on multi-million-pair sets. */
+    * min_by carries the row as an OPAQUE payload and compares only the
+    * ordering struct; min(struct(...)) re-compares every payload field
+    * on ties, which measurably drags on multi-million-pair sets. */
   private[graft] def pickRollup(left: DataFrame, matches: DataFrame, suffix: String,
                                 last: Boolean): DataFrame = {
     val sortKeys = Seq(Start + suffix, End + suffix)
-    val lCols = left.columns.toSeq
-    val rCols = matches.columns.filterNot(lCols.contains).toSeq
+    val out = matches.columns.filterNot(_ == Rid).toSeq
+    val rCols = out.filterNot(left.columns.contains)
     val ord = struct((sortKeys ++ rCols.filterNot(sortKeys.contains)).map { c =>
       if (last && sortKeys.contains(c)) (-col(c)).as(c) else col(c)
     }: _*)
-    matches.groupBy(lCols.map(col): _*)
-      .agg(min_by(struct(rCols.map(col): _*), ord).as("_m"))
-      .select(matches.columns.map(c =>
-        if (rCols.contains(c)) col(s"_m.$c").as(c) else col(c)): _*)
+    matches.groupBy(col(Rid))
+      .agg(min_by(struct(out.map(col): _*), ord).as("_m"))
+      .select(out.map(c => col(s"_m.$c").as(c)): _*)
   }
 
-  /** count_overlaps as a per-left-row reduce: sums `partials`' `countCol`
-    * (1 per binned pair, or a salted sweep's per-bin-copy counts) per
-    * FULL left row — two distinct rows sharing a row_id keep separate
-    * counts (round-18, the duplicate-row_id find) — and rejoins `left`,
-    * rows without partials at 0. The rejoin is null-safe (`<=>` on every
-    * left column), so a NULL payload keeps its count. */
+  /** count_overlaps per left row: sums `partials`' `countCol` per [[Rid]]; every
+    * row has a partial (a left-outer or salted-sweep bin copy), so no rejoin. */
   private[graft] def countRollup(left: DataFrame, partials: DataFrame,
                                  countCol: String): DataFrame = {
-    val lCols = left.columns.toSeq
-    val ks = lCols.indices.map(i => s"_gx_k$i")
-    val sums = partials.groupBy(lCols.map(col): _*)
-      .agg(sum(col(countCol)).as(countCol))
-      .toDF(ks :+ countCol: _*)
-    val on = lCols.zip(ks).map { case (c, k) => col(c) <=> col(k) }.reduce(_ && _)
-    left.join(sums, on, "left").drop(ks: _*)
-      .na.fill(0L, Seq(countCol))
+    val lCols = left.columns.filterNot(_ == Rid).toSeq
+    partials.groupBy(col(Rid))
+      .agg(first(struct(lCols.map(col): _*)).as("_l"), sum(col(countCol)).as(countCol))
+      .select(lCols.map(c => col(s"_l.$c").as(c)) :+ col(countCol): _*)
   }
+
+  /** [[pairs]] of the [[identified]] left, an unmatched bin copy null-padded. */
+  private[graft] def leftOuterPairs(left: DataFrame, right: DataFrame, keys: Seq[String],
+      slack: Long = 0, binSize: Long = RangeJoin.defaultBinSize): DataFrame =
+    binnedJoin(identified(left), right, keys, slack, binSize, "_b", contained = false, outer = true)
+
+  /** count_overlaps on the binned join: [[leftOuterPairs]] per row. */
+  private[graft] def binnedCount(left: DataFrame, right: DataFrame, keys: Seq[String],
+                                 slack: Long, binSize: Long, countCol: String): DataFrame =
+    countRollup(left, leftOuterPairs(left, right, keys, slack, binSize)
+      .withColumn(countCol, when(col(Start + "_b").isNull, 0L).otherwise(1L)), countCol)
 
   /** Inner pair join: left columns + suffixed right columns, one output
     * row per truly-overlapping pair. `contained` restricts to left
@@ -317,7 +339,12 @@ object RangeJoin {
     * contained_intervals_only). */
   def pairs(left: DataFrame, right: DataFrame, keys: Seq[String],
             slack: Long = 0, binSize: Long = RangeJoin.defaultBinSize, suffix: String = "_b",
-            contained: Boolean = false): DataFrame = {
+            contained: Boolean = false): DataFrame =
+    binnedJoin(left, right, keys, slack, binSize, suffix, contained, outer = false)
+
+  /** [[pairs]]; `outer` keeps each unmatched left bin copy null-padded. */
+  private def binnedJoin(left: DataFrame, right: DataFrame, keys: Seq[String], slack: Long,
+      binSize: Long, suffix: String, contained: Boolean, outer: Boolean): DataFrame = {
     val r0 = suffixRight(left, right, suffix)
     val rKeys = keys.map(_ + suffix)  // keys always collide by contract
     val rs = Start + suffix
@@ -334,7 +361,7 @@ object RangeJoin {
     // row on the bench corpus); the light early-out exists/containment
     // probes measured SLOWER with it (q12 1.4->2.0 s, q13 1.2->1.8 s).
     val probe = if (rightSmall) Sizing.fanOutSmallScan(left) else left
-    val lb = binned(probe, binSize, slack, Start, End).alias("l")
+    val lb = binned(probe, binSize, slack, Start, End, outer).alias("l")
     // hash-shuffle join on (keys, bin) by default; small right sides
     // (dimension-table-sized annotation sets) broadcast instead, judged
     // from the pre-explode optimizer estimate
@@ -348,7 +375,7 @@ object RangeJoin {
     val dedup = col("l._bin") ===
       floorDiv(greatest(col(s"l.$Start") - slack, col(s"r.$rs")), binSize)
     val cond = (keyEq :+ (col("l._bin") === col("r._bin")) :+ overlap :+ dedup).reduce(_ && _)
-    lb.join(rb, cond, "inner")
+    lb.join(rb, cond, if (outer) "left_outer" else "inner")
       .drop(rKeys: _*).drop("_bin")
   }
 
@@ -363,52 +390,36 @@ object RangeJoin {
     val rKeys = keys.map(_ + suffix)
     val rs = Start + suffix
     val re = End + suffix
-    val rightSmall = broadcastable(right)
-    val rb = maybeBroadcast(
-      binned(r0.select((rKeys :+ rs :+ re).map(col): _*), binSize, 0, rs, re),
-      rightSmall).alias("r")
+    // A row matches iff a right interval overlaps (under `contained`,
+    // contains) it. The right's bin copies reach two bins back (an auto bin
+    // is >= 4x the mean length; containment needs no reach), so a row at
+    // most that wide meets all of them in its start's bin: it semi/anti
+    // joins as ONE copy, with no id. A wider row joins each of its `_n` bin
+    // copies, which reduce per row: it survives semi with any, anti with all.
+    val pad = if (contained) 0L else slack
+    val reach = if (contained) 0L else 2 * binSize
+    val rb = maybeBroadcast(r0.select((rKeys :+ rs :+ re).map(col): _*)
+      .withColumn("_bin", explode(sequence(floorDiv(col(rs) - reach, binSize),
+        floorDiv(col(re) - 1, binSize)))), broadcastable(right)).alias("r")
     val joinType = if (anti) "left_anti" else "left_semi"
-    if (contained) {
-      // Containment fast path: a containing right interval covers the
-      // left's Start, so the right's (exploded) bin set always includes
-      // floor(Start/binSize). The left needs NO explode — a single
-      // computed bin — hence semi/anti joins directly and there is no
-      // copy-dedup or rejoin: one join, zero extra shuffles (and zero
-      // shuffles at all when the right side broadcasts).
-      val lb = left.alias("l")
-      val keyEq = keys.zip(rKeys).map { case (k, rk) => col(s"l.$k") === col(s"r.$rk") }
-      val cond = (keyEq :+
-        (floorDiv(col(s"l.$Start"), binSize) === col("r._bin")) :+
-        (col(s"r.$rs") <= col(s"l.$Start") && col(s"l.$End") <= col(s"r.$re"))).reduce(_ && _)
-      lb.join(rb, cond, joinType)
-    } else {
-      // A binned left_anti alone would be wrong: it only drops the (row,
-      // bin) copies that match in their own bin, and the surviving copies
-      // of a matched row would reappear. So: semi over the binned copies
-      // first, dedupe the matches, then semi/anti the ORIGINAL left against
-      // them on a single long id column. A left without the row_id
-      // contract gets a positional id attached first — joining back on
-      // all columns would silently mis-handle rows with null metadata
-      // columns (null-unsafe equality) and conflate duplicate rows.
-      val (l0, tmpId) =
-        if (left.columns.contains(Cols.RowId)) (left, None)
-        else ("_gx_rid": String) match { case c =>
-          (left.withColumn(c, monotonically_increasing_id()), Some(c))
-        }
-      val idCol = tmpId.getOrElse(Cols.RowId)
-      val lb = binned(l0, binSize, slack, Start, End).alias("l")
-      val keyEq = keys.zip(rKeys).map { case (k, rk) => col(s"l.$k") === col(s"r.$rk") }
-      val overlap =
-        col(s"l.$Start") - slack < col(s"r.$re") && col(s"l.$End") + slack > col(s"r.$rs")
-      val cond = (keyEq :+ (col("l._bin") === col("r._bin")) :+ overlap).reduce(_ && _)
-      val matchedIds = lb.join(rb, cond, "left_semi")
-        .select(col(s"l.$idCol")).distinct()
-      // matched ids are <= left's row count of single longs: broadcast
-      // them back when the left side itself is modest, avoiding a full
-      // reshuffle of the left table.
-      val res = l0.join(maybeBroadcast(matchedIds, broadcastable(left)),
-        Seq(idCol), joinType)
-      tmpId.fold(res)(c => res.drop(c))
+    val keyEq = keys.zip(rKeys).map { case (k, rk) => col(s"l.$k") === col(s"r.$rk") }
+    val lo = floorDiv(col(Start) - pad, binSize)
+    val hi = floorDiv(col(End) + pad - 1, binSize)
+    val one = coalesce(col(End) - col(Start) + 2 * pad <= reach, lit(true)) || lit(contained)
+    val hit =
+      if (contained) col(s"r.$rs") <= col(s"l.$Start") && col(s"l.$End") <= col(s"r.$re")
+      else col(s"l.$Start") - slack < col(s"r.$re") && col(s"l.$End") + slack > col(s"r.$rs")
+    val cond = (keyEq :+ (col("l._bin") === col("r._bin")) :+ hit).reduce(_ && _)
+    val single = left.filter(one).withColumn("_bin", lo).alias("l").join(rb, cond, joinType)
+      .drop("_bin")
+    if (contained) single
+    else {
+      val perRow = binned(identified(left.filter(!one)).withColumn("_n", hi - lo + 1), binSize,
+          slack, Start, End).alias("l").join(rb, cond, joinType).groupBy(col(Rid))
+        .agg(first(struct(left.columns.map(col): _*)).as("_l"),
+          count(lit(1)).as("_c"), first(col("_n")).as("_n"))
+      single.unionByName((if (anti) perRow.filter(col("_c") === col("_n")) else perRow)
+        .select(left.columns.map(c => col(s"_l.$c").as(c)): _*))
     }
   }
 }

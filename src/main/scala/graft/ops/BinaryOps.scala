@@ -8,12 +8,12 @@ import org.apache.spark.sql.functions._
 
 /** Binary interval operators (the heart of the library — SURVEY.md §2.1).
   * All are pure DataFrame plans over the binned range join; `keys` is the
-  * resolved group key (Chromosome [+ Strand] [+ match_by]); `left` must
-  * carry a unique `row_id` column (the pandas-index replacement) for the
-  * ops whose contract needs input-row identity.
+  * resolved group key (Chromosome [+ Strand] [+ match_by]). The ops that
+  * reduce per input row key on the engine's own row identity
+  * ([[RangeJoin.identified]]); a `row_id` column is payload.
   */
 object BinaryOps {
-  import Cols.{Start, End, RowId}
+  import Cols.{Start, End}
 
   /** overlap (reference core/pyranges_main.py:2393-2615): keep left rows
     * overlapping >= 1 right row; invert => keep non-overlapping;
@@ -73,11 +73,9 @@ object BinaryOps {
         case Some(RangeJoin.Sweep(mb)) =>
           graft.join.IntervalSweepJoin.pick(left, right, keys,
             last = last, slack = slack, suffix = suffix, megaBin = mb)
-        case Some(RangeJoin.Binned(bin)) => RangeJoin.pickRollup(left,
-          RangeJoin.pairs(left, right, keys, slack, bin, suffix), suffix, last)
-        case None => RangeJoin.pickRollup(left,
-          RangeJoin.pairsDispatch(left, right, keys, slack, binSize, suffix, contained),
-          suffix, last)
+        case route => RangeJoin.pickRollup(left, RangeJoin.pairs(RangeJoin.identified(left),
+          right, keys, slack, route.collect { case RangeJoin.Binned(b) => b }.getOrElse(binSize),
+          suffix, contained), suffix, last)
       }
     }
     val p = reportOverlapCol.fold(matched)(c => matched.withColumn(c,
@@ -132,10 +130,8 @@ object BinaryOps {
     RangeJoin.gatedChoice(left, right, keys, RangeJoin.Use.Count) match {
       case Some(RangeJoin.Sweep(mb)) =>
         graft.join.IntervalSweepJoin.count(left, right, keys, slack, countCol, mb)
-      case _ =>
-        RangeJoin.countRollup(left,
-          RangeJoin.pairsDispatch(left, right, keys, slack, binSize)
-            .withColumn(countCol, lit(1L)), countCol)
+      case route => RangeJoin.binnedCount(left, right, keys, slack,
+        route.collect { case RangeJoin.Binned(b) => b }.getOrElse(binSize), countCol)
     }
 
   /** Multi-set count_overlaps (reference core/multioverlap.py:11-143):
@@ -151,7 +147,7 @@ object BinaryOps {
     * into many; rows fully covered disappear; rows with no overlap pass
     * through). Plan: merge right per key; pair-join; per left row the
     * merged overlaps are disjoint and sorted, so the surviving pieces are
-    * the gaps — window over row_id, no collect. */
+    * the gaps — window over the engine row id, no collect. */
   def subtract(left: DataFrame, right: DataFrame, keys: Seq[String],
                binSize: Long = graft.join.RangeJoin.defaultBinSize): DataFrame = {
     // the merged right feeds BOTH the pair join and the anti join below;
@@ -171,10 +167,11 @@ object BinaryOps {
     // runs once.
     val merged = UnaryOps.merge(right, keys)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val p = RangeJoin.pairsDispatch(left, merged, keys, 0, binSize)
+    val p = RangeJoin.pairsGatedOn(left, merged, RangeJoin.identified(left), merged, keys, 0,
+      binSize, "_b")
     val rs = col(Start + "_b")
     val re = col(End + "_b")
-    val w = Window.partitionBy(col(RowId)).orderBy(rs)
+    val w = Window.partitionBy(col(RangeJoin.Rid)).orderBy(rs)
     val wAll = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val pieces = p
       .withColumn("_gapS", greatest(col(Start), coalesce(lag(re, 1).over(w), col(Start))))
@@ -202,9 +199,8 @@ object BinaryOps {
   def setIntersect(left: DataFrame, right: DataFrame, keys: Seq[String],
                    multiple: String = "all",
                    binSize: Long = graft.join.RangeJoin.defaultBinSize): DataFrame =
-    intersect(UnaryOps.merge(left, keys).withColumn(RowId, monotonically_increasing_id()),
-              UnaryOps.merge(right, keys), keys, 0, multiple, binSize)
-      .drop(RowId)
+    intersect(UnaryOps.merge(left, keys), UnaryOps.merge(right, keys), keys, 0,
+      multiple, binSize)
 
   /** set_union_overlaps (reference core/pyranges_main.py:2723-2820):
     * concat + merge. */
@@ -222,7 +218,7 @@ object BinaryOps {
     * closest right interval ending at-or-before left's Start (as-of sweep
     * over the unioned tables, one sort), and the closest right interval
     * starting at-or-after left's End (mirror sweep) — then a min(struct)
-    * per row_id. Ties broken by smallest right row_id.
+    * per left row. Ties broken by smallest right row_id.
     */
   def nearest(left: DataFrame, right: DataFrame, keys: Seq[String],
               suffix: String = "_b", distCol: String = "Distance",

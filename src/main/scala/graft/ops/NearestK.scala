@@ -29,6 +29,7 @@ case class NearCand(row_id: Long, nb: Long, nb_start: Long, nb_end: Long,
   */
 object NearestK {
   import Cols.{Start, End, Strand, RowId}
+  import RangeJoin.Rid
 
   private val KEY = "_k"
 
@@ -126,12 +127,13 @@ object NearestK {
     val o = right.select(keyCol.as(KEY), posOther.as("pos"), lit(0).as("isSelf"),
       (-col(RowId)).as("sortId"), col(RowId).as("id"), col(Start).as("s"), col(End).as("e"))
     val l = left.select(keyCol.as(KEY), posSelf.as("pos"), lit(1).as("isSelf"),
-      lit(0L).as("sortId"), col(RowId).as("id"), col(Start).as("s"), col(End).as("e"))
+      lit(0L).as("sortId"), col(Rid).as("id"), col(Start).as("s"), col(End).as("e"))
     o.unionByName(l)
   }
 
   /** Full k-nearest: returns left rows joined with up to k neighbors each,
-    * ranked by (distance, neighbor row_id). */
+    * ranked by (distance, neighbor row_id). Every left consumer reads one
+    * [[RangeJoin.identifiedPinned]] frame, so all agree on the row ids. */
   def nearestK(left: DataFrame, right: DataFrame, keys: Seq[String], k: Int,
                direction: String = "any", excludeOverlaps: Boolean = false,
                suffix: String = "_b", distCol: String = "Distance",
@@ -157,24 +159,25 @@ object NearestK {
     }
     val big = plan.isDefined
     val bin = plan.getOrElse(16384L)
-    val lScan = scanAuto(union(left, right, keys, rightSide = false), k,
+    val l = RangeJoin.identifiedPinned(left)
+    val lScan = scanAuto(union(l, right, keys, rightSide = false), k,
       rightSide = false, big, bin)
-    val rScan = scanAuto(union(left, right, keys, rightSide = true), k,
+    val rScan = scanAuto(union(l, right, keys, rightSide = true), k,
       rightSide = true, big, bin)
-    val ov =
-      if (excludeOverlaps) None
-      else Some(RangeJoin.pairsDispatch(left.select((keys :+ RowId :+ Start :+ End).map(col): _*),
-          right.select((keys :+ RowId :+ Start :+ End).map(col): _*),
-          keys, 0, binSize, suffix)
-        .select(col(RowId).as("row_id"), col(rId).as("nb"), col(rs).as("nb_start"),
-          col(re).as("nb_end"), lit(0L).as("dist"), lit(2).as("side")))
+    // gated on the plain inputs, which `plan` above has already sampled
+    val ov = Option.unless(excludeOverlaps)(RangeJoin.pairsGatedOn(left, right,
+        l.select((keys :+ Rid :+ Start :+ End).map(col): _*),
+        right.select((keys :+ Start :+ End).map(col) :+ col(RowId).as(rId): _*), keys, 0, binSize,
+        suffix)
+      .select(col(Rid).as("row_id"), col(rId).as("nb"), col(rs).as("nb_start"),
+        col(re).as("nb_end"), lit(0L).as("dist"), lit(2).as("side")))
 
     val all = ov.fold(lScan.unionByName(rScan))(o => lScan.unionByName(rScan).unionByName(o))
 
     // direction filter is strand-relative to self
     val hasStrand = left.columns.contains(Strand)
     val withSelf = all.join(
-      left.select(Seq(col(RowId).as("row_id")) ++
+      l.select(Seq(col(Rid).as("row_id")) ++
         (if (hasStrand) Seq(col(Strand).as("_sstr")) else Nil): _*), Seq("row_id"))
     val dirFiltered = direction match {
       case "upstream" if hasStrand =>
@@ -191,9 +194,9 @@ object NearestK {
     val w = Window.partitionBy(col("row_id")).orderBy(col("dist"), col("nb"))
     val ranked = dirFiltered
       .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
-    val proj = ranked.select(col("row_id").as(RowId), col("nb").as(rId),
+    val proj = ranked.select(col("row_id").as(Rid), col("nb").as(rId),
       col("nb_start").as(rs), col("nb_end").as(re), col("dist").as(distCol),
       col("_rn").as("nearest_rank"))
-    left.join(proj, Seq(RowId), "inner")
+    l.join(proj, Seq(Rid), "inner").select((left.columns ++ proj.columns.tail).map(col): _*)
   }
 }

@@ -66,17 +66,17 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *
   * Covers Inner, LeftSemi and LeftAnti joins. Inner preserves the join's
   * output exactly (a Project restores the original attribute list).
-  * Semi/anti can't explode or sweep the probe side naively — a left row
-  * matching several right rows would come back several times — so the
-  * rewrite tags each left row with a rid (monotonically_increasing_id,
-  * the same row-identity contract RangeJoin.exists uses), runs the inner
-  * pair join, and collapses on the rid: semi = Aggregate over the pairs;
-  * anti (binned) = LEFT OUTER + max(matched)=false filter, anti (sweep)
-  * = LeftAnti equi-join against the distinct matched rids. Both keep
-  * duplicate left rows at their original multiplicity (distinct rids)
-  * and emit each surviving row exactly once. Fires only on joins whose
-  * range bounds are integral attributes; idempotent (skips joins already
-  * carrying a graft bin attribute).
+  * Semi/anti run natively in the sweep; the binned plan can't explode
+  * the probe side naively — a left row matching several right rows
+  * would come back several times — so it tags each left row with
+  * RangeJoin.Rid (monotonically_increasing_id: one per physical row,
+  * evaluated once), runs the pair join, and collapses per rid: semi =
+  * Aggregate over the inner pairs; anti = LEFT OUTER + max(matched)=false
+  * filter. The Aggregate groups by the rid AND the left row (a hash
+  * aggregate; the DataFrame ops group by the rid alone), so duplicate
+  * left rows keep their multiplicity and each surviving row is emitted
+  * once. Fires only on joins whose range bounds are integral attributes;
+  * idempotent (skips joins already carrying a graft bin attribute).
   */
 object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -248,7 +248,7 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
                   lStart, lEnd, rStart, rEnd, slack = 0L,
                   condition = cond, joinType = jt))
               case RangeJoin.Binned(bin) =>
-                val ridAlias = Alias(MonotonicallyIncreasingID(), "_graft_rid")()
+                val ridAlias = Alias(MonotonicallyIncreasingID(), RangeJoin.Rid)()
                 val lRid = Project(l.output :+ ridAlias, l)
                 val rid = ridAlias.toAttribute
                 val binL = AttributeReference(BIN_PREFIX + "l", LongType, nullable = true)()

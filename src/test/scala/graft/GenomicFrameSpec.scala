@@ -56,6 +56,23 @@ class GenomicFrameSpec extends AnyFunSuite {
     assert(j.df.columns.contains(Start + "_b"))
   }
 
+  test("per-row ops on a frame without row_id add only their own columns") {
+    import spark.implicits._
+    val a = GenomicFrame(Seq(("c", "+", 0L, 10L, "x"), ("c", "+", 0L, 10L, "x"))
+      .toDF(Chrom, Strand, Start, End, "name"))
+    val b = GenomicFrame(Seq(("c", "+", 5L, 8L)).toDF(Chrom, Strand, Start, End))
+    def added(g: GenomicFrame) = g.df.columns.toSeq.diff(a.df.columns.toSeq)
+    assert(added(a.joinOverlaps(b)) == Seq("Start_b", "End_b"))
+    assert(added(a.joinOverlaps(b, multiple = "first")) == Seq("Start_b", "End_b"))
+    assert(added(a.subtractOverlaps(b)).isEmpty)
+    assert(added(a.countOverlaps(b)) == Seq("NumberOverlaps"))
+    assert(added(a.nearestRanges(b)) == Seq("row_id_b", "Start_b", "End_b", "Distance"))
+    // every op still keeps the two identical input rows apart
+    assert(a.countOverlaps(b).df.collect().map(_.getAs[Long]("NumberOverlaps")).toSeq == Seq(1L, 1L))
+    assert(a.subtractOverlaps(b).df.count() == 4)
+    assert(a.nearestRanges(b).df.count() == 2)
+  }
+
   test("loci accessor filters chrom/strand/range") {
     val a = mk(("c", "+", 0, 10), ("c", "-", 20, 30), ("d", "+", 0, 5))
     assert(a.loci("c").df.count() == 2)

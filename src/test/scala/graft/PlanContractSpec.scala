@@ -231,6 +231,75 @@ class PlanContractSpec extends AnyFunSuite {
       "native count needs no pair aggregation and no rejoin")
   }
 
+  test("row identity: each attached id is evaluated once, under plain and salted gates") {
+    import org.apache.spark.sql.catalyst.expressions.MonotonicallyIncreasingID
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import graft.core.GenomicFrame
+    import graft.ops.BinaryOps
+    import spark.implicits._
+    object Walk extends AdaptiveSparkPlanHelper
+    // identical rows and no row_id: only an evaluated-once id keeps them
+    // apart; [100,400) spans several bins, and [1000,300000) more than two
+    // of the widest auto bin. RDD-backed, since Catalyst folds a projection
+    // over local rows into the rows at plan time
+    val sc = spark.sparkContext
+    val l = sc.parallelize(Seq(("c1", 0L, 10L, "x"), ("c1", 0L, 10L, "x"),
+      ("c1", 20L, 40L, "y"), ("c1", 100L, 400L, "z"), ("c1", 1000L, 300000L, "v")), 2)
+      .toDF(Chrom, Start, End, "name")
+    val r = sc.parallelize(Seq(("c1", 5L, 8L, 10L), ("c1", 25L, 30L, 11L),
+      ("c1", 300L, 310L, 12L), ("c1", 150000L, 150010L, 13L)), 2).toDF(Chrom, Start, End, RowId)
+    val chunks = sc.parallelize(Seq(("c1", 0L, "ACGT" * 40)), 1).toDF(Chrom, "cstart", "chunk")
+    val k = Seq(Chrom)
+    // (op, ids it attaches): subtract's gap window and its untouched-row
+    // anti join each number their own rows, and the two ids never meet;
+    // the GenomicFrame nearest also numbers a right side without row_id
+    val nearestOps = Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
+      ("nearest", 1, () => BinaryOps.nearest(l, r, k)),
+      ("GenomicFrame.nearestRanges", 2,
+        () => GenomicFrame(l).nearestRanges(GenomicFrame(r.drop(RowId))).df))
+    val ops = Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
+      ("countOverlaps", 1, () => BinaryOps.countOverlaps(l, r, k)),
+      ("joinOverlaps(first)", 1, () => BinaryOps.joinOverlaps(l, r, k, multiple = "first")),
+      ("joinOverlaps(last)", 1, () => BinaryOps.joinOverlaps(l, r, k, multiple = "last")),
+      ("overlap", 1, () => BinaryOps.overlap(l, r, k)),
+      ("overlap(invert)", 1, () => BinaryOps.overlap(l, r, k, invert = true)),
+      ("subtract", 2, () => BinaryOps.subtract(l, r, k)),
+      ("getSequenceChunked", 1, () => graft.ext.Seqs.getSequenceChunked(l, chunks))) ++
+      nearestOps
+    def ids(p: SparkPlan): Int = Walk.collect(p) {
+      case p: ProjectExec => p.projectList.count(_.exists(_.isInstanceOf[MonotonicallyIncreasingID]))
+    }.sum
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    def check(label: String, which: Seq[(String, Int, () => org.apache.spark.sql.DataFrame)]) = {
+      // one small job per op, run side by side under the same conf
+      val plans = Await.result(Future.traverse(which) { case (_, _, op) =>
+        Future { val df = op(); df.collect(); df.queryExecution.executedPlan }
+      }, scala.concurrent.duration.Duration(10, "min"))
+      for (((name, n, _), plan) <- which.zip(plans)) {
+        // the final adaptive plan; a ReusedExchange is a leaf, so an id
+        // read through one is not counted again, and a pinned frame's id
+        // is counted once in its cached plan, however many scans read it
+        val pins = Walk.collect(plan) { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
+        val evaluated = ids(plan) + pins.distinct.map(c => ids(c.cachedPlan)).sum
+        assert(evaluated == n, s"$name, $label: $evaluated id evaluations\n$plan")
+      }
+    }
+    try {
+      for (force <- Seq("plain", "salted")) {
+        spark.conf.set(graft.core.Sizing.ForceKey, force)
+        try check(s"force=$force", ops) finally spark.conf.unset(graft.core.Sizing.ForceKey)
+      }
+      // nearest's shared ids come from its pin, not from exchange reuse
+      spark.conf.set("spark.sql.exchange.reuse", "false")
+      try check("exchange reuse off", nearestOps)
+      finally spark.conf.unset("spark.sql.exchange.reuse")
+    } finally { pool.shutdown(); spark.catalog.clearCache() }
+  }
+
   test("saltPlan demotes many-balanced-keys to plain, keeps hot-in-many salted") {
     // 2000 balanced keys: the plain window already out-parallelizes the
     // cores, and salting measured 0.56-0.84x there (BASELINE.md
