@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * so reruns are reproducible and nothing is collected to the driver.
   *
   * Usage:
-  *   SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.MlBench [nDocs] [mode...]"
+  *   SPARK_GRAFT_CPUS=32 sbt -batch "harness/runMain graft.MlBench [nDocs] [mode...]"
   *     nDocs default 2000000 (~600 MB of text); modes: all | clusters |
   *     star | starab | recall | simhash | contamination | index | ann
   *     (star is the narrow interleave-A/B run; starab the digest-vs-
@@ -43,15 +43,13 @@ import org.apache.spark.sql.functions._
   *     check; substrserve the uncontended SubstrIndex serve-throughput
   *     + append/takedown/compact lifecycle soak; trainprof the
   *     centroid-trainer decomposition — sample wall vs fit wall —
-  *     with the MLlib-vs-Lloyd A/B on wall AND cell fidelity; killab
-  *     the same-session interleaved semi-vs-inner kill-join A/B over
-  *     the spark.graft.semdedup.killJoin hook; widthab the same-session
-  *     interleaved int-vs-long vector-width A/B over the
-  *     spark.graft.semdedup.vecWidth hook). "all"
+  *     with the MLlib-vs-Lloyd A/B on wall AND cell fidelity). "all"
   *     covers the per-round soak set, not starab/recall/annrecall/
   *     serve/paradedup/pq/semdedup/semthresh/semtext/traincap/substr/
-  *     embed/assign/substrserve/trainprof/killab/widthab, which are
-  *     targeted studies.
+  *     embed/assign/substrserve/trainprof, which are targeted studies.
+  *
+  * SPARK_GRAFT_CONF="k=v;k=v" sets confs for A/B runs (Harness.session),
+  * e.g. spark.graft.dedup.verifyKey=string.
   */
 object MlBench {
 
@@ -154,50 +152,21 @@ object MlBench {
       (modes.contains("all") &&
         !Set("starab", "recall", "annrecall", "serve", "paradedup", "pq",
           "semdedup", "semthresh", "semtext", "traincap",
-          "substr", "embed", "assign", "substrserve", "trainprof",
-          "killab", "widthab")
+          "substr", "embed", "assign", "substrserve", "trainprof")
         .contains(m))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "24g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional conf overrides (Profile's pattern) — e.g. the verify-key
-    // A/B: SPARK_GRAFT_CONF="spark.graft.dedup.verifyKey=string"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').map(_.trim)
-      .filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) =>
-            spark.conf.set(k, v)
-            println(s"[mlbench] conf $k=$v")
-          case _ =>
-            System.err.println(s"[mlbench] ignoring malformed SPARK_GRAFT_CONF segment '$kv'")
-        }
-      })
+    val spark = Harness.session("mlbench", Harness.cpus("32"))
     def t[T](what: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[mlbench] $what: ${(System.nanoTime() - t0) / 1e9}%.1fs")
       r
     }
-    // Soak-default centroid trainer (VERDICT r17 item #4): the graft
-    // Lloyd trainer measured 2.5x the MLlib fit at 8M/k=4000 with
-    // equivalent cell fidelity (BASELINE round17-trainprof-8m), so the
-    // soaks train through it by default. The two init families produce
-    // DIFFERENT (both valid) matrices, so kept/cluster statistics
-    // recorded under MLlib cells do not carry over numerically — pass
-    // SPARK_GRAFT_CONF=spark.graft.soak.trainer=mllib for continuity
-    // runs against pre-round-18 rows. trainprof/traincap keep explicit
-    // trainers (they study the trainers themselves).
+    // Soaks train centroids with the graft Lloyd trainer: 2.5x the
+    // MLlib fit at 8M/k=4000 with equivalent cell fidelity (BASELINE
+    // round17-trainprof-8m). Kept/cluster statistics of rows recorded
+    // under MLlib cells (before round 18) do not carry over numerically.
+    // trainprof/traincap call their trainers explicitly.
     def trainCells(emb: DataFrame, k: Int): Array[Array[Long]] =
-      spark.conf.get("spark.graft.soak.trainer", "lloyd") match {
-        case "lloyd" => graft.ml.Similarity.trainIvfCentroidsLloyd(emb, k)
-        case "mllib" => graft.ml.Similarity.trainIvfCentroids(emb, k)
-        case other => throw new IllegalArgumentException(
-          s"spark.graft.soak.trainer must be lloyd|mllib, got '$other'")
-      }
+      graft.ml.Similarity.trainIvfCentroidsLloyd(emb, k)
     // the checkpointed synthetic corpus inherits range-leaf stats
     // (~22 B/doc vs ~300 B real), so the auto verify dispatch would
     // trip its 64 MB gate ~14x late — pin the scale path the soaks
@@ -359,8 +328,7 @@ object MlBench {
       // few bits apart. Two runs, default gate vs a tiny maxBucket that
       // FORCES the recursive re-band guard over the naturally hot
       // buckets — the guard is exact, so both must emit the identical
-      // pair count (run with GRAFT_SIMHASH_DEBUG=1 to see the per-level
-      // census). This is the at-scale evidence for the rebuilt
+      // pair count. This is the at-scale evidence for the rebuilt
       // compacted-remainder recursion (round-10).
       val counts = for (mb <- Seq(1 << 16, 64)) yield {
         val n = t(s"simhashNearDupPairs maxHamming=3 bands=4 maxBucket=$mb @$nDocs") {
@@ -1597,97 +1565,6 @@ object MlBench {
       emb.unpersist()
     }
 
-    if (on("killab")) {
-      // SEMI-VS-INNER KILL-JOIN INTERLEAVE (optimization round 17): the
-      // only wall comparison this host generation supports is adjacent
-      // legs in ONE session (same-work legs swing up to 1.4x across a
-      // session, ±20%+ across sessions — BASELINE round17-killsemi-8m).
-      // One corpus, one trained matrix, legs A(semi) B(inner) A B at
-      // t=80; kept counts must be identical all four legs. `inner` is
-      // the round-16 spelling behind spark.graft.semdedup.killJoin.
-      import graft.ml.{SemDedup, Similarity, TextOps}
-      val tp = 80
-      val emb = t(s"killab corpus+embed @$nDocs") {
-        TextOps.hashedNgramEmbedding(corpus(spark, nDocs), "text",
-            "embedding", n = 3, dim = 64)
-          .select(col("doc_id").as("vec_id"), col("embedding"))
-          .localCheckpoint()
-      }
-      val kCells = math.max(1024, math.min(8192, (nDocs / 2000).toInt))
-      val km = t(s"killab trainCells k=$kCells") {
-        trainCells(emb, kCells)
-      }
-      var kepts = Set.empty[Long]
-      // finally-guarded (round-17 ADVICE): a failed leg must not leave
-      // the legacy 'inner' hook set for whatever soak mode runs next in
-      // this session, and a kept-count divergence — the one thing the
-      // A/B must never have — must fail the run, not scroll past
-      try {
-        for (rep <- 1 to 2; shape <- Seq("semi", "inner")) {
-          spark.conf.set("spark.graft.semdedup.killJoin", shape)
-          var kept = 0L
-          t(s"killab $shape rep$rep t=$tp @$nDocs") {
-            kept = SemDedup.semanticDedup(emb, km, tp)
-              .agg(sum(when(col("kept"), 1L).otherwise(0L))).head().getLong(0)
-          }
-          println(s"[mlbench] killab $shape rep$rep kept=$kept")
-          kepts += kept
-        }
-      } finally spark.conf.unset("spark.graft.semdedup.killJoin")
-      println(s"[mlbench] killab kept-identical: ${kepts.size == 1} ($kepts)")
-      require(kepts.size == 1,
-        s"killab: semi/inner legs diverged on kept counts: $kepts")
-    }
-
-    if (on("widthab")) {
-      // INT-VS-LONG VECTOR-WIDTH INTERLEAVE (optimization round 18,
-      // VERDICT r17 item #1): quantized components narrowed to int32
-      // halve the rank shuffle's vector bytes and the kill join's
-      // per-pair memory reads (guide §2.3 narrower types). The killab
-      // protocol verbatim — one corpus, one trained matrix, adjacent
-      // legs A(int) B(long) A B in one session at t=70 (the banded
-      // pairwise wall's recorded operating point) — because same-work
-      // legs swing ±20%+ across sessions on this host generation.
-      // Verdicts must be identical on every leg (the kernels are
-      // bit-equal by construction; OpsSpec pins it at unit scale, this
-      // pins it at soak scale via the order-free fingerprint).
-      import graft.ml.{SemDedup, TextOps}
-      val tp = 70
-      val emb = t(s"widthab corpus+embed @$nDocs") {
-        TextOps.hashedNgramEmbedding(corpus(spark, nDocs), "text",
-            "embedding", n = 3, dim = 64)
-          .select(col("doc_id").as("vec_id"), col("embedding"))
-          .localCheckpoint()
-      }
-      val kCells = math.max(1024, math.min(8192, (nDocs / 2000).toInt))
-      val km = t(s"widthab trainCells k=$kCells") {
-        trainCells(emb, kCells)
-      }
-      var fps = Set.empty[(Long, Long, Long)]
-      val io = new IoListener
-      spark.sparkContext.addSparkListener(io)
-      try {
-        for (rep <- 1 to 2; width <- Seq("int", "long")) {
-          spark.conf.set("spark.graft.semdedup.vecWidth", width)
-          val (sw0, sp0) = io.snap()
-          var out: DataFrame = null
-          t(s"widthab $width rep$rep t=$tp @$nDocs") {
-            out = SemDedup.semanticDedup(emb, km, tp).localCheckpoint()
-            out.count()
-          }
-          val (sw1, sp1) = io.snap()
-          val fp = fpSem(out)
-          println(f"[mlbench] widthab $width rep$rep fp=$fp footprint: " +
-            f"shuffleWrite=${(sw1 - sw0) / 1e9}%.2f GB " +
-            f"spill=${(sp1 - sp0) / 1e9}%.2f GB")
-          fps += fp
-          out.unpersist()
-        }
-      } finally spark.conf.unset("spark.graft.semdedup.vecWidth")
-      println(s"[mlbench] widthab fingerprint-identical: ${fps.size == 1} ($fps)")
-      require(fps.size == 1,
-        s"widthab: int/long legs diverged on audit fingerprints: $fps")
-    }
     spark.stop()
   }
 }

@@ -1,23 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: dump physical plans of selected queries for plan-quality
-  * review (pushdown, broadcast, codegen spans, shuffle count). */
+/** Dev tool: dump physical plans of selected queries for the
+  * plan-quality audit (pushdown, broadcast, codegen spans, shuffle
+  * count).
+  *
+  * Usage:
+  *   SPARK_GRAFT_CPUS=32 sbt "harness/runMain graft.PlanCheck <sfdir> <mode>"
+  *     --summary                        one row of plan stats per query
+  *     --summary-forced                 the same, every Sizing gate forced salted
+  *     --formatted <outdir> <query...>  explain("formatted") per query
+  *     <query...>                       plan text + stats per query
+  */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     // audit at the BENCH config by default (round-2 verdict: auditing at
     // local[4]/sf0.01 showed the plans the Sizing gates DON'T pick at the
     // driver's local[32]/sf0.1 — the audit must match the config that runs)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Harness.cpus("32")
+    val spark = Harness.session("plancheck", cpus, logLevel = "ERROR")
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     // --summary: one markdown row of plan stats per query (all queries) —
     // the PLANS.md generator for the plan-quality audit. --summary-forced

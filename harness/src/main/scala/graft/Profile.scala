@@ -1,40 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local profiling harness: run named queries N times each inside ONE
   * JVM/session, printing per-iteration wall times. Separates one-time
   * cost (plan analysis, codegen compile, JIT) — iteration 1 only — from
   * steady-state per-row compute (iterations 2+). Usage:
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-  *     sbt "runMain graft.Profile 3 q66_pipeline q52_join_first"
+  *     sbt "harness/runMain graft.Profile 3 q66_pipeline q52_join_first"
+  *
+  * SPARK_GRAFT_CONF="k=v;k=v" sets confs for A/B runs (Harness.session).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = args.headOption.map(_.toInt).getOrElse(3)
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional conf overrides for A/B runs: SPARK_GRAFT_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').map(_.trim)
-      .filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) =>
-            spark.conf.set(k, v)
-            println(s"[profile] conf $k=$v")
-          case _ =>
-            System.err.println(s"[profile] ignoring malformed SPARK_GRAFT_CONF segment '$kv' (want k=v)")
-        }
-      })
+    val spark = Harness.session("profile", Harness.cpus("32"))
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val times = (1 to reps).map { i =>

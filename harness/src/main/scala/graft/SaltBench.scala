@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * table so the run records whether the auto-switch would fire there.
   *
   * Results are recorded in BASELINE.md ("salted crossover" table).
-  * Usage: SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.SaltBench [factor]"
+  * Usage: SPARK_GRAFT_CPUS=32 sbt -batch "harness/runMain graft.SaltBench [factor]"
   */
 object SaltBench {
   import Cols._
@@ -67,16 +67,10 @@ object SaltBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nums = args.filter(a => a.nonEmpty && a.forall(_.isDigit)).map(_.toInt)
     val factor = nums.headOption.getOrElse(60)
     val hotPct = nums.drop(1).headOption.getOrElse(50)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("saltbench", Harness.cpus("32"))
 
     // --manykeys: same bytes, ~2000 distinct keys — probes whether the
     // salted split still pays when the plain window already has more
@@ -100,13 +94,10 @@ object SaltBench {
     val hotShare = df.filter(col(Chrom) === "A").count().toDouble / nRows
     println(f"[saltbench] rows=$nRows%d leafBytes=${leafBytes.toLong / (1 << 20)}%d MB hotShare=$hotShare%.2f")
 
-    // would the auto-switches fire at this size?
-    val fireInput = graft.core.Sizing.decide("saltbench/input",
+    // would the auto-switch fire at this size?
+    val fire = graft.core.Sizing.decide("saltbench/input",
       graft.core.Sizing.saltedInputThreshold, df)
-    val fireSweep = graft.core.Sizing.decide("saltbench/sweep",
-      graft.core.Sizing.saltedSweepThreshold, df)
-    println(s"[saltbench] gate(input ${graft.core.Sizing.saltedInputThreshold >> 20}MB)=$fireInput " +
-      s"gate(sweep ${graft.core.Sizing.saltedSweepThreshold >> 20}MB)=$fireSweep")
+    println(s"[saltbench] gate(${graft.core.Sizing.saltedInputThreshold >> 20}MB)=$fire")
 
     // --check: at-scale equivalence — the plain==salted property tests
     // run on small fixtures; this compares full-row checksums at a size

@@ -18,20 +18,13 @@ import org.apache.spark.sql.functions._
   * which machinery term owns the rest. Read-only over the parquet
   * inputs; writes only under /tmp.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.StreamProf [reps]"
+  * Usage: SPARK_GRAFT_CPUS=32 sbt "harness/runMain graft.StreamProf [reps]"
   */
 object StreamProf {
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("streamprof", Harness.cpus("32"))
 
     def runOnce(what: String, rep: Int)(mk: SparkSession => DataFrame): Unit = {
       // the bench's withStreamParts shape: a cloned session at width 4

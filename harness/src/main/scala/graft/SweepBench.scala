@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * should win. The crossover's fan-out value is what the conf encodes.
   *
   * Usage:
-  *   SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.SweepBench [nRows]"
+  *   SPARK_GRAFT_CPUS=32 sbt -batch "harness/runMain graft.SweepBench [nRows]"
   *     [--check]   also xxhash-compare binned vs sweep pair sets
   *     [--pick]    A/B the derived modes instead: first-match pick and
   *                 per-row count, binned pairs+aggregation vs the
@@ -74,19 +74,13 @@ object SweepBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nums = args.filter(a => a.nonEmpty && a.forall(_.isDigit)).map(_.toLong)
     val n = nums.headOption.getOrElse(2000000L)
     val lens = args.find(_.startsWith("--lens="))
       .map(_.stripPrefix("--lens=").split(",").map(_.toLong).toSeq)
       .getOrElse(Seq(20L, 2000L, 65536L, 262144L, 1048576L))
     val check = args.contains("--check")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("sweepbench", Harness.cpus("32"))
 
     if (args.contains("--depth")) {
       // eviction/buffer stress: one key, every interval concurrently

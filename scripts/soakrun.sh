@@ -2,9 +2,13 @@
 # Bare-java MlBench soak launcher: replicates build.sbt's forked JVM
 # flags (JDK17 --add-opens + ParallelGC + 24g heap) so measurements run
 # against the SAME engine sbt forks, without holding the sbt lock.
-# Usage: scripts/soakrun.sh <classesDir> <args...>
-#   e.g. scripts/soakrun.sh /tmp/graft-classes 2000000 starab
-CLASSES="$1"; shift
+# Usage: scripts/soakrun.sh <classesDir> <harnessClassesDir> <args...>
+#   the library's classes (target/scala-2.13/classes) and the harness
+#   subproject's (harness/target/scala-2.13/classes), after
+#   `sbt Test/compile`; copy both elsewhere first to keep compiling
+#   while a soak runs, e.g.
+#   scripts/soakrun.sh /tmp/graft-classes /tmp/graft-harness-classes 2000000 starab
+CLASSES="$1:$2"; shift 2
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \

@@ -70,14 +70,8 @@ object Cli {
       (acc, stage) => runStage(spark, acc, stage))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("cli",
+      master = Some(sys.env.getOrElse("SPARK_MASTER", "local[4]")))
     run(spark, args.mkString(" "))
     spark.stop()
   }

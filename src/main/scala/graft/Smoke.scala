@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner for the driver's t1 check: SparkEntry.entry must
   * return >0 rows at sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("smoke", cores = "4")
     // no args: the driver's flagship smoke; with args: run the named
     // queries at sf0.01 (local debugging of a single queries() entry)
     if (args.isEmpty) {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,37 +8,19 @@ object Verify {
     // optional extra args: dump only the named queries (local subset
     // re-verification; the driver passes none and gets the full suite)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER overrides the single-JVM default — the
     // multi-process portability smoke runs the same contract on
     // local-cluster[n,c,mem] (real executor JVMs: real closure
     // serialization, conf shipping, and disk-shuffle paths). That mode
     // needs the library on the EXECUTOR classpath: pass the packaged
     // jar via SPARK_GRAFT_JARS (sbt package).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => builder.config("spark.jars", j))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional conf overrides (same pattern as Profile): lets the forced-gate
-    // oracle run produce all DuckDB hashes with the salted/two-phase branches
-    // a 100x deployment would execute, e.g.
+    // SPARK_GRAFT_CONF (applied by Harness.session) lets the forced-gate
+    // oracle run produce all DuckDB hashes with the salted/two-phase
+    // branches a 100x deployment would execute, e.g.
     //   SPARK_GRAFT_CONF="spark.graft.sizing.force=salted"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').map(_.trim)
-      .filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) =>
-            spark.conf.set(k, v)
-            println(s"[verify] conf $k=$v")
-          case _ =>
-            System.err.println(s"[verify] ignoring malformed SPARK_GRAFT_CONF segment '$kv' (want k=v)")
-        }
-      })
+    val spark = Harness.session("verify",
+      master = sys.env.get("SPARK_GRAFT_MASTER"),
+      extra = sys.env.get("SPARK_GRAFT_JARS").map("spark.jars" -> _).toMap)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }

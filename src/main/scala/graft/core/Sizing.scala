@@ -29,14 +29,12 @@ object Sizing {
     * 2.0-2.9x at 158 MB, 3.6-4.9x at 627 MB; plain won 2-6x at the
     * natural sf0.1 shape (13-17 MB, round-2 rows). 32 MB sits in the
     * measured bracket (17, 43) and keeps every sf0.1 bench input
-    * (<= 14 MB leaf bytes) on the plain path it measured fastest on. */
-  val saltedInputThreshold: Long = 32L << 20
-
-  /** Same bar for the window-scan nearest sweep: the round-3 guess of
-    * 1 GB ("per-row cost is a single comparison") measured WRONG —
+    * (<= 14 MB leaf bytes) on the plain path it measured fastest on.
+    * The window-scan nearest sweep uses the same bar: the round-3 guess
+    * of 1 GB ("per-row cost is a single comparison") measured WRONG —
     * salted nearest wins 1.97x already at 43 MB and 2.1x at 627 MB on
-    * the hot-key table, so the sweep follows the same 32 MB crossover. */
-  val saltedSweepThreshold: Long = 32L << 20
+    * the hot-key table. */
+  val saltedInputThreshold: Long = 32L << 20
 
   /** Last auto-switch decision: (operator, leafBytes, wentSalted).
     * Test/debug observability only. */
@@ -232,10 +230,4 @@ object Sizing {
       if (forced().isDefined) " (FORCED)" else "")
     big
   }
-
-  def bigInput(dfs: DataFrame*): Boolean =
-    bigInputOver(saltedInputThreshold, dfs: _*)
-
-  def bigInputOver(threshold: Long, dfs: DataFrame*): Boolean =
-    leafScanBytes(dfs: _*) > BigInt(threshold)
 }

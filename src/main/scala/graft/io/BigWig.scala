@@ -290,16 +290,6 @@ object BigWig {
     var out: java.io.RandomAccessFile = null
     var ok = false
     var secAgg: DataFrame = null
-    // stage marks (GRAFT_BW_DEBUG=1): the write is a driver-paced
-    // multi-job pipeline, so wall attribution needs in-situ marks —
-    // the GRAFT_CC_DEBUG pattern
-    val dbg = sys.env.contains("GRAFT_BW_DEBUG")
-    var tMark = System.nanoTime()
-    def mark(what: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[bw] $what: ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
-    }
     try {
       // ONE pass over the input for header + sections (round-18,
       // VERDICT r17 item #5, §2.4 share one computation): the per-chrom
@@ -330,7 +320,6 @@ object BigWig {
       val maxEnds = secAgg.groupBy(col(Chrom))
         .agg(max(col("_semax")).cast("long"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      mark("secAgg+maxEnds collect")
       val names = maxEnds.keys.toSeq.sortBy(n => graft.expr.ExprKernels
         .natsortKey(org.apache.spark.unsafe.types.UTF8String.fromString(n)).toString)
       val sizes = names.map(c => chromSizes.getOrElse(c, maxEnds(c)))
@@ -470,7 +459,6 @@ object BigWig {
         sumSq += r.getDouble(7)
       }
 
-      mark("sections drain")
       // free the run table before the zoom pass re-reads the input —
       // at scale the two cached frames together would double storage
       secAgg.unpersist()
@@ -478,7 +466,6 @@ object BigWig {
       // ---- R-tree index over the data sections ----
       val fullIndexOff = writeRTree(out, leaves.toSeq, itemsPerSlot)
       val n = leaves.size
-      mark("main rtree")
 
       // ---- zoom levels (round-5): per-level fixed-width bucket
       // summaries so external display clients get real multi-resolution
@@ -603,7 +590,6 @@ object BigWig {
         finishLevel()
         // every run emits >= 1 bucket at every level, so a non-empty
         // input fills all zoomReds.size levels
-        mark("zoom drain")
         require(zoomHeaders.size == zoomReds.size,
           s"zoom levels written ${zoomHeaders.size} != planned ${zoomReds.size}")
       }

@@ -449,14 +449,9 @@ object Dedup {
     // is read back exactly twice (census + split/cold sort), so pinning
     // it in the heap buys little and competes with execution memory at
     // soak scale (the 4M→8M wall grew ~3x on a 2x doubling with the
-    // heap-resident default). The lineage truncation localCheckpoint
-    // provides is kept. A/B control: spark.graft.simhash.pendingStorage
-    // =memory restores the old level (BASELINE.md curve rows).
-    val pendingLevel =
-      if (org.apache.spark.sql.internal.SQLConf.get.getConfString(
-          "spark.graft.simhash.pendingStorage", "disk") == "memory")
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      else org.apache.spark.storage.StorageLevel.DISK_ONLY
+    // heap-resident default; BASELINE.md round11-simhash-diskonly). The
+    // lineage truncation localCheckpoint provides is kept.
+    val pendingLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY
     // level-1 stream: one row per (distinct fingerprint, band chunk);
     // checkpointed per level — each stream feeds the census, the cold
     // pair join, and the next level's hot join.
@@ -467,26 +462,17 @@ object Dedup {
       .localCheckpoint(true, pendingLevel)
     var remBits = bits - bits / bands
     val coldParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // GRAFT_SIMHASH_DEBUG: per-level census prints for soak observation
-    // (the GRAFT_CC_DEBUG pattern) — extra count() jobs, so env-gated
-    val debug = sys.env.contains("GRAFT_SIMHASH_DEBUG")
-    var level = 0
     var done = false
     while (!done) {
-      level += 1
       if (remBits <= maxHamming) {
         // nothing splittable remains: agreement on every key chunk
         // leaves <= maxHamming differing bits, so every pair still
         // sharing a bucket is a true near-dup — pair them all
-        if (debug) println(s"[graft.simhash] level=$level remBits=$remBits " +
-          s"pendingRows=${pending.count()} -> residual (pair all)")
         coldParts += pending
         done = true
       } else {
         val hotKeys = pending.groupBy(col("key")).agg(count(lit(1)).as("_n"))
           .where(col("_n") > maxBucket).select(col("key")).localCheckpoint()
-        if (debug) println(s"[graft.simhash] level=$level remBits=$remBits " +
-          s"pendingRows=${pending.count()} hotKeys=${hotKeys.count()}")
         if (hotKeys.isEmpty) {
           coldParts += pending
           done = true
@@ -560,13 +546,6 @@ object Dedup {
     // snapshots) are released by the ContextCleaner when their RDD
     // references are GC'd, not eagerly — bounded by the graph size
     // times the round count, tiny relative to the corpus.
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    var tMark = System.nanoTime()
-    def mark(what: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[cc] $what: ${(now - tMark) / 1e9}%.2fs")
-      tMark = now
-    }
     // localCheckpoint, NOT persist: a persisted plan pins its exchange
     // layout (AQE may not re-coalesce cached plans), which ran the whole
     // upstream pair pipeline at full shuffle width — measured 8-9 s vs
@@ -577,7 +556,6 @@ object Dedup {
     val p0 = pairs.select(col(aCol).as("s"), col(bCol).as("d"))
       .localCheckpoint()
     val nPairs = p0.count()
-    mark(s"pairs ($nPairs)")
     if (nPairs == 0) {
       return p0.select(col("s").as("id"), col("s").as("comp"))
     }
@@ -607,12 +585,10 @@ object Dedup {
         .where(col("s").isNotNull && col("d").isNotNull && col("s") =!= col("d"))
         .distinct()
         .localCheckpoint()
-      mark("edges")
       var labels = edges.groupBy(col("s").as("id"))
         .agg(min(col("d")).as("_m"))
         .select(col("id"), least(col("id"), col("_m")).as("comp"))
         .localCheckpoint()
-      mark("init labels")
       var iter = 0
       var converged = false
       while (!converged && iter < maxIter) {
@@ -635,7 +611,6 @@ object Dedup {
         converged = next.where(col("comp") =!= col("_oc")).isEmpty
         labels = next.select(col("id"), col("comp"))
         iter += 1
-        mark(s"iter $iter (converged=$converged)")
       }
       if (!converged)
         // surface truncation loudly: a maxIter-capped run can hand the

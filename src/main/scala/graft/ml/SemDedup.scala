@@ -136,34 +136,6 @@ object SemDedup {
                               pnk: Column, tPct: Int): Column =
     graft.expr.Exprs.cosine_kill_gate_pre(q, qk, pn, pnk, tPct)
 
-  /** Vector-width selector (round-18 narrowing, guide §2.3 narrower
-    * types) — "int" (default: quantized components ride every shuffle
-    * and the quadratic kill join at 4 bytes each; bit-equal verdicts,
-    * OpsSpec pins it) or "long" (the historical spelling, kept as the
-    * interleaved-A/B control). Serve paths against a PERSISTED index
-    * ignore this and follow the stored schema ([[SemIndex]]). */
-  private[ml] def intWidthConf(df: DataFrame): Boolean =
-    df.sparkSession.conf.get("spark.graft.semdedup.vecWidth", "int") match {
-      case "int" => true
-      case "long" => false
-      case other =>
-        throw new IllegalArgumentException(
-          s"spark.graft.semdedup.vecWidth must be int|long, got '$other'")
-    }
-
-  /** Kill-join shape selector — "semi" (default) or "inner" (the
-    * round-16 inner-join + distinct spelling, kept ONLY as the
-    * interleaved-A/B control; both produce identical verdicts). */
-  private def killJoinConf(df: DataFrame): String =
-    df.sparkSession.conf.get("spark.graft.semdedup.killJoin", "semi") match {
-      case s @ ("semi" | "inner") => s
-      case other =>
-        // reject typos loudly (the verifyArrays norm): an A/B hook that
-        // silently falls back to the default measures the WRONG leg
-        throw new IllegalArgumentException(
-          s"spark.graft.semdedup.killJoin must be semi|inner, got '$other'")
-    }
-
   /** 0-based rank band of a 1-based rank for band width `bandL`:
     * floor((rn - 1) / bandRows) — integer-exact at any rank (the
     * numerator is reduced to an exact multiple before the double
@@ -206,12 +178,14 @@ object SemDedup {
 
   /** The full audit frame behind [[semanticDedup]], keeping the
     * internal columns a persisted survivor index needs: (idCol, _cell,
-    * _cd, _q quantized vector, _n2 squared norm, kept). */
+    * _cd, _q quantized vector, _n2 squared norm, kept). `_q` is
+    * array<int>; `int32 = false` only matches an index an older build
+    * stored as array<bigint> ([[SemIndex.appendNew]]). */
   private[ml] def audit(df: DataFrame, centroids: Array[Array[Long]],
                         thresholdPct: Int, idCol: String, vecCol: String,
                         mode: String, keep: String, scale: Int,
                         bandRows: Int,
-                        int32Override: Option[Boolean] = None): DataFrame = {
+                        int32: Boolean = true): DataFrame = {
     require(thresholdPct >= 1 && thresholdPct <= 100,
       s"thresholdPct must be in [1, 100], got $thresholdPct")
     require(mode == "pairwise" || mode == "anchor",
@@ -226,7 +200,6 @@ object SemDedup {
     // (the gate's n2 > 0 guards), so they come out kept — a second
     // scan + union for the invalid branch would re-read the corpus at
     // exactly the scale where fanOutSmallScan is a no-op (review find)
-    val int32 = int32Override.getOrElse(intWidthConf(df))
     val validV = col("_q").isNotNull && size(col("_q")) > 0
     val base = graft.core.Sizing.fanOutSmallScan(df).select(
         col(idCol).cast("long").as(idCol),
@@ -303,26 +276,12 @@ object SemDedup {
           explode(sequence(bandOf(col("_rn"), bandL),
             bandOf(col("_cnt"), bandL))).as("_jb"))
       val cand = withCnt.withColumn("_band", bandOf(col("_rn"), bandL))
-      // A/B hook (round-17 bench-trust norm): `inner` restores the
-      // round-16 inner-join + distinct spelling verbatim so the semi
-      // rewrite can be adjudicated INTERLEAVED in one session (the 8M
-      // legs swing ±20% across sessions on this host generation —
-      // cross-session walls cannot decide a lever this size). Same
-      // verdicts by construction; default stays `semi`.
-      if (killJoinConf(df) == "inner")
-        cand.join(killers,
-            col("_cell") === col("_cellk") && col("_band") === col("_jb"))
-          .where(col("_rk") < col("_rn") &&
-            killGatePre(col("_q"), col("_qk"), col("_pn"), col("_pnk"),
-              thresholdPct))
-          .select(col(idCol)).distinct()
-      else
-        cand.join(killers,
-          col("_cell") === col("_cellk") && col("_band") === col("_jb") &&
-            col("_rk") < col("_rn") &&
-            killGatePre(col("_q"), col("_qk"), col("_pn"), col("_pnk"),
-              thresholdPct),
-          "left_semi")
+      cand.join(killers,
+        col("_cell") === col("_cellk") && col("_band") === col("_jb") &&
+          col("_rk") < col("_rn") &&
+          killGatePre(col("_q"), col("_qk"), col("_pn"), col("_pnk"),
+            thresholdPct),
+        "left_semi")
     })
       .select(col(idCol))
       .withColumn("_dup", lit(true))
@@ -396,22 +355,22 @@ object SemDedup {
     // survivor corpus persist a [[SemIndex]] (writeText) and serve with
     // [[SemIndex.filterTextStream]] instead — same plan property plus
     // catalog durability and append/takedown lifecycle.
-    val i32 = intWidthConf(refDocs)
     val refPinned = prepRefs(
       TextOps.hashedNgramEmbedding(refDocs.select(col(textCol)),
         textCol, "_emb", n, dim, hash = hash),
-      centroids, "_emb", scale, i32).localCheckpoint()
+      centroids, "_emb", scale).localCheckpoint()
     filterAgainst(
       prepProbe(
         TextOps.hashedNgramEmbedding(stream.select(col(idCol), col(textCol)),
           textCol, "_emb", n, dim, hash = hash),
-        centroids, idCol, "_emb", scale, i32),
+        centroids, idCol, "_emb", scale),
       refPinned, thresholdPct, idCol)
   }
 
-  /** The probe-side preparation shared by the stream/batch serve paths:
-    * (idCol, _q quantized, _cell with the audit convention's -1 for
-    * NULL/empty vectors, _n2). */
+  /** The probe-side preparation shared by the stream/batch serve paths
+    * and [[SemIndex]]'s probes: (idCol, _q quantized, _cell with the
+    * audit convention's -1 for NULL/empty vectors, _n2). `int32 = false`
+    * matches an index an older build stored as array<bigint>. */
   private[ml] def prepProbe(df: DataFrame, centroids: Array[Array[Long]],
                             idCol: String, vecCol: String, scale: Int,
                             int32: Boolean = true): DataFrame = {
@@ -427,9 +386,8 @@ object SemDedup {
   /** The reference-side preparation: quantize, prune zero-norm rows
     * (inert killers), assign cells. */
   private[ml] def prepRefs(refs: DataFrame, centroids: Array[Array[Long]],
-                           vecCol: String, scale: Int,
-                           int32: Boolean = true): DataFrame =
-    refs.select(Similarity.quantizeW(col(vecCol), scale, int32).as("_qr"))
+                           vecCol: String, scale: Int): DataFrame =
+    refs.select(Similarity.quantizeInt(col(vecCol), scale).as("_qr"))
       .withColumn("_n2r", Similarity.dotLong(col("_qr"), col("_qr")))
       .where(col("_n2r") > 0)
       .withColumn("_cellr",
@@ -452,8 +410,7 @@ object SemDedup {
                            scale: Int = 1000): DataFrame = {
     require(thresholdPct >= 1 && thresholdPct <= 100,
       s"thresholdPct must be in [1, 100], got $thresholdPct")
-    val i32 = intWidthConf(refs)
-    filterAgainst(prepProbe(stream, centroids, idCol, vecCol, scale, i32),
-      prepRefs(refs, centroids, vecCol, scale, i32), thresholdPct, idCol)
+    filterAgainst(prepProbe(stream, centroids, idCol, vecCol, scale),
+      prepRefs(refs, centroids, vecCol, scale), thresholdPct, idCol)
   }
 }

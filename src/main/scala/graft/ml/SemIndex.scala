@@ -158,26 +158,14 @@ object SemIndex {
     * narrowing). The STORED schema is the source of truth for every
     * serve/append path: the probe side quantizes to the SAME width, so
     * the kill gate always compares same-width vectors (the fast
-    * kernels) and an index written under either width — or by an older
-    * build — serves correctly. */
+    * kernels), and an index an older build wrote as array<bigint>
+    * serves and appends correctly. */
   private def storedIntWidth(spark: SparkSession, table: String): Boolean =
     spark.table(table).schema("_q").dataType match {
       case org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.IntegerType, _) => true
       case _ => false
     }
-
-  private def probePrep(queries: DataFrame, centroids: Array[Array[Long]],
-                        idCol: String, vecCol: String,
-                        scale: Int, int32: Boolean): DataFrame = {
-    val validV = col("_q").isNotNull && size(col("_q")) > 0
-    queries.select(col(idCol).cast("long").as(idCol),
-        Similarity.quantizeW(col(vecCol), scale, int32).as("_q"))
-      .withColumn("_cell", when(validV,
-        element_at(Similarity.nearestCells(col("_q"), centroids, 1), 1))
-        .otherwise(lit(-1L)))
-      .withColumn("_n2", Similarity.dotLong(col("_q"), col("_q")))
-  }
 
   private def killCond(tPct: Int): Column =
     col("_cell") === col("_cellr") &&
@@ -207,15 +195,15 @@ object SemIndex {
     val mode = props.getOrElse("graft.sem.mode", "pairwise")
     val keep = props.getOrElse("graft.sem.keep", "edge")
     val i32 = storedIntWidth(spark, table)
-    val freshIds = probePrep(df, cm, idCol, vecCol, sc, i32)
+    val freshIds = SemDedup.prepProbe(df, cm, idCol, vecCol, sc, i32)
       .join(idxSide(spark, table), killCond(tPct), "left_anti")
       .select(col(idCol))
     val fresh = df.select(col(idCol).cast("long").as(idCol), col(vecCol))
       .join(freshIds, Seq(idCol))
     // the appended rows must match the table's stored width (insertInto
-    // is positional): override the conf with the schema's own spelling
+    // is positional)
     SemDedup.audit(fresh, cm, tPct, idCol, vecCol, mode, keep, sc,
-        bandRows, int32Override = Some(i32))
+        bandRows, int32 = i32)
       .where(col("kept") && col("_n2") > 0)
       .select(col(idCol), col("_q"), col("_n2"), col("_cell"))
       .write.mode("append")
@@ -251,7 +239,7 @@ object SemIndex {
     val sc = AnnIndex.storedScale(spark, table)
     AnnIndex.validateSpec(spark, table, cm, sc)
     val tPct = storedThresholdPct(spark, table)
-    val prep = probePrep(graft.core.Sizing.fanOutSmallScan(queries),
+    val prep = SemDedup.prepProbe(graft.core.Sizing.fanOutSmallScan(queries),
       cm, idCol, vecCol, sc, storedIntWidth(spark, table))
     val hits = prep.join(idxSide(spark, table), killCond(tPct), "left_semi")
       .select(col(idCol)).withColumn("_h", lit(true))
@@ -274,7 +262,8 @@ object SemIndex {
     val sc = AnnIndex.storedScale(spark, table)
     AnnIndex.validateSpec(spark, table, cm, sc)
     val tPct = storedThresholdPct(spark, table)
-    probePrep(stream, cm, idCol, vecCol, sc, storedIntWidth(spark, table))
+    SemDedup.prepProbe(stream, cm, idCol, vecCol, sc,
+        storedIntWidth(spark, table))
       .join(idxSide(spark, table), killCond(tPct), "left_anti")
       .select(col(idCol), col("_cell").as("cell"))
   }

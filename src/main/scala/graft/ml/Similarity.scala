@@ -36,9 +36,9 @@ object Similarity {
   def quantizeInt(vec: Column, scale: Int = 1000): Column =
     transform(vec, x => floor(x.cast("double") * scale).cast("int"))
 
-  /** Width-dispatching quantize: int32 components when `int32` (the
-    * semdedup family's default via spark.graft.semdedup.vecWidth),
-    * the historical array<long> otherwise. */
+  /** Width-dispatching quantize: int32 components when `int32` (what
+    * every fresh semdedup write stores), the historical array<long>
+    * otherwise (persisted indexes written by older builds). */
   private[ml] def quantizeW(vec: Column, scale: Int, int32: Boolean): Column =
     if (int32) quantizeInt(vec, scale) else quantize(vec, scale)
 

@@ -19,24 +19,14 @@ object Coverage {
     * for big ones (one hot chromosome = one task). Above the shared
     * input-size threshold the salted two-phase prefix sum takes over.
     * Measured at local[32]/sf0.1: plain rleBinary 4.7 s vs salted 2.5 s;
-    * at sf0.01 plain wins by stage count. */
-  /** Conf key for the rle plain->salted crossover (leaf scan bytes),
-    * default the shared 32 MB input threshold. The round-8 A/B
-    * (BASELINE.md "q87 decomposition") tested forcing the salted
-    * two-phase prefix sum BELOW the gate on q87's 14 MB / 3-key shape
-    * and it LOST (steady 5.9-7.0 s vs plain 3.0-3.7 s at local[32]):
-    * with only ~40k breakpoints the salted plan's two extra shuffles
-    * (bin-totals rollup + offsets join) cost more than the 3-task
-    * serialization it removes. The threshold stays shared; the conf
-    * exists for cluster-shape tuning. */
-  val RleThresholdKey = "spark.graft.rle.autoThreshold"
-
-  private def bigInput(dfs: DataFrame*): Boolean = {
-    val thr = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(RleThresholdKey,
-        graft.core.Sizing.saltedInputThreshold.toString).toLong
-    graft.core.Sizing.decide("rle", thr, dfs: _*)
-  }
+    * at sf0.01 plain wins by stage count. The round-8 A/B (BASELINE.md
+    * "q87 decomposition") forced the salted plan BELOW the gate on
+    * q87's 14 MB / 3-key shape and it LOST (steady 5.9-7.0 s vs plain
+    * 3.0-3.7 s at local[32]): with ~40k breakpoints its two extra
+    * shuffles cost more than the 3-task serialization they remove. */
+  private def bigInput(dfs: DataFrame*): Boolean =
+    graft.core.Sizing.decide("rle", graft.core.Sizing.saltedInputThreshold,
+      dfs: _*)
 
   /** Runs of constant coverage between min(Start) and max(End) per key.
     * valueCol: weight column (default 1 per interval). Zero-coverage runs

@@ -153,7 +153,7 @@ object NearestK {
       case Some(false) => None
       case None =>
         if (graft.core.Sizing.decide("nearestSweep",
-              graft.core.Sizing.saltedSweepThreshold, left, right))
+              graft.core.Sizing.saltedInputThreshold, left, right))
           graft.core.Sizing.saltPlan(left, keys)
         else None
     }

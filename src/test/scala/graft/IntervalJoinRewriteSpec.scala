@@ -268,6 +268,9 @@ class IntervalJoinRewriteSpec extends AnyFunSuite {
       ("c0", Some(5L), None, 3L),      // null End
       ("c1", Some(100L), Some(140L), 4L)
     ).toDF(Chrom, Start, End, "id")
+      // a MAP payload: semi/anti collapse bin copies grouping by the rid
+      // and the left row, so the map is a grouping key
+      .withColumn("m", map(lit("id"), col("id")))
     val r = Seq(
       (null.asInstanceOf[String], 0L, 50L, 10L),
       ("c0", 30L, 35L, 11L),
@@ -282,6 +285,13 @@ class IntervalJoinRewriteSpec extends AnyFunSuite {
         spark.experimental.extraOptimizations :+ IntervalJoinRewrite
       spark.conf.set("spark.graft.join.strategy", "binned")
       try {
+        val plan = joined.queryExecution.optimizedPlan
+        assert(plan.toString.contains("_graft_bin_"), s"$jt rewrite did not fire:\n$plan")
+        if (jt != "inner") assert(plan.collect {
+          case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+            a.groupingExpressions.exists(
+              _.dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
+        }.contains(true), s"$jt: no MAP grouping key:\n$plan")
         val binned = joined.collect().map(_.toSeq.toList)
           .groupBy(identity).view.mapValues(_.size).toMap
         assert(binned == naive, s"$jt mismatch: binned=$binned naive=$naive")

@@ -2274,60 +2274,43 @@ class OpsSpec extends AnyFunSuite {
     assert(tie.getBoolean(0) && !tie.getBoolean(1))
   }
 
-  test("semanticDedup vecWidth int and long produce identical audit " +
-    "frames in every mode x keep (round-18 narrowing A/B hook), and a " +
-    "typo'd width fails loudly") {
-    val cm = graft.ml.Similarity.ivfCentroids(8, 8)
-    def run(width: String, mode: String, keep: String) = {
-      spark.conf.set("spark.graft.semdedup.vecWidth", width)
-      try graft.ml.SemDedup.semanticDedup(semCorpus, cm, 60,
-          mode = mode, keep = keep)
-        .orderBy("vec_id").collect().map(_.toSeq).toSeq
-      finally spark.conf.unset("spark.graft.semdedup.vecWidth")
-    }
-    for (mode <- Seq("pairwise", "anchor"); keep <- Seq("edge", "central")) {
-      assert(run("int", mode, keep) == run("long", mode, keep),
-        s"width int vs long diverge in mode=$mode keep=$keep")
-    }
-    spark.conf.set("spark.graft.semdedup.vecWidth", "Int32")
-    try intercept[IllegalArgumentException] {
-      graft.ml.SemDedup.semanticDedup(semCorpus, cm, 60).collect()
-    } finally spark.conf.unset("spark.graft.semdedup.vecWidth")
-  }
-
   test("SemIndex serve width follows the STORED schema: an index " +
     "written under either vecWidth probes identically, and appendNew " +
     "matches the table's own spelling (round-18 narrowing)") {
+    import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
     val cm = graft.ml.Similarity.ivfCentroids(8, 8)
     val build = semCorpus.where(col("vec_id") % 3 =!= 0)
     val extra = semCorpus.where(col("vec_id") % 3 === 1)
     val queries = semCorpus.where(col("vec_id") % 3 === 0)
-    def lifecycle(width: String, table: String) = {
-      spark.conf.set("spark.graft.semdedup.vecWidth", width)
-      try {
-        graft.ml.SemIndex.write(build, table, cm, thresholdPct = 60)
-        // flip the conf to the OTHER width before appendNew: the append
-        // must follow the stored schema, not the session conf
-        spark.conf.set("spark.graft.semdedup.vecWidth",
-          if (width == "int") "long" else "int")
-        graft.ml.SemIndex.appendNew(extra, table)
-        graft.ml.SemIndex.probe(spark, table, queries)
-          .orderBy("vec_id").collect().map(_.toSeq).toSeq
-      } finally spark.conf.unset("spark.graft.semdedup.vecWidth")
+    graft.ml.SemIndex.write(build, "semwidth_int", cm, thresholdPct = 60)
+    // the same survivors as an older build stored them: `_q` as
+    // array<bigint>, same bucket spec, same graft.* properties
+    spark.table("semwidth_int")
+      .withColumn("_q", col("_q").cast(ArrayType(LongType)))
+      .repartition(8, col("_cell"))
+      .write.format("parquet").bucketBy(8, "_cell").sortBy("_cell", "vec_id")
+      .mode("overwrite").saveAsTable("semwidth_long")
+    val props = spark.sql("SHOW TBLPROPERTIES semwidth_int").collect()
+      .map(r => r.getString(0) -> r.getString(1))
+      .collect { case (k, v) if k.startsWith("graft.") => s"'$k'='$v'" }
+    spark.sql(s"ALTER TABLE semwidth_long SET TBLPROPERTIES(${props.mkString(",")})")
+    def dataType(table: String) =
+      spark.table(table).schema("_q").dataType.asInstanceOf[ArrayType].elementType
+    assert(dataType("semwidth_int") == IntegerType)
+    assert(dataType("semwidth_long") == LongType)
+    def lifecycle(table: String) = {
+      graft.ml.SemIndex.appendNew(extra, table)
+      graft.ml.SemIndex.probe(spark, table, queries)
+        .orderBy("vec_id").collect().map(_.toSeq).toSeq
     }
-    val a = lifecycle("int", "semwidth_int")
-    val b = lifecycle("long", "semwidth_long")
-    assert(a == b, "int-written and long-written indexes probe differently")
-    // the stored schemas really are the two spellings
-    import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
-    assert(spark.table("semwidth_int").schema("_q").dataType ==
-      ArrayType(IntegerType, containsNull = true) ||
-      spark.table("semwidth_int").schema("_q").dataType ==
-        ArrayType(IntegerType, containsNull = false))
-    assert(spark.table("semwidth_long").schema("_q").dataType ==
-      ArrayType(LongType, containsNull = true) ||
-      spark.table("semwidth_long").schema("_q").dataType ==
-        ArrayType(LongType, containsNull = false))
+    val a = lifecycle("semwidth_int")
+    val b = lifecycle("semwidth_long")
+    assert(a == b, "int-stored and long-stored indexes probe differently")
+    // appendNew kept each table's own spelling
+    assert(dataType("semwidth_int") == IntegerType)
+    assert(dataType("semwidth_long") == LongType)
+    assert(spark.table("semwidth_int").count() ==
+      spark.table("semwidth_long").count())
     spark.sql("DROP TABLE IF EXISTS semwidth_int")
     spark.sql("DROP TABLE IF EXISTS semwidth_long")
   }

@@ -136,10 +136,10 @@ class PlanContractSpec extends AnyFunSuite {
     // final one; both must resolve to the plain path at sf0.001
     val (op, bytes, salted) = graft.core.Sizing.lastDecision.get()
     assert(op == "nearestSweep" || op == "rangejoin/auto", op)
-    assert(bytes > 0 && bytes < graft.core.Sizing.saltedSweepThreshold)
+    assert(bytes > 0 && bytes < graft.core.Sizing.saltedInputThreshold)
     assert(!salted, s"sf0.001 leaf scans ($bytes B) must take the plain sweep")
     assert(!graft.core.Sizing.decide("nearestSweep",
-      graft.core.Sizing.saltedSweepThreshold, l, r))
+      graft.core.Sizing.saltedInputThreshold, l, r))
   }
 
   test("sizing gate reads LEAF scan bytes, stable under wide/narrow projections") {
