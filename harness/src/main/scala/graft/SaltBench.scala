@@ -99,6 +99,33 @@ object SaltBench {
       graft.core.Sizing.saltedInputThreshold, df)
     println(s"[saltbench] gate(${graft.core.Sizing.saltedInputThreshold >> 20}MB)=$fire")
 
+    // the salted side's mega-bin: the dispatchers' span-scaled bin, with
+    // the narrow-span and many-keys demotions off (--manykeys measures
+    // the salted plan the demotion would skip)
+    val bin = graft.core.Sizing.saltPlan(df).getOrElse(16384L)
+    // nearest's sweep choice is made inside nearestK: force the gate
+    // while the plan is built and run
+    def under[T](mode: String)(body: => T): T = {
+      spark.conf.set(graft.core.Sizing.ForceKey, mode)
+      try body finally spark.conf.unset(graft.core.Sizing.ForceKey)
+    }
+    val right = Tables.gr2(spark, sfDir)
+      .withColumn("_len", (col(End) - col(Start)) % 5000L + 1L)
+      .withColumn(Start, col(Start) * 400L)
+      .withColumn(End, col(Start) + col("_len"))
+      .drop("_len")
+    def merge(saltBin: Option[Long]) = saltBin.fold(
+      graft.ops.UnaryOps.mergePlain(df, Seq(Chrom)))(
+      graft.ops.UnaryOps.mergeSalted(df, Seq(Chrom), 0, _))
+    // group_cumsum: per-key running sum, row_id tie-break for total order
+    def cumsum(saltBin: Option[Long]) = graft.ops.UnaryOps.groupCumsumSweep(df,
+      Seq(Chrom), useStrand = true, "cumStart", "cumEnd", Seq(col(RowId)), saltBin)
+    def rle(saltBin: Option[Long]) = graft.ops.Coverage.rleRuns(
+      Seq(df -> Seq(lit(1.0))), Seq(Chrom), Seq("Score"), saltBin)
+    // nearest (k=1, overlaps excluded to hit the sweep path on both sides)
+    def nearest() = graft.ops.NearestK.nearestK(df, right, Seq(Chrom), 1,
+      excludeOverlaps = true)
+
     // --check: at-scale equivalence — the plain==salted property tests
     // run on small fixtures; this compares full-row checksums at a size
     // where the salted dispatch actually fires
@@ -108,30 +135,16 @@ object SaltBench {
         val r = d.select(count(lit(1)), bit_xor(h)).head()
         (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
       }
-      val bin = graft.core.Sizing.autoSaltBin(df)
-      val mp = sig(graft.ops.UnaryOps.mergePlain(df, Seq(Chrom)))
-      val ms = sig(graft.ops.UnaryOps.mergeSalted(df, Seq(Chrom), saltBin = bin))
-      println(s"[saltcheck] merge plain=$mp salted=$ms match=${mp == ms}")
-      val cp = sig(graft.ops.UnaryOps.groupCumsumPlain(df, Seq(Chrom),
-        tieBreak = Seq(col(RowId))))
-      val cs = sig(graft.ops.UnaryOps.groupCumsumSalted(df, Seq(Chrom),
-        tieBreak = Seq(col(RowId)), saltBin = bin))
-      println(s"[saltcheck] cumsum plain=$cp salted=$cs match=${cp == cs}")
-      val rp = sig(graft.ops.Coverage.toRlePlain(df, Seq(Chrom)))
-      val rs2 = sig(graft.ops.Coverage.toRleSalted(df, Seq(Chrom), saltBin = bin))
-      println(s"[saltcheck] rle plain=$rp salted=$rs2 match=${rp == rs2}")
-      val nRight = Tables.gr2(spark, sfDir)
-        .withColumn("_len", (col(End) - col(Start)) % 5000L + 1L)
-        .withColumn(Start, col(Start) * 400L)
-        .withColumn(End, col(Start) + col("_len"))
-        .drop("_len")
-      val np = sig(graft.ops.NearestK.nearestK(df, nRight, Seq(Chrom), 1,
-        excludeOverlaps = true, saltedHint = Some(false)))
-      val ns = sig(graft.ops.NearestK.nearestK(df, nRight, Seq(Chrom), 1,
-        excludeOverlaps = true, saltedHint = Some(true)))
-      println(s"[saltcheck] nearest plain=$np salted=$ns match=${np == ns}")
-      require(mp == ms && cp == cs && rp == rs2 && np == ns,
-        "salted output diverged at scale")
+      val matches = Seq[(String, Option[Long] => (Long, Long))](
+          "merge" -> (b => sig(merge(b))), "cumsum" -> (b => sig(cumsum(b))),
+          "rle" -> (b => sig(rle(b))),
+          "nearest" -> (b => under(if (b.isEmpty) "plain" else "salted")(sig(nearest()))))
+        .map { case (op, run) =>
+          val (p, s) = (run(None), run(Some(bin)))
+          println(s"[saltcheck] $op plain=$p salted=$s match=${p == s}")
+          p == s
+        }
+      require(matches.forall(identity), "salted output diverged at scale")
       spark.stop()
       return
     }
@@ -141,36 +154,12 @@ object SaltBench {
       println(f"""{"op":"$op","plain":$plainSec%.1f,"salted":$saltedSec%.1f,"speedup":${plainSec / saltedSec}%.2f}""")
 
     // merge: plain single window vs mega-bin split + two-level merge
-    report("merge",
-      time(reps)(graft.ops.UnaryOps.mergePlain(df, Seq(Chrom))),
-      time(reps)(graft.ops.UnaryOps.mergeSalted(df, Seq(Chrom),
-        saltBin = graft.core.Sizing.autoSaltBin(df))))
-
-    // group_cumsum: per-key running sum, row_id tie-break for total order
-    report("cumsum",
-      time(reps)(graft.ops.UnaryOps.groupCumsumPlain(df, Seq(Chrom),
-        tieBreak = Seq(col(RowId)))),
-      time(reps)(graft.ops.UnaryOps.groupCumsumSalted(df, Seq(Chrom),
-        tieBreak = Seq(col(RowId)),
-        saltBin = graft.core.Sizing.autoSaltBin(df))))
-
+    report("merge", time(reps)(merge(None)), time(reps)(merge(Some(bin))))
+    report("cumsum", time(reps)(cumsum(None)), time(reps)(cumsum(Some(bin))))
     // to_rle: depth runs per key
-    report("rle",
-      time(reps)(graft.ops.Coverage.toRlePlain(df, Seq(Chrom))),
-      time(reps)(graft.ops.Coverage.toRleSalted(df, Seq(Chrom),
-        saltBin = graft.core.Sizing.autoSaltBin(df))))
-
-    // nearest (k=1, overlaps excluded to hit the sweep path on both sides)
-    val right = Tables.gr2(spark, sfDir)
-      .withColumn("_len", (col(End) - col(Start)) % 5000L + 1L)
-      .withColumn(Start, col(Start) * 400L)
-      .withColumn(End, col(Start) + col("_len"))
-      .drop("_len")
-    report("nearest",
-      time(reps)(graft.ops.NearestK.nearestK(df, right, Seq(Chrom), 1,
-        excludeOverlaps = true, saltedHint = Some(false))),
-      time(reps)(graft.ops.NearestK.nearestK(df, right, Seq(Chrom), 1,
-        excludeOverlaps = true, saltedHint = Some(true))))
+    report("rle", time(reps)(rle(None)), time(reps)(rle(Some(bin))))
+    report("nearest", under("plain")(time(reps)(nearest())),
+      under("salted")(time(reps)(nearest())))
 
     spark.stop()
   }

@@ -122,26 +122,18 @@ object Sizing {
     }
   }
 
-  /** Sampled mega-bin width for the salted two-phase plans: aim for ~8
-    * bins per core over the sampled coordinate span, rounded up in
-    * powers of two, clamped to [16384, 2^24]. The statistics come from
-    * [[sideStats]] (one bounded take, memoized per plan), and only once
-    * a salted gate has already fired on a large input. Guards the
-    * measured narrow-span failure mode: a fixed 1M-wide bin over a
-    * ~1M-coordinate span handed the salted merge two bins of
-    * parallelism and it LOST 0.78x at 609 MB (BASELINE.md "salted
-    * crossover" notes). */
-  def autoSaltBin(df: DataFrame, sampleRows: Int = 100000): Long =
-    saltPlan(df, Nil, sampleRows).getOrElse(16384L)
-
   /** Span- and key-aware dispatch decision: Some(binWidth) = salt with
     * that mega-bin, None = stay on the plain per-key window regardless
     * of input size, because the sample shows the split cannot pay:
     *
     *  - NARROW SPAN: fewer than ~4 floor-width bins of coordinates —
-    *    the measured 0.78x failure mode (BASELINE.md).
+    *    a fixed 1M-wide bin over a ~1M-coordinate span handed the
+    *    salted merge two bins of parallelism and it LOST 0.78x at
+    *    609 MB (BASELINE.md "salted crossover" notes).
     *  - MANY BALANCED KEYS: [[SideStats.manyBalancedKeys]].
     *
+    * The bin aims for ~8 bins per core over the sampled coordinate
+    * span, rounded up in powers of two, clamped to [16384, 2^24].
     * Both signals come from [[sideStats]] of `df` with `keys`: one
     * bounded take, memoized per plan, so the length/span gates of the
     * same side and key set reuse it. */
@@ -230,4 +222,15 @@ object Sizing {
       if (forced().isDefined) " (FORCED)" else "")
     big
   }
+
+  /** The salt decision of every size-gated per-key sweep (merge,
+    * group_cumsum, RLE, the divide defrag, the nearest scan): the
+    * leaf-bytes gate over `gate` at [[saltedInputThreshold]], and only
+    * once it fires, the span/key refinement [[saltPlan]] of `sample`.
+    * Some(bin) = the salted plan over `bin`-wide mega-bins, None = the
+    * plain per-key window. */
+  def saltBin(op: String, sample: DataFrame, keys: Seq[String],
+              gate: DataFrame*): Option[Long] =
+    if (decide(op, saltedInputThreshold, gate: _*)) saltPlan(sample, keys)
+    else None
 }

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A PERSISTED semantic-dedup survivor index: the `kept` output of a
@@ -167,11 +167,6 @@ object SemIndex {
       case _ => false
     }
 
-  private def killCond(tPct: Int): Column =
-    col("_cell") === col("_cellr") &&
-      SemDedup.killGate(col("_q"), col("_qr"), col("_n2"), col("_n2r"),
-        tPct)
-
   /** Incremental curation: admit a new batch against the index. A
     * batch row is dropped iff it clears the gate against an EXISTING
     * survivor; the remainder then self-dedups under the build's own
@@ -195,8 +190,9 @@ object SemIndex {
     val mode = props.getOrElse("graft.sem.mode", "pairwise")
     val keep = props.getOrElse("graft.sem.keep", "edge")
     val i32 = storedIntWidth(spark, table)
-    val freshIds = SemDedup.prepProbe(df, cm, idCol, vecCol, sc, i32)
-      .join(idxSide(spark, table), killCond(tPct), "left_anti")
+    val freshIds = SemDedup.filterAgainst(
+        SemDedup.prepProbe(df, cm, idCol, vecCol, sc, i32),
+        idxSide(spark, table), tPct, idCol)
       .select(col(idCol))
     val fresh = df.select(col(idCol).cast("long").as(idCol), col(vecCol))
       .join(freshIds, Seq(idCol))
@@ -241,7 +237,7 @@ object SemIndex {
     val tPct = storedThresholdPct(spark, table)
     val prep = SemDedup.prepProbe(graft.core.Sizing.fanOutSmallScan(queries),
       cm, idCol, vecCol, sc, storedIntWidth(spark, table))
-    val hits = prep.join(idxSide(spark, table), killCond(tPct), "left_semi")
+    val hits = prep.join(idxSide(spark, table), SemDedup.killCond(tPct), "left_semi")
       .select(col(idCol)).withColumn("_h", lit(true))
     prep.select(col(idCol), col("_cell"))
       .join(hits, Seq(idCol), "left")
@@ -262,9 +258,9 @@ object SemIndex {
     val sc = AnnIndex.storedScale(spark, table)
     AnnIndex.validateSpec(spark, table, cm, sc)
     val tPct = storedThresholdPct(spark, table)
-    SemDedup.prepProbe(stream, cm, idCol, vecCol, sc,
-        storedIntWidth(spark, table))
-      .join(idxSide(spark, table), killCond(tPct), "left_anti")
-      .select(col(idCol), col("_cell").as("cell"))
+    SemDedup.filterAgainst(
+      SemDedup.prepProbe(stream, cm, idCol, vecCol, sc,
+        storedIntWidth(spark, table)),
+      idxSide(spark, table), tPct, idCol)
   }
 }

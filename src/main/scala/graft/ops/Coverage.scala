@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Cols
+import graft.core.{Cols, Sizing}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,128 +14,60 @@ import org.apache.spark.sql.functions._
 object Coverage {
   import Cols.{Start, End}
 
-  /** Auto-switch: the plain per-key window sweep serializes each key into
-    * one task — fine for small inputs (fewer stages wins), a straggler
-    * for big ones (one hot chromosome = one task). Above the shared
-    * input-size threshold the salted two-phase prefix sum takes over.
-    * Measured at local[32]/sf0.1: plain rleBinary 4.7 s vs salted 2.5 s;
-    * at sf0.01 plain wins by stage count. The round-8 A/B (BASELINE.md
-    * "q87 decomposition") forced the salted plan BELOW the gate on
-    * q87's 14 MB / 3-key shape and it LOST (steady 5.9-7.0 s vs plain
-    * 3.0-3.7 s at local[32]): with ~40k breakpoints its two extra
-    * shuffles cost more than the 3-task serialization they remove. */
-  private def bigInput(dfs: DataFrame*): Boolean =
-    graft.core.Sizing.decide("rle", graft.core.Sizing.saltedInputThreshold,
-      dfs: _*)
-
   /** Runs of constant coverage between min(Start) and max(End) per key.
     * valueCol: weight column (default 1 per interval). Zero-coverage runs
     * interior to the span are included; flanking zero runs are not.
-    * Dispatches to the salted two-phase sweep for large inputs (identical
-    * output — property-tested; exact for integer-valued weights). */
+    * Salted for large inputs (see [[rleRuns]]). */
   def toRle(df: DataFrame, keys: Seq[String],
             valueCol: Option[String] = None,
             scoreCol: String = "Score"): DataFrame =
-    if (bigInput(df))
-      graft.core.Sizing.saltPlan(df, keys) match {
-        case Some(bin) => toRleSalted(df, keys, valueCol, scoreCol, saltBin = bin)
-        case None      => toRlePlain(df, keys, valueCol, scoreCol)
-      }
-    else toRlePlain(df, keys, valueCol, scoreCol)
-
-  def toRlePlain(df: DataFrame, keys: Seq[String],
-                 valueCol: Option[String] = None,
-                 scoreCol: String = "Score"): DataFrame = {
-    val k = keys.map(col)
-    val v = valueCol.map(col).getOrElse(lit(1L)).cast("double")
-    val ev = df.select(k :+ explode(array(
-        struct(col(Start).as("_pos"), v.as("_d")),
-        struct(col(End).as("_pos"), (-v).as("_d")))).as("_ev"): _*)
-      .select(k ++ Seq(col("_ev._pos").as("_pos"), col("_ev._d").as("_d")): _*)
-      .groupBy(k :+ col("_pos"): _*).agg(sum(col("_d")).as("_d"))
-    val w = Window.partitionBy(k: _*).orderBy(col("_pos"))
-    ev.withColumn(scoreCol,
-        sum(col("_d")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("_next", lead(col("_pos"), 1).over(w))
-      .filter(col("_next").isNotNull)
-      .select(k ++ Seq(col("_pos").as(Start), col("_next").as(End), col(scoreCol)): _*)
-  }
-
-  /** Scalable RLE for hot keys (the 100 TB path, mirroring mergeSalted):
-    * the plain toRle window-partitions by key alone, so one huge
-    * chromosome = one sorted task. Classic two-phase distributed prefix
-    * sum instead: (1) per-(key, megabin) local prefix sums — parallelism
-    * = #bins; (2) per-key running offsets over the tiny bin-totals table;
-    * (3) join offsets back. Run ends crossing bin boundaries take the
-    * next non-empty bin's first breakpoint. Identical output to toRle
-    * (property-tested). */
-  def toRleSalted(df: DataFrame, keys: Seq[String],
-                  valueCol: Option[String] = None, scoreCol: String = "Score",
-                  saltBin: Long = 16384): DataFrame = {
-    val k = keys.map(col)
-    val v = valueCol.map(col).getOrElse(lit(1L)).cast("double")
-    val ev = df.select(k :+ explode(array(
-        struct(col(Start).as("_pos"), v.as("_d")),
-        struct(col(End).as("_pos"), (-v).as("_d")))).as("_ev"): _*)
-      .select(k ++ Seq(col("_ev._pos").as("_pos"), col("_ev._d").as("_d")): _*)
-      .groupBy(k :+ col("_pos"): _*).agg(sum(col("_d")).as("_d"))
-      .withColumn("_mb", floor(col("_pos").cast("double") / saltBin).cast("long"))
-    val wLoc = Window.partitionBy(k :+ col("_mb"): _*).orderBy(col("_pos"))
-    val local = ev
-      .withColumn("_loc", sum(col("_d")).over(
-        wLoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("_nextLoc", lead(col("_pos"), 1).over(wLoc))
-    val wBins = Window.partitionBy(k: _*).orderBy(col("_mb"))
-    val binInfo = ev.groupBy(k :+ col("_mb"): _*)
-      .agg(sum(col("_d")).as("_tot"), min(col("_pos")).as("_first"))
-      .withColumn("_off", coalesce(sum(col("_tot")).over(
-        wBins.rowsBetween(Window.unboundedPreceding, -1)), lit(0.0)))
-      .withColumn("_nextFirst", lead(col("_first"), 1).over(wBins))
-      .select(k ++ Seq(col("_mb"), col("_off"), col("_nextFirst")): _*)
-    local.join(binInfo, keys :+ "_mb")
-      .withColumn(scoreCol, col("_loc") + col("_off"))
-      .withColumn("_next", coalesce(col("_nextLoc"), col("_nextFirst")))
-      .filter(col("_next").isNotNull)
-      .select(k ++ Seq(col("_pos").as(Start), col("_next").as(End), col(scoreCol)): _*)
-  }
+    rleRuns(Seq(df -> Seq(valueCol.map(col).getOrElse(lit(1L)).cast("double"))),
+      keys, Seq(scoreCol), Sizing.saltBin("rle", df, keys, df))
 
   /** Binary Rle algebra (reference to_bigwig `divide` mode and pyrle run
     * arithmetic, core/out.py:164-224): depth of `a` and depth of `b` as
     * aligned constant runs over the union of both breakpoint sets — one
     * sweep, two prefix sums. Downstream columns combine them (ratio,
-    * log2-ratio, difference) without re-splitting. */
+    * log2-ratio, difference) without re-splitting. The salt decision
+    * gates on both sides and samples `a`, the side that drives the
+    * breakpoint volume in the divide pipelines. */
   def rleBinary(a: DataFrame, b: DataFrame, keys: Seq[String],
                 scoreA: String = "score_a", scoreB: String = "score_b"): DataFrame =
-    if (bigInput(a, b))
-      // span/key refinement samples the larger side (a drives the
-      // breakpoint volume in the divide pipelines)
-      graft.core.Sizing.saltPlan(a, keys) match {
-        case Some(bin) => rleBinarySalted(a, b, keys, scoreA, scoreB, bin)
-        case None      => rleBinaryPlain(a, b, keys, scoreA, scoreB)
-      }
-    else rleBinaryPlain(a, b, keys, scoreA, scoreB)
+    rleRuns(Seq(a -> Seq(lit(1L), lit(0L)), b -> Seq(lit(0L), lit(1L))), keys,
+      Seq(scoreA, scoreB), Sizing.saltBin("rle", a, keys, a, b))
 
-  def rleBinaryPlain(a: DataFrame, b: DataFrame, keys: Seq[String],
-                     scoreA: String = "score_a", scoreB: String = "score_b"): DataFrame = {
+  /** The RLE sweep of [[toRle]] (one event stream) and [[rleBinary]]
+    * (two): each stream row emits (Start, +w) and (End, -w) for its
+    * weights w, one score per weight; events aggregate per (key,
+    * position), [[UnaryOps.runningSums]] turns them into per-key
+    * running depths, and each breakpoint pairs with the next one.
+    *
+    * saltBin is the decision of [[Sizing.saltBin]]: the plain per-key
+    * window is a straggler on big inputs (one hot chromosome = one
+    * sorted task; measured at local[32]/sf0.1: plain rleBinary 4.7 s vs
+    * salted 2.5 s), while below the gate fewer stages win. The round-8
+    * A/B (BASELINE.md "q87 decomposition") forced the salted plan BELOW
+    * the gate on q87's 14 MB / 3-key shape and it LOST (steady 5.9-7.0 s
+    * vs plain 3.0-3.7 s at local[32]): with ~40k breakpoints its two
+    * extra shuffles cost more than the 3-task serialization they
+    * remove. */
+  private[graft] def rleRuns(streams: Seq[(DataFrame, Seq[Column])], keys: Seq[String],
+                             scores: Seq[String], saltBin: Option[Long]): DataFrame = {
     val k = keys.map(col)
-    def events(df: DataFrame, dA: Long, dB: Long): DataFrame =
+    val ds = scores.indices.map(i => s"_d$i")
+    def events(df: DataFrame, ws: Seq[Column]): DataFrame =
       df.select(k :+ explode(array(
-          struct(col(Start).as("_pos"), lit(dA).as("_da"), lit(dB).as("_db")),
-          struct(col(End).as("_pos"), lit(-dA).as("_da"), lit(-dB).as("_db")))).as("_ev"): _*)
-        .select(k ++ Seq(col("_ev._pos").as("_pos"), col("_ev._da").as("_da"),
-          col("_ev._db").as("_db")): _*)
-    val ev = events(a, 1, 0).unionByName(events(b, 0, 1))
-      .groupBy(k :+ col("_pos"): _*)
-      .agg(sum(col("_da")).as("_da"), sum(col("_db")).as("_db"))
-    val w = Window.partitionBy(k: _*).orderBy(col("_pos"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val w2 = Window.partitionBy(k: _*).orderBy(col("_pos"))
-    ev.withColumn(scoreA, sum(col("_da")).over(w))
-      .withColumn(scoreB, sum(col("_db")).over(w))
-      .withColumn("_next", lead(col("_pos"), 1).over(w2))
+          struct(col(Start).as("_pos") +: ws.zip(ds).map { case (w, d) => w.as(d) }: _*),
+          struct(col(End).as("_pos") +: ws.zip(ds).map { case (w, d) => (-w).as(d) }: _*)
+        )).as("_ev"): _*)
+        .select(k ++ ("_pos" +: ds).map(c => col("_ev." + c).as(c)): _*)
+    val sums = ds.map(d => sum(col(d)).as(d))
+    val ev = streams.map { case (df, ws) => events(df, ws) }.reduce(_ unionByName _)
+      .groupBy(k :+ col("_pos"): _*).agg(sums.head, sums.tail: _*)
+    UnaryOps.runningSums(ev, keys, col("_pos"), Nil,
+        scores.zip(ds.map(col)), saltBin, Some("_next"))
       .filter(col("_next").isNotNull)
-      .select(k ++ Seq(col("_pos").as(Start), col("_next").as(End),
-        col(scoreA), col(scoreB)): _*)
+      .select(k ++ Seq(col("_pos").as(Start), col("_next").as(End)) ++ scores.map(col): _*)
   }
 
   /** to_bigwig-shaped export (reference core/out.py:164-224,
@@ -167,13 +99,10 @@ object Coverage {
                          keys: Seq[String] = Seq(Cols.Chrom)): DataFrame = {
     val k = keys.map(col)
     val runs = rleBinary(cov, bg, keys).filter(col("score_b") =!= 0)
-    val islands =
-      if (bigInput(cov, bg))
-        graft.core.Sizing.saltPlan(cov, keys) match {
-          case Some(bin) => defragSalted(runs, keys, bin)
-          case None      => defragIslands(runs, keys)
-        }
-      else defragIslands(runs, keys)
+    val islands = Sizing.saltBin("rle", cov, keys, cov, bg) match {
+      case Some(bin) => defragSalted(runs, keys, bin)
+      case None      => defragIslands(runs, keys)
+    }
     islands
       // codegen'd long gcd; integer DIV keeps the quotient exact at any
       // magnitude (no double round-trip, which loses bits above 2^53)
@@ -233,49 +162,5 @@ object Coverage {
       .withColumnRenamed("_a", "score_a").withColumnRenamed("_b", "score_b"),
       keys)
     interior.unionByName(stitched)
-  }
-
-  /** rleBinary via the two-phase distributed prefix sum (same structure
-    * as toRleSalted, two delta streams): local per-(key, megabin) prefix
-    * sums in parallel + per-key bin offsets joined back. Identical output
-    * to rleBinary (property-tested); the hot-key path. */
-  def rleBinarySalted(a: DataFrame, b: DataFrame, keys: Seq[String],
-                      scoreA: String = "score_a", scoreB: String = "score_b",
-                      saltBin: Long = 16384): DataFrame = {
-    val k = keys.map(col)
-    def events(df: DataFrame, dA: Long, dB: Long): DataFrame =
-      df.select(k :+ explode(array(
-          struct(col(Start).as("_pos"), lit(dA).as("_da"), lit(dB).as("_db")),
-          struct(col(End).as("_pos"), lit(-dA).as("_da"), lit(-dB).as("_db")))).as("_ev"): _*)
-        .select(k ++ Seq(col("_ev._pos").as("_pos"), col("_ev._da").as("_da"),
-          col("_ev._db").as("_db")): _*)
-    val ev = events(a, 1, 0).unionByName(events(b, 0, 1))
-      .groupBy(k :+ col("_pos"): _*)
-      .agg(sum(col("_da")).as("_da"), sum(col("_db")).as("_db"))
-      .withColumn("_mb", floor(col("_pos").cast("double") / saltBin).cast("long"))
-    val wLoc = Window.partitionBy(k :+ col("_mb"): _*).orderBy(col("_pos"))
-    val local = ev
-      .withColumn("_la", sum(col("_da")).over(
-        wLoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("_lb", sum(col("_db")).over(
-        wLoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("_nextLoc", lead(col("_pos"), 1).over(wLoc))
-    val wBins = Window.partitionBy(k: _*).orderBy(col("_mb"))
-    val binInfo = ev.groupBy(k :+ col("_mb"): _*)
-      .agg(sum(col("_da")).as("_ta"), sum(col("_db")).as("_tb"),
-        min(col("_pos")).as("_first"))
-      .withColumn("_offA", coalesce(sum(col("_ta")).over(
-        wBins.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("_offB", coalesce(sum(col("_tb")).over(
-        wBins.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("_nextFirst", lead(col("_first"), 1).over(wBins))
-      .select(k ++ Seq(col("_mb"), col("_offA"), col("_offB"), col("_nextFirst")): _*)
-    local.join(binInfo, keys :+ "_mb")
-      .withColumn(scoreA, col("_la") + col("_offA"))
-      .withColumn(scoreB, col("_lb") + col("_offB"))
-      .withColumn("_next", coalesce(col("_nextLoc"), col("_nextFirst")))
-      .filter(col("_next").isNotNull)
-      .select(k ++ Seq(col("_pos").as(Start), col("_next").as(End),
-        col(scoreA), col(scoreB)): _*)
   }
 }

@@ -110,10 +110,10 @@ object NearestK {
     scan(rekeyed, k, rightSide)
   }
 
-  /** Dispatch: salted sweep for large inputs, plain otherwise. */
+  /** Dispatch: salted sweep over `saltBin`-wide bins, plain on None. */
   private def scanAuto(u: DataFrame, k: Int, rightSide: Boolean,
-                       big: Boolean, saltBin: Long = 16384): DataFrame =
-    if (big) scanSalted(u, k, rightSide, saltBin) else scan(u, k, rightSide)
+                       saltBin: Option[Long]): DataFrame =
+    saltBin.fold(scan(u, k, rightSide))(scanSalted(u, k, rightSide, _))
 
   /** Build the tagged union for one scan direction. */
   private def union(left: DataFrame, right: DataFrame, keys: Seq[String],
@@ -137,33 +137,20 @@ object NearestK {
   def nearestK(left: DataFrame, right: DataFrame, keys: Seq[String], k: Int,
                direction: String = "any", excludeOverlaps: Boolean = false,
                suffix: String = "_b", distCol: String = "Distance",
-               binSize: Long = RangeJoin.defaultBinSize,
-               saltedHint: Option[Boolean] = None): DataFrame = {
+               binSize: Long = RangeJoin.defaultBinSize): DataFrame = {
     val rId = RowId + suffix
     val rs = Start + suffix
     val re = End + suffix
 
     // span-sampled mega-bin for the salted sweep (same guard as merge:
     // a fixed bin over a narrow coordinate domain strands parallelism,
-    // so a too-narrow span demotes the auto-dispatch back to plain).
-    // An explicit saltedHint bypasses BOTH the size gate and the span
-    // demotion — it is the deterministic test/bench control knob.
-    val plan: Option[Long] = saltedHint match {
-      case Some(true)  => Some(graft.core.Sizing.autoSaltBin(left))
-      case Some(false) => None
-      case None =>
-        if (graft.core.Sizing.decide("nearestSweep",
-              graft.core.Sizing.saltedInputThreshold, left, right))
-          graft.core.Sizing.saltPlan(left, keys)
-        else None
-    }
-    val big = plan.isDefined
-    val bin = plan.getOrElse(16384L)
+    // so a too-narrow span demotes the auto-dispatch back to plain)
+    val plan = graft.core.Sizing.saltBin("nearestSweep", left, keys, left, right)
     val l = RangeJoin.identifiedPinned(left)
     val lScan = scanAuto(union(l, right, keys, rightSide = false), k,
-      rightSide = false, big, bin)
+      rightSide = false, plan)
     val rScan = scanAuto(union(l, right, keys, rightSide = true), k,
-      rightSide = true, big, bin)
+      rightSide = true, plan)
     // gated on the plain inputs, which `plan` above has already sampled
     val ov = Option.unless(excludeOverlaps)(RangeJoin.pairsGatedOn(left, right,
         l.select((keys :+ Rid :+ Start :+ End).map(col): _*),

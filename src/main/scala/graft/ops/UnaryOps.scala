@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.Cols
+import graft.core.{Cols, Sizing}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -52,16 +52,13 @@ object UnaryOps {
     // from 43 MB up), with a span-sampled mega-bin so narrow coordinate
     // domains still fan out. countCol pins the plain path: island
     // member counts cannot be recovered from split pieces.
-    if (countCol.isEmpty && graft.core.Sizing.decide("merge",
-          graft.core.Sizing.saltedInputThreshold, df))
-      graft.core.Sizing.saltPlan(df, keys) match {
-        case Some(bin) => mergeSalted(df, keys, slack, bin)
-        case None      => mergePlain(df, keys, slack, countCol)
-      }
-    else mergePlain(df, keys, slack, countCol)
+    (if (countCol.isEmpty) Sizing.saltBin("merge", df, keys, df) else None) match {
+      case Some(bin) => mergeSalted(df, keys, slack, bin)
+      case None      => mergePlain(df, keys, slack, countCol)
+    }
 
-  def mergePlain(df: DataFrame, keys: Seq[String], slack: Long = 0,
-                 countCol: Option[String] = None): DataFrame = {
+  private[graft] def mergePlain(df: DataFrame, keys: Seq[String], slack: Long = 0,
+                                countCol: Option[String] = None): DataFrame = {
     val (w, flag) = clusterFlag(keys, slack, Nil)
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val base = df
@@ -88,8 +85,8 @@ object UnaryOps {
     * result set to merge(); island counts are not preserved (pieces of
     * one row would double-count), so no countCol here.
     */
-  def mergeSalted(df: DataFrame, keys: Seq[String], slack: Long = 0,
-                  saltBin: Long = 1 << 20): DataFrame = {
+  private[graft] def mergeSalted(df: DataFrame, keys: Seq[String], slack: Long,
+                                 saltBin: Long): DataFrame = {
     // A piece CUT at its right bin edge extends 1bp into the next bin so
     // the two halves of one interval strictly overlap in phase 2 — under
     // the reference's strict sweep (bookended = separate at slack 0) a
@@ -232,67 +229,81 @@ object UnaryOps {
   /** group_cumsum (reference core/pyranges_main.py:5209-5307): 5'→3'
     * running total of interval lengths per key (transcript), the basis of
     * all local-coordinate math. Minus-strand groups run right-to-left.
-    * Adds cumStart/cumEnd columns. */
+    * Adds cumStart/cumEnd columns. Salted through [[runningSums]] for
+    * large inputs; the salted plan needs tieBreak to make the sweep
+    * order total when (Start, End) ties are possible. */
   def groupCumsum(df: DataFrame, keys: Seq[String], useStrand: Boolean = true,
                   cumStartCol: String = "cumStart", cumEndCol: String = "cumEnd",
                   tieBreak: Seq[Column] = Nil): DataFrame =
-    if (graft.core.Sizing.decide("groupCumsum",
-          graft.core.Sizing.saltedInputThreshold, df))
-      graft.core.Sizing.saltPlan(df, keys) match {
-        case Some(bin) =>
-          groupCumsumSalted(df, keys, useStrand, cumStartCol, cumEndCol,
-            tieBreak, saltBin = bin)
-        case None =>
-          groupCumsumPlain(df, keys, useStrand, cumStartCol, cumEndCol, tieBreak)
-      }
-    else groupCumsumPlain(df, keys, useStrand, cumStartCol, cumEndCol, tieBreak)
+    groupCumsumSweep(df, keys, useStrand, cumStartCol, cumEndCol, tieBreak,
+      Sizing.saltBin("groupCumsum", df, keys, df))
 
-  def groupCumsumPlain(df: DataFrame, keys: Seq[String], useStrand: Boolean = true,
-                       cumStartCol: String = "cumStart", cumEndCol: String = "cumEnd",
-                       tieBreak: Seq[Column] = Nil): DataFrame = {
-    val neg = if (useStrand && df.columns.contains(Strand))
-      col(Strand) === Cols.RevStrand else lit(false)
-    val pos1 = when(neg, -col(End)).otherwise(col(Start))
-    val pos2 = when(neg, -col(Start)).otherwise(col(End))
-    val w = Window.partitionBy(keyCols(keys): _*)
-      .orderBy(Seq(pos1, pos2) ++ tieBreak: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn(cumEndCol, sum(col(End) - col(Start)).over(w))
-      .withColumn(cumStartCol, col(cumEndCol) - (col(End) - col(Start)))
-  }
-
-  /** group_cumsum via the two-phase distributed prefix sum (mirroring
-    * Coverage.toRleSalted): a plain cumsum window-partitions by the
-    * transcript key alone, so one hot transcript — or a key with few
-    * distinct values — serializes into one task. Phase 1 computes local
-    * running sums per (key, sweep-position megabin) with parallelism =
-    * #bins; phase 2 turns the tiny per-bin totals into per-bin offsets;
-    * phase 3 joins them back. Identical output to groupCumsumPlain
-    * (integer length sums — property-tested); requires tieBreak to make
-    * the sweep order total when (Start, End) ties are possible. */
-  def groupCumsumSalted(df: DataFrame, keys: Seq[String], useStrand: Boolean = true,
-                        cumStartCol: String = "cumStart", cumEndCol: String = "cumEnd",
-                        tieBreak: Seq[Column] = Nil, saltBin: Long = 16384): DataFrame = {
+  /** [[groupCumsum]] with the salt decision made (tests and SaltBench
+    * pick the branch here). */
+  private[graft] def groupCumsumSweep(df: DataFrame, keys: Seq[String],
+      useStrand: Boolean, cumStartCol: String, cumEndCol: String,
+      tieBreak: Seq[Column], saltBin: Option[Long]): DataFrame = {
     val neg = if (useStrand && df.columns.contains(Strand))
       col(Strand) === Cols.RevStrand else lit(false)
     val pos1 = when(neg, -col(End)).otherwise(col(Start))
     val pos2 = when(neg, -col(Start)).otherwise(col(End))
     val len = col(End) - col(Start)
-    val d = df.withColumn("_gcmb", floor(pos1.cast("double") / saltBin).cast("long"))
-    val wLoc = Window.partitionBy(keyCols(keys) :+ col("_gcmb"): _*)
-      .orderBy(Seq(pos1, pos2) ++ tieBreak: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = d.withColumn("_gcloc", sum(len).over(wLoc))
-    val wBins = Window.partitionBy(keyCols(keys): _*).orderBy(col("_gcmb"))
-    val binInfo = d.groupBy(keyCols(keys) :+ col("_gcmb"): _*)
-      .agg(sum(len).as("_gctot"))
-      .withColumn("_gcoff", coalesce(sum(col("_gctot")).over(
-        wBins.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(keyCols(keys) ++ Seq(col("_gcmb"), col("_gcoff")): _*)
-    local.join(binInfo, keys :+ "_gcmb")
-      .withColumn(cumEndCol, col("_gcloc") + col("_gcoff"))
+    runningSums(df, keys, pos1, pos2 +: tieBreak, Seq(cumEndCol -> len), saltBin)
       .withColumn(cumStartCol, col(cumEndCol) - len)
-      .select(df.columns.map(col) ++ Seq(col(cumEndCol), col(cumStartCol)): _*)
+  }
+
+  /** The per-key running sums of the sweeps (group_cumsum here, the RLE
+    * runs in [[Coverage]]): adds, per (name, value) in `sums`, the
+    * running sum of `value` per `keys` in (pos, tieBreak) order, and
+    * with `nextCol` the next row's `pos` (NULL on a key's last row).
+    *
+    * saltBin = None: one per-key window. Some(bin): a plain window
+    * partitions by the key alone, so one hot key serializes into one
+    * task; the classic two-phase distributed prefix sum instead (1)
+    * sums locally per (key, floor(pos / bin)) mega-bin — parallelism =
+    * #bins, (2) turns the tiny per-bin totals into per-key exclusive
+    * offsets, (3) joins them back; a next position crossing a bin edge
+    * is the next non-empty bin's first `pos`. Identical output
+    * (property-tested, OpsSpec) for sums that are exact in their type. */
+  private[graft] def runningSums(df: DataFrame, keys: Seq[String], pos: Column,
+      tieBreak: Seq[Column], sums: Seq[(String, Column)], saltBin: Option[Long],
+      nextCol: Option[String] = None): DataFrame = {
+    val k = keyCols(keys)
+    val upTo = Window.unboundedPreceding
+    saltBin match {
+      case None =>
+        val w = Window.partitionBy(k: _*).orderBy(pos +: tieBreak: _*)
+        val summed = sums.foldLeft(df) { case (acc, (name, v)) =>
+          acc.withColumn(name, sum(v).over(w.rowsBetween(upTo, Window.currentRow)))
+        }
+        nextCol.fold(summed)(n => summed.withColumn(n, lead(pos, 1).over(w)))
+      case Some(bin) =>
+        val d = df.withColumn("_rsmb", floor(pos.cast("double") / bin).cast("long"))
+        val wLoc = Window.partitionBy(k :+ col("_rsmb"): _*).orderBy(pos +: tieBreak: _*)
+        val idx = sums.indices
+        val local = idx.foldLeft(d)((acc, i) => acc.withColumn(s"_rsloc$i",
+            sum(sums(i)._2).over(wLoc.rowsBetween(upTo, Window.currentRow))))
+        val withNext = nextCol.fold(local)(_ =>
+          local.withColumn("_rsnextLoc", lead(pos, 1).over(wLoc)))
+        val wBins = Window.partitionBy(k: _*).orderBy(col("_rsmb"))
+        val totals = idx.map(i => sum(sums(i)._2).as(s"_rstot$i")) ++
+          nextCol.map(_ => min(pos).as("_rsfirst"))
+        val perBin = d.groupBy(k :+ col("_rsmb"): _*).agg(totals.head, totals.tail: _*)
+        val offsets = idx.foldLeft(perBin)((acc, i) => acc.withColumn(s"_rsoff$i",
+            coalesce(sum(col(s"_rstot$i")).over(
+              wBins.rowsBetween(Window.unboundedPreceding, -1)), lit(0))))
+        val binInfo = nextCol.fold(offsets)(_ =>
+            offsets.withColumn("_rsnextFirst", lead(col("_rsfirst"), 1).over(wBins)))
+          .select(k ++ (col("_rsmb") +: idx.map(i => col(s"_rsoff$i"))) ++
+            nextCol.map(_ => col("_rsnextFirst")): _*)
+        val joined = withNext.join(binInfo, keys :+ "_rsmb")
+        val summed = idx.foldLeft(joined)((acc, i) =>
+          acc.withColumn(sums(i)._1, col(s"_rsloc$i") + col(s"_rsoff$i")))
+        val out = nextCol.fold(summed)(n =>
+          summed.withColumn(n, coalesce(col("_rsnextLoc"), col("_rsnextFirst"))))
+        val added = (sums.map(_._1) ++ nextCol).filterNot(df.columns.contains)
+        out.select((df.columns.toSeq ++ added).map(col): _*)
+    }
   }
 
   /** window_ranges (reference core/pyranges_main.py:4838-5096): chop each

@@ -86,8 +86,9 @@ class OpsSpec extends AnyFunSuite {
     }
     val df = gf(rows: _*)
     val plain = rows3(UnaryOps.merge(df, Seq(Chrom), slack = 3))
-    val salted = rows3(UnaryOps.mergeSalted(df, Seq(Chrom), slack = 3, saltBin = 256))
-    assert(salted == plain)
+    // one-position bins, an odd bin, a mid bin, one bin wider than the span
+    for (bin <- Seq(1L, 7L, 256L, 1L << 20))
+      assert(rows3(UnaryOps.mergeSalted(df, Seq(Chrom), 3, bin)) == plain, s"bin=$bin")
   }
 
   test("groupCumsumSalted equals groupCumsumPlain (incl. minus strand)") {
@@ -99,11 +100,13 @@ class OpsSpec extends AnyFunSuite {
       .withColumn(Strand, when(col(RowId) % 2 === 0, "+").otherwise("-"))
     def canon(d: DataFrame) = d.select(RowId, "cs", "ce").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val plain = canon(UnaryOps.groupCumsumPlain(df, Seq(Chrom, Strand),
-      useStrand = true, "cs", "ce", Seq(col(RowId))))
-    val salted = canon(UnaryOps.groupCumsumSalted(df, Seq(Chrom, Strand),
-      useStrand = true, "cs", "ce", Seq(col(RowId)), saltBin = 256))
-    assert(salted == plain)
+    def cumsum(saltBin: Option[Long]) = canon(UnaryOps.groupCumsumSweep(df,
+      Seq(Chrom, Strand), useStrand = true, "cs", "ce", Seq(col(RowId)), saltBin))
+    val plain = cumsum(None)
+    assert(plain == canon(UnaryOps.groupCumsum(df, Seq(Chrom, Strand),
+      useStrand = true, "cs", "ce", Seq(col(RowId)))))
+    for (bin <- Seq(1L, 7L, 256L, 1L << 20))
+      assert(cumsum(Some(bin)) == plain, s"bin=$bin")
   }
 
   test("merge is idempotent") {
@@ -376,13 +379,13 @@ class OpsSpec extends AnyFunSuite {
     val r = gf(rRows: _*)
     def canon(d: DataFrame) = d.select(RowId, RowId + "_b", "dist", "nearest_rank")
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getInt(3))).toSet
-    for (k <- Seq(1, 3)) {
-      val plain = canon(graft.ops.NearestK.nearestK(l, r, Seq(Chrom), k,
-        distCol = "dist", saltedHint = Some(false)))
-      val salted = canon(graft.ops.NearestK.nearestK(l, r, Seq(Chrom), k,
-        distCol = "dist", saltedHint = Some(true)))
-      assert(salted == plain, s"k=$k")
+    def nearest(k: Int, force: String) = {
+      spark.conf.set(graft.core.Sizing.ForceKey, force)
+      try canon(graft.ops.NearestK.nearestK(l, r, Seq(Chrom), k, distCol = "dist"))
+      finally spark.conf.unset(graft.core.Sizing.ForceKey)
     }
+    for (k <- Seq(1, 3))
+      assert(nearest(k, "salted") == nearest(k, "plain"), s"k=$k")
   }
 
   // join_overlaps left/outer keep unmatched with nulls (reference
@@ -625,10 +628,14 @@ class OpsSpec extends AnyFunSuite {
     def canon(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet
-    val plain = canon(Coverage.rleBinary(gf(aRows: _*), gf(bRows: _*), Seq(Chrom)))
-    val salted = canon(Coverage.rleBinarySalted(gf(aRows: _*), gf(bRows: _*),
-      Seq(Chrom), saltBin = 128))
-    assert(salted == plain)
+    val (a, b) = (gf(aRows: _*), gf(bRows: _*))
+    val plain = canon(Coverage.rleBinary(a, b, Seq(Chrom)))
+    for (bin <- Seq(1L, 7L, 128L, 1L << 20)) {
+      val salted = canon(Coverage.rleRuns(
+        Seq(a -> Seq(lit(1L), lit(0L)), b -> Seq(lit(0L), lit(1L))), Seq(Chrom),
+        Seq("score_a", "score_b"), Some(bin)))
+      assert(salted == plain, s"bin=$bin")
+    }
   }
 
   test("toRleSalted equals toRle across megabin boundaries") {
@@ -636,11 +643,17 @@ class OpsSpec extends AnyFunSuite {
       val s = (i * 2654435761L) % 2000
       ("c" + (i % 2), s, s + 1 + (i * 97L) % 300)
     }
-    val df = gf(rows: _*)
+    // an integer weight column (signed, zeros included) beside the
+    // default weight 1: both sum as doubles
+    val df = gf(rows: _*).withColumn("w", (col(RowId) % 5 - 1).cast("int"))
     def canon(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(canon(Coverage.toRleSalted(df, Seq(Chrom), saltBin = 128)) ==
-      canon(Coverage.toRle(df, Seq(Chrom))))
+    for ((valueCol, weight) <- Seq(None -> lit(1.0), Some("w") -> col("w").cast("double"))) {
+      val plain = canon(Coverage.toRle(df, Seq(Chrom), valueCol))
+      for (bin <- Seq(1L, 7L, 128L, 1L << 20))
+        assert(canon(Coverage.rleRuns(Seq(df -> Seq(weight)), Seq(Chrom), Seq("Score"),
+          Some(bin))) == plain, s"valueCol=$valueCol bin=$bin")
+    }
   }
 
   test("custom expressions register for SQL and run under codegen") {
