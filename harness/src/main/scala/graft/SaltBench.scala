@@ -20,10 +20,11 @@ object SaltBench {
   import Cols._
 
   /** Deterministic hot-key explosion of `gr`. Each source row becomes
-    * `factor` copies; even copy-indices land on chromosome "A" (the hot
-    * key), odd ones keep their source chromosome; starts scale out to a
-    * chromosome-realistic ~240M coordinate span (orderkey*400 + a prime
-    * stride per copy) so mega-bin salting has real bins to fan out over
+    * `factor` copies; `hotPct`% of the (row, copy) pairs land on
+    * chromosome "A" (the hot key), the rest keep their source
+    * chromosome; starts scale out to a chromosome-realistic ~240M
+    * coordinate span (orderkey*400 + a prime stride per copy) so
+    * mega-bin salting has real bins to fan out over
     * — the first harness draft kept gr's ~1M span and handed mergeSalted
     * all of two 1M-wide bins. */
   def hotKeyTable(s: SparkSession, sfDir: String, factor: Int,
@@ -36,8 +37,9 @@ object SaltBench {
       .withColumn(RowId, xxhash64(col(RowId), col("_k")))
       // hotPct% of copies land on the hot chromosome "A" (plus the ~1/3
       // natural A share of the rest): hotPct 50 -> ~0.67 hot share,
-      // 5 -> ~0.37, 95 -> ~0.97 — the skew sweep axis
-      .withColumn(Chrom, when((col("_k") * 37 + 11) % 100 < hotPct,
+      // 5 -> ~0.37, 95 -> ~0.97 — the skew sweep axis. Decided per
+      // (row, copy) from the hash above, so the share holds at any factor
+      .withColumn(Chrom, when(pmod(col(RowId), lit(100L)) < hotPct,
         lit("A")).otherwise(col(Chrom)))
       // length BEFORE start is rewritten — withColumn(Start,...) replaces
       // the column, so a later End-Start would see the scaled Start
@@ -76,10 +78,12 @@ object SaltBench {
     // salted split still pays when the plain window already has more
     // keys than cores (parallelism comes free)
     val manyKeys = args.contains("--manykeys")
+    // v2: tables of the earlier per-copy hot-key formula differ
+    val dir = "/tmp/graft_saltbench/v2"
     val path =
-      if (manyKeys) s"/tmp/graft_saltbench/gr_x${factor}_mk.parquet"
-      else if (hotPct == 50) s"/tmp/graft_saltbench/gr_x$factor.parquet"
-      else s"/tmp/graft_saltbench/gr_x${factor}_h$hotPct.parquet"
+      if (manyKeys) s"$dir/gr_x${factor}_mk.parquet"
+      else if (hotPct == 50) s"$dir/gr_x$factor.parquet"
+      else s"$dir/gr_x${factor}_h$hotPct.parquet"
     if (!new java.io.File(path).exists) {
       println(s"[saltbench] generating $path ...")
       val t = hotKeyTable(spark, sfDir, factor, hotPct)

@@ -4,6 +4,7 @@ import graft.core.Cols
 import graft.plans.{IntervalSweepJoinExec, IntervalSweepJoinNode, SweepMode}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Cast, Divide, EqualTo, Expression, Floor, Greatest, GreaterThan, LessThan, Literal}
+import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -79,19 +80,21 @@ object IntervalSweepJoin {
     p.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(s"missing column $n"))
 
-  /** Shared node assembly: analyzed children, key/bound attributes, the
+  /** The one node builder behind every entry point: salt both sides
+    * when `megaBin` is set, suffix the right, build the node with the
     * full re-checked condition (keys [+ mega-bin] equal AND slack-
     * extended overlap AND, when mega-binned, the greatest-start-bin
-    * pair-dedup). */
-  private def buildNode(l1: DataFrame, r0: DataFrame, keys: Seq[String],
-                        rKeys: Seq[String], slack: Long, suffix: String,
-                        megaBin: Option[Long], mode: String,
-                        countAttr: Option[Attribute] = None,
-                        withTies: Boolean = false): IntervalSweepJoinNode = {
+    * pair-dedup), and drop the suffixed right keys and the mega-bin. */
+  private def sweep(left: DataFrame, right: DataFrame, keys0: Seq[String],
+                    slack: Long, suffix: String, megaBin: Option[Long], mode: String,
+                    joinType: JoinType = Inner, countAttr: Option[Attribute] = None,
+                    withTies: Boolean = false): DataFrame = {
+    val (l1, r1, keys) = salted(left, right, keys0, slack, megaBin)
+    val rKeys = keys.map(_ + suffix)
     val rs = Start + suffix
     val re = End + suffix
     val lPlan = l1.queryExecution.analyzed
-    val rPlan = r0.queryExecution.analyzed
+    val rPlan = RangeJoin.suffixRight(l1, r1, suffix).queryExecution.analyzed
     val lKeyAttrs = keys.map(attr(lPlan, _))
     val rKeyAttrs = rKeys.map(attr(rPlan, _))
     val (ls, le) = (attr(lPlan, Start), attr(lPlan, End))
@@ -115,23 +118,18 @@ object IntervalSweepJoin {
         rPlan.output.filterNot(a =>
           a.name == rs || a.name == re || rKeys.contains(a.name))
       else Nil
-    IntervalSweepJoinNode(lPlan, rPlan, lKeyAttrs, rKeyAttrs,
-      ls, le, rsA, reA, slack, cond, mode = mode, countAttr = countAttr,
-      pickTies = ties)
+    val node = IntervalSweepJoinNode(lPlan, rPlan, lKeyAttrs, rKeyAttrs,
+      ls, le, rsA, reA, slack, cond, joinType = joinType, mode = mode,
+      countAttr = countAttr, pickTies = ties)
+    val spark = left.sparkSession
+    IntervalSweepJoinExec.ensureStrategy(spark)
+    GraftColumnBridge.ofRows(spark, node).drop(rKeys :+ MbCol: _*)
   }
 
   def pairs(left: DataFrame, right: DataFrame, keys0: Seq[String],
             slack: Long = 0, suffix: String = "_b",
-            megaBin: Option[Long] = None): DataFrame = {
-    val (l1, r1, keys) = salted(left, right, keys0, slack, megaBin)
-    val r0 = RangeJoin.suffixRight(l1, r1, suffix)
-    val rKeys = keys.map(_ + suffix)
-    val node = buildNode(l1, r0, keys, rKeys, slack, suffix, megaBin, SweepMode.Pairs)
-    val spark = left.sparkSession
-    IntervalSweepJoinExec.ensureStrategy(spark)
-    val res = GraftColumnBridge.ofRows(spark, node).drop(rKeys: _*)
-    if (megaBin.isDefined) res.drop(MbCol) else res
-  }
+            megaBin: Option[Long] = None): DataFrame =
+    sweep(left, right, keys0, slack, suffix, megaBin, SweepMode.Pairs)
 
   /** Per-left-row first/last match through the operator's native pick
     * mode: one output row per matched left row, chosen by smallest
@@ -144,18 +142,10 @@ object IntervalSweepJoin {
   def pick(left: DataFrame, right: DataFrame, keys0: Seq[String],
            last: Boolean, slack: Long = 0, suffix: String = "_b",
            megaBin: Option[Long] = None): DataFrame = {
-    val (l1, r1, keys) = salted(if (megaBin.isEmpty) left else RangeJoin.identified(left),
-      right, keys0, slack, megaBin)
-    val r0 = RangeJoin.suffixRight(l1, r1, suffix)
-    val rKeys = keys.map(_ + suffix)
-    val mode = if (last) SweepMode.Last else SweepMode.First
-    val node = buildNode(l1, r0, keys, rKeys, slack, suffix, megaBin, mode,
-      withTies = true)
-    val spark = left.sparkSession
-    IntervalSweepJoinExec.ensureStrategy(spark)
-    val raw = GraftColumnBridge.ofRows(spark, node).drop(rKeys: _*)
+    val raw = sweep(if (megaBin.isEmpty) left else RangeJoin.identified(left), right, keys0,
+      slack, suffix, megaBin, if (last) SweepMode.Last else SweepMode.First, withTies = true)
     if (megaBin.isEmpty) raw
-    else RangeJoin.pickRollup(left, raw.drop(MbCol), suffix, last)
+    else RangeJoin.pickRollup(left, raw, suffix, last)
   }
 
   /** Per-left-row overlap count through the operator's native count
@@ -167,18 +157,10 @@ object IntervalSweepJoin {
             slack: Long = 0, countCol: String = "NumberOverlaps",
             megaBin: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val suffix = "_b"
-    val rMin = right.select((keys0 :+ Start :+ End).map(col): _*)
-    val (l1, r1, keys) = salted(if (megaBin.isEmpty) left else RangeJoin.identified(left),
-      rMin, keys0, slack, megaBin)
-    val r0 = RangeJoin.suffixRight(l1, r1, suffix)
-    val rKeys = keys.map(_ + suffix)
-    val cntAttr = AttributeReference(countCol, LongType, nullable = false)()
-    val node = buildNode(l1, r0, keys, rKeys, slack, suffix, megaBin,
-      SweepMode.Count, countAttr = Some(cntAttr))
-    val spark = left.sparkSession
-    IntervalSweepJoinExec.ensureStrategy(spark)
-    val raw = GraftColumnBridge.ofRows(spark, node)
+    val raw = sweep(if (megaBin.isEmpty) left else RangeJoin.identified(left),
+      right.select((keys0 :+ Start :+ End).map(col): _*), keys0, slack, "_b", megaBin,
+      SweepMode.Count,
+      countAttr = Some(AttributeReference(countCol, LongType, nullable = false)()))
     if (megaBin.isEmpty) raw else RangeJoin.countRollup(left, raw, countCol)
   }
 
@@ -192,17 +174,8 @@ object IntervalSweepJoin {
   def exists(left: DataFrame, right: DataFrame, keys: Seq[String],
              slack: Long = 0, anti: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val suffix = "_b"
-    val rMin = right.select((keys :+ Start :+ End).map(col): _*)
-    val r0 = RangeJoin.suffixRight(left, rMin, suffix)
-    val rKeys = keys.map(_ + suffix)
-    val node0 = buildNode(left, r0, keys, rKeys, slack, suffix, None, SweepMode.Pairs)
-    val jt = if (anti) org.apache.spark.sql.catalyst.plans.LeftAnti
-             else org.apache.spark.sql.catalyst.plans.LeftSemi
-    val node = node0.copy(joinType = jt)
-    val spark = left.sparkSession
-    IntervalSweepJoinExec.ensureStrategy(spark)
-    GraftColumnBridge.ofRows(spark, node)
+    sweep(left, right.select((keys :+ Start :+ End).map(col): _*), keys, slack, "_b", None,
+      SweepMode.Pairs, if (anti) LeftAnti else LeftSemi)
   }
 
   /** Outer pair sweep: left/right/full outer through the operator's
@@ -233,7 +206,6 @@ object IntervalSweepJoin {
   def outer(left: DataFrame, right: DataFrame, keys: Seq[String],
             joinType: String, slack: Long = 0,
             suffix: String = "_b"): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftOuter, RightOuter}
     val jt = joinType match {
       case "left"           => LeftOuter
       case "right"          => RightOuter
@@ -241,13 +213,7 @@ object IntervalSweepJoin {
       case other => throw new IllegalArgumentException(
         s"not an outer join type: $other")
     }
-    val r0 = RangeJoin.suffixRight(left, right, suffix)
-    val rKeys = keys.map(_ + suffix)
-    val node0 = buildNode(left, r0, keys, rKeys, slack, suffix, None, SweepMode.Pairs)
-    val node = node0.copy(joinType = jt)
-    val spark = left.sparkSession
-    IntervalSweepJoinExec.ensureStrategy(spark)
-    GraftColumnBridge.ofRows(spark, node).drop(rKeys: _*)
+    sweep(left, right, keys, slack, suffix, None, SweepMode.Pairs, jt)
   }
 
   // long-typed slack arithmetic helpers (keep the condition integral)

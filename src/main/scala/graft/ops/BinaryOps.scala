@@ -145,53 +145,49 @@ object BinaryOps {
   /** subtract_overlaps (reference core/pyranges_main.py:3522-3643): remove
     * from each left interval the parts covered by right (one row may split
     * into many; rows fully covered disappear; rows with no overlap pass
-    * through). Plan: merge right per key; pair-join; per left row the
-    * merged overlaps are disjoint and sorted, so the surviving pieces are
-    * the gaps — window over the engine row id, no collect. */
+    * through). Plan: merge right per key, then ONE left-outer join of the
+    * identified left against it and ONE window over the engine row id.
+    * Per left row the merged overlaps are disjoint and sorted, so the
+    * surviving pieces are the gaps between them; a row with no match
+    * passes through as one copy, unchanged. */
   def subtract(left: DataFrame, right: DataFrame, keys: Seq[String],
                binSize: Long = graft.join.RangeJoin.defaultBinSize): DataFrame = {
-    // the merged right feeds BOTH the pair join and the anti join below;
-    // without a pin the merge subtree (a full shuffle + window sweep
-    // over the right side) is inlined — and recomputed — in each join
-    // (round-17, guide §2.4: two consumers, one materialization). At
-    // 100 TB that is a whole extra pass over the right side.
-    // persist(MEMORY_AND_DISK), not localCheckpoint (round-17 ADVICE /
-    // VERDICT r17 item #9): the pin is LAZY (constructing the frame runs
-    // no job, so plan-only audits stay plan-only), keeps LINEAGE (a lost
-    // executor recomputes its blocks instead of failing the query — a
-    // localCheckpoint block is unreplicated and unrecoverable), keeps
-    // the merge subtree visible to plan audits (InMemoryRelation carries
-    // it), and is reclaimable (clearCache()/ContextCleaner; checkpoint
-    // blocks pinned executor storage for the session). Both consumer
-    // joins resolve to the same InMemoryRelation, so the merge still
-    // runs once.
     val merged = UnaryOps.merge(right, keys)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val p = RangeJoin.pairsGatedOn(left, merged, RangeJoin.identified(left), merged, keys, 0,
-      binSize, "_b")
+    // gated on the plain left, so the gate and its sample memo see the
+    // caller's frame; the sweep's native left-outer mode emits each left
+    // row once, the binned left-outer join one null-padded row per
+    // unmatched bin copy
+    val p = RangeJoin.gatedChoice(left, merged, keys, RangeJoin.Use.Outer) match {
+      case Some(RangeJoin.Sweep(_)) =>
+        graft.join.IntervalSweepJoin.outer(RangeJoin.identified(left), merged, keys, "left")
+      case route => RangeJoin.leftOuterPairs(left, merged, keys, 0,
+        route.collect { case RangeJoin.Binned(b) => b }.getOrElse(binSize))
+    }
     val rs = col(Start + "_b")
     val re = col(End + "_b")
-    val w = Window.partitionBy(col(RangeJoin.Rid)).orderBy(rs)
+    // null copies sort first, so lag/lead over the matched rows never
+    // meet one after a match
+    val w = Window.partitionBy(col(RangeJoin.Rid)).orderBy(rs.asc_nulls_first)
     val wAll = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pieces = p
-      .withColumn("_gapS", greatest(col(Start), coalesce(lag(re, 1).over(w), col(Start))))
-      .withColumn("_gapE", least(col(End), rs))
-      .withColumn("_runMax", max(re).over(wAll))
-      .withColumn("_isLast", lead(rs, 1).over(w).isNull)
-      .withColumn("_segs", array(
-        struct(col("_gapS").as("s"), col("_gapE").as("e")),
-        struct(when(col("_isLast"), greatest(col(Start), col("_runMax"))).as("s"),
-               when(col("_isLast"), col(End)).as("e"))))
+    val isLast = lead(rs, 1).over(w).isNull
+    val gaps = array(
+      struct(greatest(col(Start), coalesce(lag(re, 1).over(w), col(Start))).as("s"),
+        least(col(End), rs).as("e")),
+      struct(when(isLast, greatest(col(Start), max(re).over(wAll))).as("s"),
+        when(isLast, col(End)).as("e")))
+    // a row without a match (no overlap, a null key or bound, End <= Start)
+    // keeps exactly one of its copies, unchanged
+    val unmatched = count(rs).over(w.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)) === 0
+    p.withColumn("_keep", rs.isNotNull || unmatched && row_number().over(w) === 1)
+      .withColumn("_segs", when(unmatched, array(struct(col(Start).as("s"), col(End).as("e"))))
+        .otherwise(gaps))
+      .filter(col("_keep"))
       .withColumn("_seg", explode(col("_segs")))
-      .filter(col("_seg.s").isNotNull && col("_seg.s") < col("_seg.e"))
+      .filter(rs.isNull || col("_seg.s") < col("_seg.e"))
       .withColumn(Start, col("_seg.s"))
       .withColumn(End, col("_seg.e"))
       .select(left.columns.map(col): _*)
-    // anti-join directly against the already-merged right — overlap()
-    // would re-merge its probe side, a full extra window sweep
-    val untouched = RangeJoin.existsDispatch(left, merged, keys, 0, binSize,
-      contained = false, anti = true)
-    pieces.unionByName(untouched.select(left.columns.map(col): _*))
   }
 
   /** set_intersect_overlaps (reference core/pyranges_main.py:2617-2721):

@@ -33,8 +33,13 @@ object Coverage {
     * breakpoint volume in the divide pipelines. */
   def rleBinary(a: DataFrame, b: DataFrame, keys: Seq[String],
                 scoreA: String = "score_a", scoreB: String = "score_b"): DataFrame =
+    binaryRuns(a, b, keys, scoreA, scoreB, Sizing.saltBin("rle", a, keys, a, b))
+
+  /** [[rleBinary]] under an already-made salt decision. */
+  private def binaryRuns(a: DataFrame, b: DataFrame, keys: Seq[String], scoreA: String,
+                         scoreB: String, saltBin: Option[Long]): DataFrame =
     rleRuns(Seq(a -> Seq(lit(1L), lit(0L)), b -> Seq(lit(0L), lit(1L))), keys,
-      Seq(scoreA, scoreB), Sizing.saltBin("rle", a, keys, a, b))
+      Seq(scoreA, scoreB), saltBin)
 
   /** The RLE sweep of [[toRle]] (one event stream) and [[rleBinary]]
     * (two): each stream row emits (Start, +w) and (End, -w) for its
@@ -98,11 +103,11 @@ object Coverage {
   def bigwigDivideRanges(cov: DataFrame, bg: DataFrame,
                          keys: Seq[String] = Seq(Cols.Chrom)): DataFrame = {
     val k = keys.map(col)
-    val runs = rleBinary(cov, bg, keys).filter(col("score_b") =!= 0)
-    val islands = Sizing.saltBin("rle", cov, keys, cov, bg) match {
-      case Some(bin) => defragSalted(runs, keys, bin)
-      case None      => defragIslands(runs, keys)
-    }
+    // one salt decision for both per-key sweeps: the RLE and the defrag
+    val saltBin = Sizing.saltBin("rle", cov, keys, cov, bg)
+    val runs = binaryRuns(cov, bg, keys, "score_a", "score_b", saltBin)
+      .filter(col("score_b") =!= 0)
+    val islands = saltBin.fold(defragIslands(runs, keys))(defragSalted(runs, keys, _))
     islands
       // codegen'd long gcd; integer DIV keeps the quotient exact at any
       // magnitude (no double round-trip, which loses bits above 2^53)

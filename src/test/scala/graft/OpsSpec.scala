@@ -320,6 +320,65 @@ class OpsSpec extends AnyFunSuite {
       Set(("c", 7L, 9L), ("c", 11L, 14L)))
   }
 
+  test("subtract passes unmatched null-bound, null-key and degenerate rows through " +
+    "unchanged, under plain and salted gates") {
+    import spark.implicits._
+    val l = Seq[(String, Option[Long], Option[Long], String)](
+      ("c", Some(0L), Some(10L), "a"),
+      ("c", None, None, "no-bounds"), ("c", Some(50L), None, "no-end"),
+      (null, Some(0L), Some(10L), "no-key"),
+      ("c", Some(500L), Some(500L), "empty"), ("c", Some(2000L), Some(1000L), "inverted"),
+      ("c", Some(3000L), Some(4000L), null), ("c", Some(3000L), Some(4000L), null),
+      // matched in one bin, unmatched in its other bins
+      ("c", Some(250L), Some(700L), "wide"),
+      ("c", Some(300L), Some(320L), "covered"))
+      .toDF(Chrom, Start, End, "name")
+    val r = Seq[(String, Long, Long)](("c", 2L, 4L), ("c", 300L, 320L), (null, 0L, 100L))
+      .toDF(Chrom, Start, End)
+    val want = Seq[(String, Option[Long], Option[Long], String)](
+      ("c", Some(0L), Some(2L), "a"), ("c", Some(4L), Some(10L), "a"),
+      ("c", None, None, "no-bounds"), ("c", Some(50L), None, "no-end"),
+      (null, Some(0L), Some(10L), "no-key"),
+      ("c", Some(500L), Some(500L), "empty"), ("c", Some(2000L), Some(1000L), "inverted"),
+      ("c", Some(3000L), Some(4000L), null), ("c", Some(3000L), Some(4000L), null),
+      ("c", Some(250L), Some(300L), "wide"), ("c", Some(320L), Some(700L), "wide"))
+      .map(_.toString).sorted
+    for (force <- Seq("plain", "salted")) {
+      spark.conf.set(graft.core.Sizing.ForceKey, force)
+      try {
+        val got = BinaryOps.subtract(l, r, Seq(Chrom)).as[(String, Option[Long], Option[Long],
+          String)].collect().map(_.toString).toSeq.sorted
+        assert(got == want, s"force=$force")
+      } finally spark.conf.unset(graft.core.Sizing.ForceKey)
+    }
+  }
+
+  test("subtract on long intervals runs the sweep's left-outer mode and equals the binned result") {
+    import spark.implicits._
+    // mean length ~700k > 2 x the widest auto bin (65536): Use.Outer sweeps
+    def mk(n: Int, seed: Long) = (0 until n).map { i =>
+      val s = (i * seed) % 40000000L
+      ("c" + (i % 2), s, s + 400000L + (i * 31L) % 600000L)
+    }
+    // unmatched extras past every right row: no bounds, no key, degenerate
+    val l = (mk(200, 2654435761L).map { case (c, s, e) => (c, Option(s), Option(e)) } ++
+      Seq[(String, Option[Long], Option[Long])](("c0", None, None),
+        (null, Some(5L), Some(900000L)),
+        ("c0", Some(60000000L), Some(60000000L)), ("c1", Some(61000000L), Some(60000000L))))
+      .toDF(Chrom, Start, End)
+    val r = mk(40, 40503L).toDF(Chrom, Start, End)
+    def canon(df: DataFrame) = df.collect().map(_.toSeq.toList.toString).toSeq.sorted
+    def under(force: String)(body: => DataFrame): Seq[String] = {
+      spark.conf.set(graft.core.Sizing.ForceKey, force)
+      try canon(body) finally spark.conf.unset(graft.core.Sizing.ForceKey)
+    }
+    val swept = under("salted")(BinaryOps.subtract(l, r, Seq(Chrom)))
+    assert(RangeJoin.lastAutoPairs.get()._1 == "sweep-outer")
+    val binned = under("plain")(BinaryOps.subtract(l, r, Seq(Chrom), binSize = 65536))
+    assert(swept == binned)
+    assert(swept.nonEmpty && swept != canon(l))
+  }
+
   // nearest_ranges (reference core/pyranges_main.py:2143-2391; touching
   // intervals have distance 1, overlap 0 per README.md:51-53).
   test("nearest: overlap=0, touching=1, else gap+1; min dist wins") {

@@ -254,9 +254,9 @@ class PlanContractSpec extends AnyFunSuite {
       ("c1", 300L, 310L, 12L), ("c1", 150000L, 150010L, 13L)), 2).toDF(Chrom, Start, End, RowId)
     val chunks = sc.parallelize(Seq(("c1", 0L, "ACGT" * 40)), 1).toDF(Chrom, "cstart", "chunk")
     val k = Seq(Chrom)
-    // (op, ids it attaches): subtract's gap window and its untouched-row
-    // anti join each number their own rows, and the two ids never meet;
-    // the GenomicFrame nearest also numbers a right side without row_id
+    // (op, ids it attaches): subtract's one left-outer join numbers its
+    // rows once for the gap window, matched and unmatched alike; the
+    // GenomicFrame nearest also numbers a right side without row_id
     val nearestOps = Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
       ("nearest", 1, () => BinaryOps.nearest(l, r, k)),
       ("GenomicFrame.nearestRanges", 2,
@@ -267,7 +267,7 @@ class PlanContractSpec extends AnyFunSuite {
       ("joinOverlaps(last)", 1, () => BinaryOps.joinOverlaps(l, r, k, multiple = "last")),
       ("overlap", 1, () => BinaryOps.overlap(l, r, k)),
       ("overlap(invert)", 1, () => BinaryOps.overlap(l, r, k, invert = true)),
-      ("subtract", 2, () => BinaryOps.subtract(l, r, k)),
+      ("subtract", 1, () => BinaryOps.subtract(l, r, k)),
       ("getSequenceChunked", 1, () => graft.ext.Seqs.getSequenceChunked(l, chunks))) ++
       nearestOps
     def ids(p: SparkPlan): Int = Walk.collect(p) {
@@ -300,6 +300,42 @@ class PlanContractSpec extends AnyFunSuite {
       try check("exchange reuse off", nearestOps)
       finally spark.conf.unset("spark.sql.exchange.reuse")
     } finally { pool.shutdown(); spark.catalog.clearCache() }
+  }
+
+  test("the interval ops leave no cached data behind, under plain and salted gates") {
+    import graft.ops.{BinaryOps, Coverage, UnaryOps}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // [100,400) spans several bins; RDD-backed, so nothing folds at plan time
+    val l = sc.parallelize(Seq(("c1", 0L, 10L), ("c1", 20L, 40L), ("c1", 100L, 400L),
+      ("c1", 1000L, 2000L)), 2).toDF(Chrom, Start, End)
+    val r = sc.parallelize(Seq(("c1", 5L, 8L), ("c1", 25L, 30L), ("c1", 28L, 35L),
+      ("c1", 300L, 310L)), 2).toDF(Chrom, Start, End)
+    val k = Seq(Chrom)
+    val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "countOverlaps" -> (() => BinaryOps.countOverlaps(l, r, k)),
+      "joinOverlaps" -> (() => BinaryOps.joinOverlaps(l, r, k)),
+      "overlap" -> (() => BinaryOps.overlap(l, r, k)),
+      "subtract" -> (() => BinaryOps.subtract(l, r, k)),
+      "merge" -> (() => UnaryOps.merge(r, k)),
+      "toRle" -> (() => Coverage.toRle(l, k)))
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    // RDDs an earlier test left persisted are not this test's business
+    val before = sc.getPersistentRDDs.keySet
+    // every op is checked on its own, so one leak does not hide another
+    val leaks = for (force <- Seq("plain", "salted"); (name, op) <- ops) yield {
+      spark.conf.set(graft.core.Sizing.ForceKey, force)
+      try {
+        op().collect()
+        val rdds = sc.getPersistentRDDs.keySet -- before
+        Option.unless(cache.isEmpty && rdds.isEmpty)(s"$name, force=$force (rdds $rdds)")
+      } finally {
+        spark.conf.unset(graft.core.Sizing.ForceKey)
+        spark.catalog.clearCache()
+      }
+    }
+    assert(leaks.flatten.isEmpty, leaks.flatten.mkString("cached data left behind: ", "; ", ""))
   }
 
   test("saltPlan demotes many-balanced-keys to plain, keeps hot-in-many salted") {
