@@ -5,7 +5,7 @@ import graft.plans.{IntervalSweepJoinExec, IntervalSweepJoinNode, SweepMode}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Cast, Divide, EqualTo, Expression, Floor, Greatest, GreaterThan, LessThan, Literal}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Sort-merge interval join (SURVEY.md §4.3 option (c) — the alternative
@@ -52,7 +52,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 object IntervalSweepJoin {
   import Cols.{End, Start}
 
-  private val MbCol = "_gx_mb"
+  private val MbCol = RangeJoin.BinPrefix + "mb"
 
   /** Mega-bin explode of both sides (fan-out ~1: bin >> interval), or
     * passthrough; a null-bound left row keeps one null-bin copy.
@@ -84,11 +84,12 @@ object IntervalSweepJoin {
     * when `megaBin` is set, suffix the right, build the node with the
     * full re-checked condition (keys [+ mega-bin] equal AND slack-
     * extended overlap AND, when mega-binned, the greatest-start-bin
-    * pair-dedup), and drop the suffixed right keys and the mega-bin. */
+    * pair-dedup AND `residual`, resolved against both sides' columns),
+    * and drop the suffixed right keys and the mega-bin. */
   private def sweep(left: DataFrame, right: DataFrame, keys0: Seq[String],
                     slack: Long, suffix: String, megaBin: Option[Long], mode: String,
                     joinType: JoinType = Inner, countAttr: Option[Attribute] = None,
-                    withTies: Boolean = false): DataFrame = {
+                    withTies: Boolean = false, residual: Option[Column] = None): DataFrame = {
     val (l1, r1, keys) = salted(left, right, keys0, slack, megaBin)
     val rKeys = keys.map(_ + suffix)
     val rs = Start + suffix
@@ -108,8 +109,14 @@ object IntervalSweepJoin {
           Cast(Greatest(Seq(Subtract64(ls, slack), Cast(rsA, LongType))), DoubleType),
           Literal(b.toDouble))), LongType))
     }
+    val spark = left.sparkSession
+    // analyzed over one relation holding both sides' attributes, so it
+    // reads them by their own exprIds
+    val extra = residual.map(c => GraftColumnBridge.ofRows(spark,
+      LocalRelation(lPlan.output ++ rPlan.output)).where(c).queryExecution.analyzed
+      .collectFirst { case f: Filter => f.condition }.get)
     val cond = (lKeyAttrs.zip(rKeyAttrs).map { case (a, b) => EqualTo(a, b) }
-      ++ overlap ++ dedup).reduce[Expression](And)
+      ++ overlap ++ dedup ++ extra).reduce[Expression](And)
     // pick tie-break: the non-coordinate right columns ascending, in
     // schema order — the same ordering tail the aggregation path's
     // min_by struct uses (RangeJoin.pickRollup)
@@ -121,7 +128,6 @@ object IntervalSweepJoin {
     val node = IntervalSweepJoinNode(lPlan, rPlan, lKeyAttrs, rKeyAttrs,
       ls, le, rsA, reA, slack, cond, joinType = joinType, mode = mode,
       countAttr = countAttr, pickTies = ties)
-    val spark = left.sparkSession
     IntervalSweepJoinExec.ensureStrategy(spark)
     GraftColumnBridge.ofRows(spark, node).drop(rKeys :+ MbCol: _*)
   }
@@ -170,12 +176,17 @@ object IntervalSweepJoin {
     * there is no explode, no rid machinery and no re-join. The right
     * side is projected to (keys, Start, End) before the exchange. No
     * mega-binning (a left row must be decided per row, not per bin
-    * copy) — per-key parallelism only, like the reference kernel. */
+    * copy) — per-key parallelism only, like the reference kernel.
+    * `residual`, a predicate over the left's columns and the right's
+    * suffixed ones (RangeJoin.suffixRight), is ANDed into the match; the
+    * right then keeps all its columns. */
   def exists(left: DataFrame, right: DataFrame, keys: Seq[String],
-             slack: Long = 0, anti: Boolean = false): DataFrame = {
+             slack: Long = 0, anti: Boolean = false,
+             residual: Option[Column] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
-    sweep(left, right.select((keys :+ Start :+ End).map(col): _*), keys, slack, "_b", None,
-      SweepMode.Pairs, if (anti) LeftAnti else LeftSemi)
+    val r = if (residual.isEmpty) right.select((keys :+ Start :+ End).map(col): _*) else right
+    sweep(left, r, keys, slack, "_b", None, SweepMode.Pairs, if (anti) LeftAnti else LeftSemi,
+      residual = residual)
   }
 
   /** Outer pair sweep: left/right/full outer through the operator's

@@ -206,7 +206,7 @@ object RangeJoin {
                 slack: Long = 0, suffix: String = "_b"): DataFrame =
     routedPairs(choose(left, right, keys, Use.Pairs), left, right, keys, slack, suffix)
 
-  private def routedPairs(route: Route, left: DataFrame, right: DataFrame,
+  private[graft] def routedPairs(route: Route, left: DataFrame, right: DataFrame,
                           keys: Seq[String], slack: Long, suffix: String): DataFrame =
     route match {
       case Sweep(mb) => IntervalSweepJoin.pairs(left, right, keys, slack, suffix, megaBin = mb)
@@ -233,11 +233,29 @@ object RangeJoin {
   def existsDispatch(left: DataFrame, right: DataFrame, keys: Seq[String],
                      slack: Long = 0, binSize: Long = RangeJoin.defaultBinSize,
                      contained: Boolean = false, anti: Boolean = false): DataFrame =
-    gatedChoice(left, right, keys, Use.Exists, contained) match {
-      case Some(Sweep(_)) => IntervalSweepJoin.exists(left, right, keys, slack, anti = anti)
-      case Some(Binned(bin)) => exists(left, right, keys, slack, bin, contained, anti)
-      case None => exists(left, right, keys, slack, binSize, contained, anti)
+    gatedChoice(left, right, keys, Use.Exists, contained).fold(
+      exists(left, right, keys, slack, binSize, contained, anti))(
+      routedExists(_, left, right, keys, slack, anti))
+
+  /** The semi/anti join for `route`: the sweep's native mode, or the
+    * binned [[exists]] at the route's bin. */
+  private[graft] def routedExists(route: Route, left: DataFrame, right: DataFrame,
+      keys: Seq[String], slack: Long, anti: Boolean,
+      residual: Option[Column] = None): DataFrame =
+    route match {
+      case Sweep(_) => IntervalSweepJoin.exists(left, right, keys, slack, anti = anti,
+        residual = residual)
+      case Binned(bin) => exists(left, right, keys, slack, bin, anti = anti,
+        residual = residual)
     }
+
+  /** The prefix of every bin column the interval-join builders add.
+    * IntervalJoinRewrite skips a join whose condition reads one, so a
+    * join it lowered through a builder is never matched again. */
+  private[graft] val BinPrefix = "_graft_bin_"
+
+  /** The binned joins' equi-join bin. */
+  private val BinCol = BinPrefix + "eq"
 
   /** floor(x / b) as a Column, exact for |x| < 2^52. */
   private def floorDiv(x: Column, b: Long): Column =
@@ -250,7 +268,9 @@ object RangeJoin {
     * stays a shuffle join. */
   private def broadcastable(df: DataFrame): Boolean = {
     val thr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    thr > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(thr)
+    // a stream has no batch plan to size
+    !df.isStreaming && thr > 0 &&
+      df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(thr)
   }
 
   private def maybeBroadcast(df: DataFrame, small: Boolean): DataFrame =
@@ -260,9 +280,14 @@ object RangeJoin {
     * `outer` keeps a null-bound row as one null-bin copy. */
   private def binned(df: DataFrame, binSize: Long, pad: Long, s: String, e: String,
                      outer: Boolean = false): DataFrame = {
-    val bins = sequence(floorDiv(col(s) - pad, binSize), floorDiv(col(e) + pad - 1, binSize))
-    df.withColumn("_bin", if (outer) explode_outer(bins) else explode(bins))
+    val bins = capped(floorDiv(col(s) - pad, binSize), floorDiv(col(e) + pad - 1, binSize))
+    df.withColumn(BinCol, if (outer) explode_outer(bins) else explode(bins))
   }
+
+  /** The bins `lo` to `hi`; a degenerate row (`hi < lo`) gets `lo`
+    * alone, the only bin its dedup can name, instead of a sequence
+    * counting down across every bin between its bounds. */
+  private def capped(lo: Column, hi: Column): Column = sequence(lo, greatest(lo, hi))
 
   /** Rename right-side columns that collide with the left, suffixing
     * (pyranges suffix contract, reference methods/join.py:34-35). */
@@ -322,7 +347,8 @@ object RangeJoin {
       .select(lCols.map(c => col(s"_l.$c").as(c)) :+ col(countCol): _*)
   }
 
-  /** [[pairs]] of the [[identified]] left, an unmatched bin copy null-padded. */
+  /** [[pairs]] of the [[identified]] left; an unmatched row keeps one
+    * null-padded copy. */
   private[graft] def leftOuterPairs(left: DataFrame, right: DataFrame, keys: Seq[String],
       slack: Long = 0, binSize: Long = RangeJoin.defaultBinSize): DataFrame =
     binnedJoin(identified(left), right, keys, slack, binSize, "_b", contained = false, outer = true)
@@ -342,7 +368,7 @@ object RangeJoin {
             contained: Boolean = false): DataFrame =
     binnedJoin(left, right, keys, slack, binSize, suffix, contained, outer = false)
 
-  /** [[pairs]]; `outer` keeps each unmatched left bin copy null-padded. */
+  /** [[pairs]]; `outer` keeps one null-padded copy of each unmatched left row. */
   private def binnedJoin(left: DataFrame, right: DataFrame, keys: Seq[String], slack: Long,
       binSize: Long, suffix: String, contained: Boolean, outer: Boolean): DataFrame = {
     val r0 = suffixRight(left, right, suffix)
@@ -372,19 +398,26 @@ object RangeJoin {
         col(s"r.$rs") <= col(s"l.$Start") && col(s"l.$End") <= col(s"r.$re")
       else
         col(s"l.$Start") - slack < col(s"r.$re") && col(s"l.$End") + slack > col(s"r.$rs")
-    val dedup = col("l._bin") ===
-      floorDiv(greatest(col(s"l.$Start") - slack, col(s"r.$rs")), binSize)
-    val cond = (keyEq :+ (col("l._bin") === col("r._bin")) :+ overlap :+ dedup).reduce(_ && _)
-    lb.join(rb, cond, if (outer) "left_outer" else "inner")
-      .drop(rKeys: _*).drop("_bin")
+    val lBin = col(s"l.$BinCol")
+    val dedup = lBin === floorDiv(greatest(col(s"l.$Start") - slack, col(s"r.$rs")), binSize)
+    val cond = (keyEq :+ (lBin === col(s"r.$BinCol")) :+ overlap :+ dedup).reduce(_ && _)
+    val joined = lb.join(rb, cond, if (outer) "left_outer" else "inner")
+    // one null-padded row per unmatched left row is enough: the copy in
+    // its first bin, or its one null-bin copy when a bound is NULL
+    (if (outer) joined.filter(col(s"r.$rs").isNotNull || lBin.isNull ||
+        lBin === floorDiv(col(s"l.$Start") - slack, binSize))
+      else joined).drop(rKeys: _*).drop(BinCol)
   }
 
   /** Existence-only range join: left_semi / left_anti. No dedup predicate
     * needed (semi/anti dedup inherently); the right side should usually be
-    * pre-merged per key by the caller for speed. */
+    * pre-merged per key by the caller for speed. `residual`, a predicate
+    * over the left's columns and the right's [[suffixRight]]-ed ones, is
+    * ANDed into the match: a row matches a right row only where it holds. */
   def exists(left: DataFrame, right: DataFrame, keys: Seq[String],
              slack: Long = 0, binSize: Long = RangeJoin.defaultBinSize,
-             contained: Boolean = false, anti: Boolean = false): DataFrame = {
+             contained: Boolean = false, anti: Boolean = false,
+             residual: Option[Column] = None): DataFrame = {
     val suffix = "_b"
     val r0 = suffixRight(left, right, suffix)
     val rKeys = keys.map(_ + suffix)
@@ -398,8 +431,9 @@ object RangeJoin {
     // copies, which reduce per row: it survives semi with any, anti with all.
     val pad = if (contained) 0L else slack
     val reach = if (contained) 0L else 2 * binSize
-    val rb = maybeBroadcast(r0.select((rKeys :+ rs :+ re).map(col): _*)
-      .withColumn("_bin", explode(sequence(floorDiv(col(rs) - reach, binSize),
+    val rCols = if (residual.isEmpty) rKeys :+ rs :+ re else r0.columns.toSeq
+    val rb = maybeBroadcast(r0.select(rCols.map(col): _*)
+      .withColumn(BinCol, explode(capped(floorDiv(col(rs) - reach, binSize),
         floorDiv(col(re) - 1, binSize)))), broadcastable(right)).alias("r")
     val joinType = if (anti) "left_anti" else "left_semi"
     val keyEq = keys.zip(rKeys).map { case (k, rk) => col(s"l.$k") === col(s"r.$rk") }
@@ -409,9 +443,10 @@ object RangeJoin {
     val hit =
       if (contained) col(s"r.$rs") <= col(s"l.$Start") && col(s"l.$End") <= col(s"r.$re")
       else col(s"l.$Start") - slack < col(s"r.$re") && col(s"l.$End") + slack > col(s"r.$rs")
-    val cond = (keyEq :+ (col("l._bin") === col("r._bin")) :+ hit).reduce(_ && _)
-    val single = left.filter(one).withColumn("_bin", lo).alias("l").join(rb, cond, joinType)
-      .drop("_bin")
+    val cond = ((keyEq :+ (col(s"l.$BinCol") === col(s"r.$BinCol")) :+ hit) ++ residual)
+      .reduce(_ && _)
+    val single = left.filter(one).withColumn(BinCol, lo).alias("l").join(rb, cond, joinType)
+      .drop(BinCol)
     if (contained) single
     else {
       val perRow = binned(identified(left.filter(!one)).withColumn("_n", hi - lo + 1), binSize,

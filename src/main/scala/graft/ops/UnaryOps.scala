@@ -29,14 +29,21 @@ object UnaryOps {
     * "Slack=1 will cluster also bookended intervals"). Reference kernel:
     * ruranges merge/cluster sort-sweep (reference methods/merge.py:10-45,
     * range_frame/range_frame.py:216-264).
+    *
+    * A row with a NULL bound matches nothing and changes no other row: a
+    * NULL Start sorts last, a NULL End never raises the running max, and
+    * such a row never starts a cluster.
     */
   private def clusterFlag(keys: Seq[String], slack: Long, tieBreak: Seq[Column]) = {
     val w = Window.partitionBy(keyCols(keys): _*)
-      .orderBy(Seq(col(Start), col(End)) ++ tieBreak: _*)
+      .orderBy(Seq(col(Start).asc_nulls_last, col(End)) ++ tieBreak: _*)
     val prevMax = max(col(End)).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    val flag = when(prevMax.isNull || col(Start) >= prevMax + slack, 1L).otherwise(0L)
+    val flag = when(nullBound, 0L)
+      .when(prevMax.isNull || col(Start) >= prevMax + slack, 1L).otherwise(0L)
     (w, flag)
   }
+
+  private def nullBound: Column = col(Start).isNull || col(End).isNull
 
   /** merge_overlaps (reference core/pyranges_main.py:2048-2141): union
     * overlapping (or within-`slack`, touching included) intervals into
@@ -57,11 +64,14 @@ object UnaryOps {
       case None      => mergePlain(df, keys, slack, countCol)
     }
 
+  /** merge below the salt gate: one window over the rows with both
+    * bounds, so a NULL-bound row is dropped, as the salted plan's
+    * explode drops it. */
   private[graft] def mergePlain(df: DataFrame, keys: Seq[String], slack: Long = 0,
                                 countCol: Option[String] = None): DataFrame = {
     val (w, flag) = clusterFlag(keys, slack, Nil)
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val base = df
+    val base = df.filter(!nullBound)
       .withColumn("_new", flag)
       .withColumn("_runMax", max(col(End)).over(wRun))
       .withColumn("_rn", row_number().over(w))
@@ -111,12 +121,14 @@ object UnaryOps {
 
   /** cluster_overlaps (reference core/pyranges_main.py:645-751): annotate
     * each row with a per-key cluster id (1-based, in (Start, End) sweep
-    * order) instead of collapsing. */
+    * order) instead of collapsing. A row with a NULL bound is in no
+    * cluster: its id is NULL, and the other rows' ids are those they get
+    * without it. */
   def cluster(df: DataFrame, keys: Seq[String], slack: Long = 0,
               clusterCol: String = "Cluster"): DataFrame = {
     val (w, flag) = clusterFlag(keys, slack, Nil)
-    df.withColumn(clusterCol,
-      sum(flag).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    df.withColumn(clusterCol, when(!nullBound,
+      sum(flag).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))))
   }
 
   /** complement_ranges (reference core/pyranges_main.py:5705-5896): gaps

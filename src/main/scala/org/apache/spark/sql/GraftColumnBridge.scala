@@ -13,6 +13,13 @@ object GraftColumnBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** `df`'s analyzed plan through the session optimizer. Unlike
+    * `queryExecution.optimizedPlan` it makes no batch-only check, so it
+    * also optimizes a plan over a stream. */
+  def optimize(df: DataFrame): LogicalPlan = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    ds.sparkSession.sessionState.optimizer.execute(ds.queryExecution.analyzed)
+  }
 }
 
 /** Disk-spillable append-only UnsafeRow buffer for graft's custom exec

@@ -51,24 +51,39 @@ class IntervalJoinRewriteSpec extends AnyFunSuite {
   }
 
   test("rewrite is exact in the presence of degenerate (End <= Start) rows") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import spark.implicits._
-    // degenerate left rows: End < Start and End == Start; such rows can
-    // still match (e.g. Start=500, End=3 needs s2<3 and e2>500) and the
-    // unclamped sequence() would throw Illegal sequence boundaries
-    val l = Seq(("c0", 500L, 3L, 0L), ("c0", 10L, 10L, 1L),
-      ("c0", 5L, 40L, 2L)).toDF(Chrom, Start, End, "id")
-    val r = Seq(("c0", 1L, 600L, 10L), ("c0", 30L, 35L, 11L))
-      .toDF(Chrom + "2", "s2", "e2", "id2")
-    def joined = l.join(r,
-      l(Chrom) === r(Chrom + "2") && l(Start) < r("e2") && r("s2") < l(End))
-    val naive = joined.collect().map(_.toSeq.toList).toSet
+    object Walk extends AdaptiveSparkPlanHelper
+    // degenerate rows: End < Start and End == Start; such rows can still
+    // match (e.g. Start=500, End=3 needs s2<3 and e2>500) and the
+    // unclamped sequence() would throw Illegal sequence boundaries. The
+    // 10M-long degenerate rows on both sides get one bin copy each: a
+    // sequence counting down from Start's bin to End's would make ~150k.
+    // RDD-backed, so the explode runs and reports its rows
+    val sc = spark.sparkContext
+    val l = sc.parallelize(Seq(("c0", 500L, 3L, 0L), ("c0", 10L, 10L, 1L),
+      ("c0", 5L, 40L, 2L), ("c0", 10000000L, 0L, 3L)), 2).toDF(Chrom, Start, End, "id")
+    val r = sc.parallelize(Seq(("c0", 1L, 600L, 10L), ("c0", 30L, 35L, 11L),
+      ("c0", 10000000L, 0L, 12L)), 2).toDF(Chrom + "2", "s2", "e2", "id2")
+    def joined(jt: String) = l.join(r,
+      l(Chrom) === r(Chrom + "2") && l(Start) < r("e2") && r("s2") < l(End), jt)
+    val jts = Seq("inner", "left_semi", "left_anti")
+    val naive = jts.map(jt => jt -> joined(jt).collect().map(_.toSeq.toList).toSet).toMap
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ IntervalJoinRewrite
     try {
-      val plan = joined.queryExecution.optimizedPlan.toString
-      assert(plan.contains("_graft_bin_"), s"rewrite did not fire:\n$plan")
-      assert(joined.collect().map(_.toSeq.toList).toSet == naive)
-      assert(naive.exists(_(1) == 500L)) // the degenerate match is real
+      for (jt <- jts) {
+        val df = joined(jt)
+        val plan = df.queryExecution.optimizedPlan.toString
+        assert(plan.contains("_graft_bin_"), s"$jt rewrite did not fire:\n$plan")
+        assert(df.collect().map(_.toSeq.toList).toSet == naive(jt), jt)
+        val copies = Walk.collect(df.queryExecution.executedPlan) {
+          case g: GenerateExec => g.metrics("numOutputRows").value
+        }.sum
+        assert(copies < 100, s"$jt exploded $copies bin copies")
+      }
+      assert(naive("inner").exists(_(1) == 500L)) // the degenerate match is real
     } finally {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == IntervalJoinRewrite)
@@ -268,8 +283,8 @@ class IntervalJoinRewriteSpec extends AnyFunSuite {
       ("c0", Some(5L), None, 3L),      // null End
       ("c1", Some(100L), Some(140L), 4L)
     ).toDF(Chrom, Start, End, "id")
-      // a MAP payload: semi/anti collapse bin copies grouping by the rid
-      // and the left row, so the map is a grouping key
+      // a MAP payload: semi/anti reduce wide rows' bin copies on the
+      // engine row id alone, so the map is never a grouping key
       .withColumn("m", map(lit("id"), col("id")))
     val r = Seq(
       (null.asInstanceOf[String], 0L, 50L, 10L),
@@ -287,11 +302,11 @@ class IntervalJoinRewriteSpec extends AnyFunSuite {
       try {
         val plan = joined.queryExecution.optimizedPlan
         assert(plan.toString.contains("_graft_bin_"), s"$jt rewrite did not fire:\n$plan")
-        if (jt != "inner") assert(plan.collect {
+        assert(!plan.collect {
           case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
             a.groupingExpressions.exists(
               _.dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
-        }.contains(true), s"$jt: no MAP grouping key:\n$plan")
+        }.contains(true), s"$jt: a MAP grouping key:\n$plan")
         val binned = joined.collect().map(_.toSeq.toList)
           .groupBy(identity).view.mapValues(_.size).toMap
         assert(binned == naive, s"$jt mismatch: binned=$binned naive=$naive")
@@ -364,7 +379,7 @@ class IntervalJoinRewriteSpec extends AnyFunSuite {
     try {
       val exec = joined.queryExecution.executedPlan.toString
       assert(exec.contains("IntervalSweepJoin"), s"no sweep in:\n$exec")
-      assert(exec.contains("_graft_bin_mbl"), s"sweep not salted in:\n$exec")
+      assert(exec.contains("_graft_bin_mb"), s"sweep not salted in:\n$exec")
       assert(graft.join.RangeJoin.lastAutoPairs.get()._1 == "sweep-salted")
       assert(joined.collect().map(_.toSeq.toList).toSet == naive)
       assert(naive.nonEmpty)
@@ -432,6 +447,94 @@ class IntervalJoinRewriteSpec extends AnyFunSuite {
         assert(ruleIds == naiveIds && opsIds == naiveIds, s"$shape $jt rows")
       } finally spark.conf.unset("spark.graft.join.autoThreshold")
     }
+  }
+
+  def withRule[T](strategy: String)(body: => T): T = {
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ IntervalJoinRewrite
+    spark.conf.set("spark.graft.join.strategy", strategy)
+    try body finally {
+      spark.conf.unset("spark.graft.join.strategy")
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations.filterNot(_ == IntervalJoinRewrite)
+    }
+  }
+
+  def bag(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq.toList).groupBy(identity).view.mapValues(_.size).toMap
+
+  test("conjuncts beyond the overlap shape are kept on every route and join type") {
+    import spark.implicits._
+    val l0 = mkDF(300, 4000, 200, 2654435761L)
+    // duplicate left rows: semi/anti must keep their multiplicity
+    val l = l0.unionAll(l0.limit(20))
+    val r = mkDF(200, 4000, 60, 40503L).toDF(Chrom + "2", "s2", "e2", "id2")
+    for (jt <- Seq("inner", "left_semi", "left_anti")) {
+      def joined = l.join(r, l(Chrom) === r(Chrom + "2") && l(Start) < r("e2") &&
+        r("s2") < l(End) && l("id") % 2 === r("id2") % 2, jt)
+      val naive = bag(joined)
+      assert(naive.nonEmpty, jt)
+      // the residual must cut: without it the result differs
+      assert(bag(l.join(r, l(Chrom) === r(Chrom + "2") && l(Start) < r("e2") &&
+        r("s2") < l(End), jt)) != naive, jt)
+      for (strategy <- Seq("binned", "sweep", "auto")) withRule(strategy) {
+        val plan = joined.queryExecution.optimizedPlan.toString
+        assert(plan.contains("_graft_bin_") || plan.contains("IntervalSweepJoin"),
+          s"$jt/$strategy rewrite did not fire:\n$plan")
+        assert(bag(joined) == naive, s"$jt/$strategy mismatch")
+      }
+    }
+  }
+
+  test("binned semi/anti stay exact on left rows wider than two bins") {
+    import spark.implicits._
+    // bin 64: rows up to 2 bins wide join as one copy, wider rows join
+    // one copy per bin and reduce per row; both kinds, duplicates and a
+    // null bound on the left
+    val l = Seq(("c0", 10L, 60L, 0L), ("c0", 10L, 60L, 0L), ("c0", 0L, 1000L, 1L),
+      ("c0", 0L, 1000L, 1L), ("c0", 300L, 900L, 2L), ("c0", 2000L, 2600L, 3L),
+      ("c1", 0L, 5000L, 4L), ("c0", 5000L, 5100L, 5L))
+      .toDF(Chrom, Start, End, "id")
+      .union(Seq(("c0", 7L, 9L)).toDF(Chrom, Start, "id")
+        .select(col(Chrom), col(Start), lit(null).cast("long").as(End), col("id")))
+    val r = Seq(("c0", 950L, 960L, 10L), ("c0", 40L, 50L, 11L), ("c0", 2590L, 2700L, 12L),
+      ("c1", 4990L, 4999L, 13L)).toDF(Chrom + "2", "s2", "e2", "id2")
+    spark.conf.set(graft.join.RangeJoin.BinSizeKey, "64")
+    try for (jt <- Seq("left_semi", "left_anti")) {
+      def joined = l.join(r,
+        l(Chrom) === r(Chrom + "2") && l(Start) < r("e2") && r("s2") < l(End), jt)
+      val naive = bag(joined)
+      withRule("binned") {
+        val plan = joined.queryExecution.optimizedPlan.toString
+        assert(plan.contains("_graft_bin_"), s"$jt rewrite did not fire:\n$plan")
+        assert(bag(joined) == naive, s"$jt mismatch")
+      }
+    } finally spark.conf.unset(graft.join.RangeJoin.BinSizeKey)
+  }
+
+  test("a stream-static join lowers through the binned builder per micro-batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val r = Seq(("c", 3L, 8L, 1L), ("c", 40L, 55L, 2L), ("d", 0L, 100L, 3L))
+      .toDF("k2", "s2", "e2", "id2")
+    val batch = Seq(("c", 1L, 5L), ("c", 50L, 60L), ("c", 10L, 20L), ("d", 90L, 400L))
+    def run(name: String): (Set[List[Any]], String) = {
+      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, Long)]
+      val s = in.toDF().toDF(Chrom, Start, End)
+      val q = s.join(r, s(Chrom) === r("k2") && s(Start) < r("e2") && r("s2") < s(End))
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        in.addData(batch: _*)
+        q.processAllAvailable()
+        (spark.table(name).collect().map(_.toSeq.toList).toSet,
+          q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+            .streamingQuery.lastExecution.optimizedPlan.toString)
+      } finally q.stop()
+    }
+    val (naive, _) = run("ijr_naive")
+    val (rewritten, plan) = withRule("auto")(run("ijr_rule"))
+    assert(plan.contains("_graft_bin_"), s"stream rewrite did not fire:\n$plan")
+    assert(rewritten == naive && naive.size == 3)
   }
 
   test("rule leaves non-interval joins untouched") {

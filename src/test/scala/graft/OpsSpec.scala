@@ -304,6 +304,39 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("a NULL-bound row changes no other row in merge, overlap, subtract, cluster " +
+    "and countOverlaps, under forced plain and salted gates") {
+    import spark.implicits._
+    // the NULL-Start right row sorts first in an ascending sweep: its End
+    // must not become the running max that swallows the other rows
+    val r = Seq(("c1", Some(100L), 200L), ("c1", Some(300L), 400L), ("c1", None, 1000L))
+      .toDF(Chrom, Start, End)
+    val l = Seq(("c1", 150L, 160L), ("c1", 350L, 380L), ("c1", 500L, 510L))
+      .toDF(Chrom, Start, End)
+    def bounds(df: DataFrame) = df.select(Start, End).collect()
+      .map(x => (Option(x.get(0)), x.getLong(1))).toSeq.sortBy(_.toString)
+    def starts(df: DataFrame) = df.select(Start).collect().map(_.getLong(0)).toSeq.sorted
+    val k = Seq(Chrom)
+    for (force <- Seq("plain", "salted")) {
+      spark.conf.set(graft.core.Sizing.ForceKey, force)
+      try {
+        assert(bounds(UnaryOps.merge(r, k)) == Seq(Some(100L) -> 200L, Some(300L) -> 400L),
+          s"merge $force")
+        assert(starts(BinaryOps.overlap(l, r, k)) == Seq(150L, 350L), s"overlap $force")
+        assert(starts(BinaryOps.overlap(l, r, k, invert = true)) == Seq(500L),
+          s"overlap invert $force")
+        assert(bounds(BinaryOps.subtract(l, r, k)) == Seq(Some(500L) -> 510L),
+          s"subtract $force")
+        val cl = UnaryOps.cluster(r, k).select(End, "Cluster").collect()
+          .map(x => (x.getLong(0), Option.unless(x.isNullAt(1))(x.getLong(1)))).toSeq.sorted
+        assert(cl == Seq(200L -> Some(1L), 400L -> Some(2L), 1000L -> None), s"cluster $force")
+        val n = BinaryOps.countOverlaps(l, r, k, countCol = "n").select(Start, "n").collect()
+          .map(x => (x.getLong(0), x.getLong(1))).toSeq.sorted
+        assert(n == Seq(150L -> 1L, 350L -> 1L, 500L -> 0L), s"countOverlaps $force")
+      } finally spark.conf.unset(graft.core.Sizing.ForceKey)
+    }
+  }
+
   // subtract_overlaps (reference core/pyranges_main.py:3522-3643 doctest:
   // one row can split into many; covered rows disappear).
   test("subtract splits and drops covered rows") {

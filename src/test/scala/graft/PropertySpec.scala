@@ -285,9 +285,9 @@ class PropertySpec extends AnyFunSuite {
 
   test("sweep operator equals the naive join for inner/semi/anti on random inputs") {
     import spark.implicits._
-    spark.conf.set("spark.graft.join.strategy", "sweep")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.IntervalJoinRewrite
+    def rule(on: Boolean): Unit = spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ == graft.plans.IntervalJoinRewrite) ++
+        Option.when(on)(graft.plans.IntervalJoinRewrite)
     try {
       forAll(genIntervals, genIntervals) { (lr, rr) =>
         val l = lr.zipWithIndex.map { case ((c, s, e), i) => (c, s, e, i.toLong) }
@@ -297,24 +297,23 @@ class PropertySpec extends AnyFunSuite {
         for (jt <- Seq("inner", "left_semi", "left_anti")) {
           def joined = l.join(r,
             l(Chrom) === r(Chrom + "2") && l(Start) < r("e2") && r("s2") < l(End), jt)
-          // rule off -> Spark's own plan; rule on + strategy=sweep -> exec
-          spark.experimental.extraOptimizations =
-            spark.experimental.extraOptimizations
-              .filterNot(_ == graft.plans.IntervalJoinRewrite)
+          // rule off -> Spark's own plan; rule on -> the strategy's builder:
+          // the sweep's native modes or the binned pair/exists joins
+          rule(on = false)
           val naive = joined.collect().map(_.toSeq.toList)
             .groupBy(identity).view.mapValues(_.size).toMap
-          spark.experimental.extraOptimizations =
-            spark.experimental.extraOptimizations :+ graft.plans.IntervalJoinRewrite
-          val swept = joined.collect().map(_.toSeq.toList)
-            .groupBy(identity).view.mapValues(_.size).toMap
-          assert(swept == naive, s"$jt diverged from naive join")
+          rule(on = true)
+          for (strategy <- Seq("sweep", "binned")) {
+            spark.conf.set("spark.graft.join.strategy", strategy)
+            val rewritten = joined.collect().map(_.toSeq.toList)
+              .groupBy(identity).view.mapValues(_.size).toMap
+            assert(rewritten == naive, s"$jt ($strategy) diverged from naive join")
+          }
         }
       }
     } finally {
       spark.conf.unset("spark.graft.join.strategy")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_ == graft.plans.IntervalJoinRewrite)
+      rule(on = false)
     }
   }
 
