@@ -15,6 +15,12 @@ import org.apache.spark.sql.functions._
   *
   * Results are recorded in BASELINE.md ("salted crossover" table).
   * Usage: SPARK_GRAFT_CPUS=32 sbt -batch "harness/runMain graft.SaltBench [factor]"
+  *
+  * `--manykeys` relabels the rows over 2000 balanced keys; `--sorted`
+  * also writes that table sorted by (Chromosome, Start), the layout of
+  * a coordinate-sorted file, whose first rows show only its first keys.
+  * Either way the run prints the salt gate's view of the table: the key
+  * count of the first-rows sample, the whole input's, and the plan.
   */
 object SaltBench {
   import Cols._
@@ -77,19 +83,22 @@ object SaltBench {
     // --manykeys: same bytes, ~2000 distinct keys — probes whether the
     // salted split still pays when the plain window already has more
     // keys than cores (parallelism comes free)
-    val manyKeys = args.contains("--manykeys")
+    val sorted = args.contains("--sorted")
+    val manyKeys = sorted || args.contains("--manykeys")
     // v2: tables of the earlier per-copy hot-key formula differ
     val dir = "/tmp/graft_saltbench/v2"
     val path =
-      if (manyKeys) s"$dir/gr_x${factor}_mk.parquet"
+      if (sorted) s"$dir/gr_x${factor}_mk_sorted.parquet"
+      else if (manyKeys) s"$dir/gr_x${factor}_mk.parquet"
       else if (hotPct == 50) s"$dir/gr_x$factor.parquet"
       else s"$dir/gr_x${factor}_h$hotPct.parquet"
     if (!new java.io.File(path).exists) {
       println(s"[saltbench] generating $path ...")
       val t = hotKeyTable(spark, sfDir, factor, hotPct)
-      val out = if (manyKeys)
+      val mk = if (manyKeys)
         t.withColumn(Chrom, concat(lit("k"), pmod(col(RowId), lit(2000L))))
       else t
+      val out = if (sorted) mk.sort(Chrom, Start) else mk
       out.write.mode("overwrite").parquet(path)
     }
     val df = spark.read.parquet(path)
@@ -102,6 +111,14 @@ object SaltBench {
     val fire = graft.core.Sizing.decide("saltbench/input",
       graft.core.Sizing.saltedInputThreshold, df)
     println(s"[saltbench] gate(${graft.core.Sizing.saltedInputThreshold >> 20}MB)=$fire")
+    // the key rule of the salt gate: the first-rows sample, then the
+    // census that runs when the sample cannot settle it
+    val sampled = graft.core.Sizing.sideStats(df, Seq(Chrom))
+    val whole = graft.core.Sizing.keyCensus(df, Seq(Chrom))
+    println(f"[saltbench] keys sample=${sampled.distinctKeys}%d " +
+      f"(hot ${sampled.hotShare}%.3f) whole=${whole.distinctKeys}%d " +
+      f"(hot ${whole.hotShare}%.3f, ${if (whole.census) "census" else "sample"}) " +
+      s"saltPlan=${graft.core.Sizing.saltPlan(df, Seq(Chrom))}")
 
     // the salted side's mega-bin: the dispatchers' span-scaled bin, with
     // the narrow-span and many-keys demotions off (--manykeys measures

@@ -1,6 +1,9 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** Input-size heuristics shared by the operators that auto-switch
   * between a low-stage-count plan (small inputs) and a salted/two-phase
@@ -36,8 +39,9 @@ object Sizing {
     * the hot-key table. */
   val saltedInputThreshold: Long = 32L << 20
 
-  /** Last auto-switch decision: (operator, leafBytes, wentSalted).
-    * Test/debug observability only. */
+  /** Last auto-switch decision: (operator, leafBytes, wentSalted). For
+    * the per-key sweeps ([[saltBin]]) wentSalted is the final plan, after
+    * [[saltPlan]]'s demotions. Test/debug observability only. */
   val lastDecision =
     new java.util.concurrent.atomic.AtomicReference[(String, Long, Boolean)]()
 
@@ -45,27 +49,53 @@ object Sizing {
     * rows sampled, mean interval length over the rows with both bounds
     * (1.0 when none), min Start / max End, distinct `keys` tuples (NULL
     * is a key, as in groupBy; 1 when `keys` is empty) and the rows of
-    * the hottest key tuple. */
+    * the hottest key tuple. With `census` the three key counts (`rows`,
+    * `distinctKeys`, `hottestKeyRows`) cover the whole input instead
+    * ([[keyCensus]]); length and span stay the sample's. */
   final case class SideStats(rows: Long, meanLen: Double,
                              minStart: Option[Long], maxEnd: Option[Long],
-                             distinctKeys: Long, hottestKeyRows: Long) {
+                             distinctKeys: Long, hottestKeyRows: Long,
+                             census: Boolean = false) {
     /** Coordinate span, at least 1. */
     def span: Long = (for (s <- minStart; e <- maxEnd) yield e - s)
       .fold(1L)(math.max(_, 1L))
 
+    /** Share of `rows` in the hottest key tuple. */
+    def hotShare: Double = hottestKeyRows.toDouble / math.max(rows, 1L)
+
     /** More keys than 4x the cores and no key over 1/(2 x cores) of the
       * rows: the plain per-key window already out-parallelizes the
       * cores, so salting only adds stages (measured 0.56-0.84x at 2000
-      * balanced keys, BASELINE.md "--manykeys"). One-sided against the
-      * first-rows sample: key-clustered data (the common coordinate-
-      * sorted layout) shows few keys there and keeps salting. */
+      * balanced keys, BASELINE.md "--manykeys"). A sample that says yes
+      * is believed; a full sample that says no may only be showing the
+      * first keys of a key-clustered (coordinate-sorted) input, which
+      * [[keyCensus]] settles. */
     def manyBalancedKeys(cores: Int): Boolean =
-      distinctKeys >= 4L * cores &&
-        hottestKeyRows.toDouble / math.max(rows, 1L) <= 1.0 / (2 * cores)
+      distinctKeys >= 4L * cores && hotShare <= 1.0 / (2 * cores)
   }
 
   private val statsMemo =
     new java.util.concurrent.ConcurrentHashMap[AnyRef, SideStats]()
+
+  private def memoKey(df: DataFrame, keys: Seq[String], sampleRows: Int): AnyRef = {
+    val analyzed = df.queryExecution.analyzed
+    (analyzed.canonicalized, keys, sampleRows, inputFingerprint(analyzed))
+  }
+
+  private def remember(key: AnyRef, stats: SideStats): SideStats = {
+    if (statsMemo.size >= 512) statsMemo.clear()
+    statsMemo.put(key, stats)
+    stats
+  }
+
+  /** `body`'s jobs under their own description; the caller's job group
+    * and description are left alone. */
+  private def labelled[T](df: DataFrame, description: String)(body: => T): T = {
+    val sc = df.sparkSession.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try body finally sc.setLocalProperty("spark.job.description", caller)
+  }
 
   /** The one gate sampler of the ops layer and of IntervalJoinRewrite.
     *
@@ -74,8 +104,7 @@ object Sizing {
     * scans further partitions (4x more each round) only while the rows
     * fall short — usually one job with one task at any table size,
     * where a `limit().agg()` runs a LocalLimit task on every split plus
-    * an exchange. Its jobs carry the description "graft gate sample";
-    * the caller's job group is left alone.
+    * an exchange. Its jobs carry the description "graft gate sample".
     *
     * Memoized per plan: the key is the canonicalized analyzed plan, the
     * keys, `sampleRows` and the input files with their bytes, so a path
@@ -87,29 +116,61 @@ object Sizing {
   def sideStats(df: DataFrame, keys: Seq[String] = Nil,
                 sampleRows: Int = 100000): SideStats = {
     import org.apache.spark.sql.functions.col
-    val analyzed = df.queryExecution.analyzed
-    val memoKey = (analyzed.canonicalized, keys, sampleRows, inputFingerprint(analyzed))
-    val hit = statsMemo.get(memoKey)
+    val key = memoKey(df, keys, sampleRows)
+    val hit = statsMemo.get(key)
     if (hit ne null) return hit
-    val sc = df.sparkSession.sparkContext
-    val description = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription("graft gate sample")
-    val sample =
-      try df.select(keys.map(col) ++ Seq(col(Cols.Start).cast("long"),
-          col(Cols.End).cast("long")): _*).limit(sampleRows).collect()
-      finally sc.setLocalProperty("spark.job.description", description)
+    val sample = labelled(df, "graft gate sample")(
+      df.select(keys.map(col) ++ Seq(col(Cols.Start).cast("long"),
+        col(Cols.End).cast("long")): _*).limit(sampleRows).collect())
     val k = keys.length
     val bounds = sample.map(r => (Option.when(!r.isNullAt(k))(r.getLong(k)),
       Option.when(!r.isNullAt(k + 1))(r.getLong(k + 1))))
     val lens = bounds.collect { case (Some(s), Some(e)) => (e - s).toDouble }
     val perKey = sample.groupMapReduce(_.toSeq.take(k))(_ => 1L)(_ + _)
-    val stats = SideStats(sample.length,
+    remember(key, SideStats(sample.length,
       if (lens.isEmpty) 1.0 else math.max(lens.sum / lens.length, 1.0),
       bounds.flatMap(_._1).minOption, bounds.flatMap(_._2).maxOption,
-      perKey.size, perKey.values.maxOption.getOrElse(0L))
-    if (statsMemo.size >= 512) statsMemo.clear()
-    statsMemo.put(memoKey, stats)
-    stats
+      perKey.size, perKey.values.maxOption.getOrElse(0L)))
+  }
+
+  /** [[sideStats]] whose key counts cover the whole input when the take
+    * cannot settle [[SideStats.manyBalancedKeys]]: it came back full and
+    * does not already show many balanced keys. A coordinate-sorted
+    * input's first 100k rows hold its first one or two keys, whatever
+    * the key count of the input: 48 balanced (Chromosome, Strand) keys
+    * read as 2 there and took the salted sweeps, which lose about 2x to
+    * the plain window at that key count (BASELINE.md "Key census").
+    *
+    * The census is one job, labelled "graft gate census", that reads
+    * only the key columns: per-split key counts, summed per key after
+    * one shuffle and folded into (rows, distinct keys, hottest key) on
+    * the executors, so the driver receives one tuple. It is memoized in
+    * place of the sample's statistics: a repeat, or any later
+    * [[sideStats]] of the same (plan, keys), runs no job. An RDD
+    * aggregate rather than `groupBy(keys).count()`, because adaptive
+    * execution runs each shuffle stage of a DataFrame as its own job. */
+  def keyCensus(df: DataFrame, keys: Seq[String], sampleRows: Int = 100000): SideStats = {
+    import org.apache.spark.sql.functions.col
+    val st = sideStats(df, keys, sampleRows)
+    val cores = math.max(df.sparkSession.sparkContext.defaultParallelism, 1)
+    if (st.census || keys.isEmpty || st.rows < sampleRows || st.manyBalancedKeys(cores)) st
+    else {
+      val (rows, distinct, hottest) = labelled(df, "graft gate census") {
+        df.select(keys.map(col): _*).queryExecution.toRdd.mapPartitions { rows =>
+          // the iterator reuses its row: copy a key only when it is new
+          val counts = new java.util.HashMap[InternalRow, Array[Long]]()
+          rows.foreach { r =>
+            val n = counts.get(r)
+            if (n eq null) counts.put(r.copy(), Array(1L)) else n(0) += 1
+          }
+          counts.asScala.iterator.map { case (key, n) => key -> n(0) }
+        }.reduceByKey(_ + _).values.aggregate((0L, 0L, 0L))(
+          (a, n) => (a._1 + n, a._2 + 1, math.max(a._3, n)),
+          (a, b) => (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3)))
+      }
+      remember(memoKey(df, keys, sampleRows),
+        st.copy(rows = rows, distinctKeys = distinct, hottestKeyRows = hottest, census = true))
+    }
   }
 
   /** Hash of the file list under each file-source leaf, with its bytes. */
@@ -124,43 +185,48 @@ object Sizing {
 
   /** Span- and key-aware dispatch decision: Some(binWidth) = salt with
     * that mega-bin, None = stay on the plain per-key window regardless
-    * of input size, because the sample shows the split cannot pay:
+    * of input size, because the statistics show the split cannot pay:
     *
     *  - NARROW SPAN: fewer than ~4 floor-width bins of coordinates —
     *    a fixed 1M-wide bin over a ~1M-coordinate span handed the
     *    salted merge two bins of parallelism and it LOST 0.78x at
     *    609 MB (BASELINE.md "salted crossover" notes).
-    *  - MANY BALANCED KEYS: [[SideStats.manyBalancedKeys]].
+    *  - MANY BALANCED KEYS: [[SideStats.manyBalancedKeys]], on the
+    *    sample when it settles the rule, else on the [[keyCensus]].
     *
     * The bin aims for ~8 bins per core over the sampled coordinate
     * span, rounded up in powers of two, clamped to [16384, 2^24].
     * Both signals come from [[sideStats]] of `df` with `keys`: one
     * bounded take, memoized per plan, so the length/span gates of the
-    * same side and key set reuse it. */
+    * same side and key set reuse it. A narrow span or a forced gate
+    * decides without the census. */
   def saltPlan(df: DataFrame, keys: Seq[String] = Nil,
                sampleRows: Int = 100000): Option[Long] = {
     val cores = math.max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    val st = sideStats(df, keys, sampleRows)
-    val manyBalancedKeys = st.manyBalancedKeys(cores)
+    val sampled = sideStats(df, keys, sampleRows)
     def binFor(span: Long): Long = {
       var b = 16384L
       while (b < span / (8L * cores) && b < (1L << 24)) b *= 2
       b
     }
-    val plan = forced() match {
+    val narrow = sampled.span < 4L * 16384L
+    val force = forced()
+    val st = if (force.isEmpty && !narrow) keyCensus(df, keys, sampleRows) else sampled
+    val manyBalancedKeys = st.manyBalancedKeys(cores)
+    val plan = force match {
       // forced salted: the audit wants the salted plan SHAPE, so the
       // narrow-span / many-balanced-keys demotions are bypassed
-      case Some(true) => Some(binFor(st.span))
+      case Some(true) => Some(binFor(sampled.span))
       case Some(false) => None
       // an empty sample has span 1: narrow
-      case None =>
-        if (manyBalancedKeys || st.span < 4L * 16384L) None
-        else Some(binFor(st.span))
+      case None => Option.unless(manyBalancedKeys || narrow)(binFor(sampled.span))
     }
-    Sizing.log.info("[graft.sizing] saltPlan={}",
+    log.info("[graft.sizing] saltPlan={} keys={} hotShare={} ({})",
       plan.map(_.toString).getOrElse(
         if (manyBalancedKeys) "plain (many balanced keys)"
-        else "plain (narrow span or empty)"))
+        else "plain (narrow span, empty or forced)"),
+      st.distinctKeys.asInstanceOf[AnyRef], f"${st.hotShare}%.4f",
+      if (st.census) "census" else "sample")
     plan
   }
 
@@ -228,9 +294,13 @@ object Sizing {
     * leaf-bytes gate over `gate` at [[saltedInputThreshold]], and only
     * once it fires, the span/key refinement [[saltPlan]] of `sample`.
     * Some(bin) = the salted plan over `bin`-wide mega-bins, None = the
-    * plain per-key window. */
+    * plain per-key window; [[lastDecision]] records which. */
   def saltBin(op: String, sample: DataFrame, keys: Seq[String],
-              gate: DataFrame*): Option[Long] =
-    if (decide(op, saltedInputThreshold, gate: _*)) saltPlan(sample, keys)
-    else None
+              gate: DataFrame*): Option[Long] = {
+    val plan =
+      if (decide(op, saltedInputThreshold, gate: _*)) saltPlan(sample, keys) else None
+    // the plan taken, not the bytes gate alone: a demoted plan is plain
+    lastDecision.set(lastDecision.get().copy(_3 = plan.isDefined))
+    plan
+  }
 }

@@ -265,12 +265,18 @@ object RangeJoin {
     * of the PRE-explode plan (bin fan-out is a small constant factor).
     * Uses the session's own autoBroadcastJoinThreshold so cluster configs
     * are respected; at 100 TB the scan stats blow past it and every join
-    * stays a shuffle join. */
+    * stays a shuffle join. A side the caller wrapped in `broadcast()`
+    * (IntervalJoinRewrite carries a join's BROADCAST hint so) is
+    * broadcast without an estimate. */
   private def broadcastable(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
     val thr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    // a stream has no batch plan to size
-    !df.isStreaming && thr > 0 &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(thr)
+    df.queryExecution.analyzed match {
+      case ResolvedHint(_, hint) if hint.strategy.contains(BROADCAST) => true
+      // a stream has no batch plan to size
+      case _ => !df.isStreaming && thr > 0 &&
+        df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(thr)
+    }
   }
 
   private def maybeBroadcast(df: DataFrame, small: Boolean): DataFrame =

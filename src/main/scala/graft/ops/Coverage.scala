@@ -42,10 +42,11 @@ object Coverage {
       Seq(scoreA, scoreB), saltBin)
 
   /** The RLE sweep of [[toRle]] (one event stream) and [[rleBinary]]
-    * (two): each stream row emits (Start, +w) and (End, -w) for its
-    * weights w, one score per weight; events aggregate per (key,
-    * position), [[UnaryOps.runningSums]] turns them into per-key
-    * running depths, and each breakpoint pairs with the next one.
+    * (two): each stream row with both bounds emits (Start, +w) and
+    * (End, -w) for its weights w, one score per weight; events
+    * aggregate per (key, position), [[UnaryOps.runningSums]] turns them
+    * into per-key running depths, and each breakpoint pairs with the
+    * next one.
     *
     * saltBin is the decision of [[Sizing.saltBin]]: the plain per-key
     * window is a straggler on big inputs (one hot chromosome = one
@@ -60,8 +61,9 @@ object Coverage {
                              scores: Seq[String], saltBin: Option[Long]): DataFrame = {
     val k = keys.map(col)
     val ds = scores.indices.map(i => s"_d$i")
+    // a NULL-bound row covers nothing, as in merge
     def events(df: DataFrame, ws: Seq[Column]): DataFrame =
-      df.select(k :+ explode(array(
+      df.filter(col(Start).isNotNull && col(End).isNotNull).select(k :+ explode(array(
           struct(col(Start).as("_pos") +: ws.zip(ds).map { case (w, d) => w.as(d) }: _*),
           struct(col(End).as("_pos") +: ws.zip(ds).map { case (w, d) => (-w).as(d) }: _*)
         )).as("_ev"): _*)

@@ -276,7 +276,8 @@ object UnaryOps {
     * #bins, (2) turns the tiny per-bin totals into per-key exclusive
     * offsets, (3) joins them back; a next position crossing a bin edge
     * is the next non-empty bin's first `pos`. Identical output
-    * (property-tested, OpsSpec) for sums that are exact in their type. */
+    * (property-tested, OpsSpec) for sums that are exact in their type;
+    * with `nextCol`, for non-NULL positions (the RLE drops the rest). */
   private[graft] def runningSums(df: DataFrame, keys: Seq[String], pos: Column,
       tieBreak: Seq[Column], sums: Seq[(String, Column)], saltBin: Option[Long],
       nextCol: Option[String] = None): DataFrame = {
@@ -301,16 +302,22 @@ object UnaryOps {
         val totals = idx.map(i => sum(sums(i)._2).as(s"_rstot$i")) ++
           nextCol.map(_ => min(pos).as("_rsfirst"))
         val perBin = d.groupBy(k :+ col("_rsmb"): _*).agg(totals.head, totals.tail: _*)
+        // NULL, as the window's sum, until a non-NULL value
         val offsets = idx.foldLeft(perBin)((acc, i) => acc.withColumn(s"_rsoff$i",
-            coalesce(sum(col(s"_rstot$i")).over(
-              wBins.rowsBetween(Window.unboundedPreceding, -1)), lit(0))))
+            sum(col(s"_rstot$i")).over(wBins.rowsBetween(Window.unboundedPreceding, -1))))
+        val binKeys = (keys :+ "_rsmb").zipWithIndex.map { case (c, i) => c -> s"_rsk$i" }
         val binInfo = nextCol.fold(offsets)(_ =>
             offsets.withColumn("_rsnextFirst", lead(col("_rsfirst"), 1).over(wBins)))
-          .select(k ++ (col("_rsmb") +: idx.map(i => col(s"_rsoff$i"))) ++
-            nextCol.map(_ => col("_rsnextFirst")): _*)
-        val joined = withNext.join(binInfo, keys :+ "_rsmb")
-        val summed = idx.foldLeft(joined)((acc, i) =>
-          acc.withColumn(sums(i)._1, col(s"_rsloc$i") + col(s"_rsoff$i")))
+          .select(binKeys.map { case (c, b) => col(c).as(b) } ++
+            idx.map(i => col(s"_rsoff$i")) ++ nextCol.map(_ => col("_rsnextFirst")): _*)
+        // null-safe, as the plain window's partitions: a NULL key or a
+        // NULL position (NULL mega-bin) is a group of its own
+        val joined = withNext.join(binInfo,
+          binKeys.map { case (c, b) => col(c) <=> col(b) }.reduce(_ && _))
+        val summed = idx.foldLeft(joined) { (acc, i) =>
+          val (loc, off) = (col(s"_rsloc$i"), col(s"_rsoff$i"))
+          acc.withColumn(sums(i)._1, coalesce(loc + off, loc, off))
+        }
         val out = nextCol.fold(summed)(n =>
           summed.withColumn(n, coalesce(col("_rsnextLoc"), col("_rsnextFirst"))))
         val added = (sums.map(_._1) ++ nextCol).filterNot(df.columns.contains)

@@ -70,8 +70,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Inner, LeftSemi and LeftAnti joins whose range bounds are integral
   * attributes. Idempotent: the builders name every bin column from
   * [[RangeJoin.BinPrefix]], and a join whose condition reads one is
-  * skipped. A join hint on the matched join is not kept: the builders
-  * broadcast a side by their own size estimate.
+  * skipped. A BROADCAST hint on the matched join's right side is kept:
+  * the builders broadcast that side whatever its size estimate (the
+  * sweep routes broadcast nothing). Other join hints are not kept: the
+  * builders broadcast a side by their own size estimate.
   */
 object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -171,7 +173,10 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       side(p, keys, Cast(st, LongType), Cast(en, LongType),
         p.output.map(a => Alias(a, names(a.exprId))()))
     val l = frame(j.left, s.keyPairs.map(_._1), s.lStart, s.lEnd)
-    val r = frame(j.right, s.keyPairs.map(_._2), s.rStart, s.rEnd)
+    val r0 = frame(j.right, s.keyPairs.map(_._2), s.rStart, s.rEnd)
+    val r = if (route.isInstanceOf[RangeJoin.Binned] &&
+        j.hint.rightHint.exists(_.strategy.contains(BROADCAST)))
+      org.apache.spark.sql.functions.broadcast(r0) else r0
     val keys = s.keyPairs.indices.map(keyNames)
     val residual = s.residual.reduceOption(And).map(c => GraftColumnBridge.column(c.transform {
       case a: AttributeReference if names.contains(a.exprId) =>

@@ -537,6 +537,34 @@ class IntervalJoinRewriteSpec extends AnyFunSuite {
     assert(rewritten == naive && naive.size == 3)
   }
 
+  test("a BROADCAST hint on the right side is kept: broadcast above the size threshold") {
+    val l = mkDF(400, 4000, 60, 2654435761L)
+    val r = mkDF(300, 4000, 60, 40503L).toDF(Chrom + "2", "s2", "e2", "id2")
+    l.createOrReplaceTempView("ijr_hint_l")
+    r.createOrReplaceTempView("ijr_hint_r")
+    def query(hint: String, join: String) = spark.sql(s"SELECT $hint l.* FROM ijr_hint_l l " +
+      s"$join JOIN ijr_hint_r r ON l.$Chrom = r.${Chrom}2 AND l.$Start < r.e2 AND r.s2 < l.$End")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+    try {
+      assert(r.queryExecution.optimizedPlan.stats.sizeInBytes > 1024)
+      for (join <- Seq("INNER", "LEFT SEMI", "LEFT ANTI")) {
+        val naive = query("", join).collect().map(_.toSeq.toList).sorted(
+          Ordering.by[List[Any], String](_.mkString("|")))
+        for (strategy <- Seq("binned", "auto")) withRule(strategy) {
+          val hinted = query("/*+ BROADCAST(r) */", join)
+          val plan = hinted.queryExecution.executedPlan.toString
+          assert(plan.contains("_graft_bin_") && plan.contains("BroadcastHashJoin"),
+            s"$join/$strategy: the hint was dropped:\n$plan")
+          val unhinted = query("", join).queryExecution.executedPlan.toString
+          assert(!unhinted.contains("BroadcastHashJoin"), s"$join/$strategy:\n$unhinted")
+          assert(hinted.collect().map(_.toSeq.toList).sorted(
+            Ordering.by[List[Any], String](_.mkString("|"))) sameElements naive,
+            s"$join/$strategy")
+        }
+      }
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
   test("rule leaves non-interval joins untouched") {
     val l = mkDF(50, 500, 30, 2654435761L)
     val r = mkDF(50, 500, 30, 40503L).toDF(Chrom + "2", "s2", "e2", "id2")

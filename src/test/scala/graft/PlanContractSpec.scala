@@ -359,6 +359,70 @@ class PlanContractSpec extends AnyFunSuite {
     assert(graft.core.Sizing.saltPlan(hotInMany, Seq(Chrom)).isDefined)
   }
 
+  test("salt gate census: coordinate-sorted balanced keys keep the plain window") {
+    import graft.core.Sizing
+    // 32 balanced keys of 163840 rows each, coordinate-sorted: 5.2M rows
+    // (40 MB of spark.range leaf stats, above the 32 MB gate) whose first
+    // 100k rows hold key k0 alone, while the input holds 32 >= 4 x cores
+    val block = 163840L
+    def sorted(n: Long) = spark.range(n).select(
+      concat(lit("k"), (col("id") / block).cast("long")).as(Chrom),
+      (col("id") % block * 100L).as(Start), (col("id") % block * 100L + 50L).as(End))
+    val k = Seq(Chrom)
+    val sc = spark.sparkContext
+    val censuses = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == "graft gate census")
+          censuses.incrementAndGet()
+    }
+    def census(body: => Unit): Int = {
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+      val before = censuses.get()
+      body
+      org.apache.spark.GraftTestBridge.drainListenerBus(sc)
+      censuses.get() - before
+    }
+    def plain(op: String): Unit = {
+      val (last, bytes, salted) = Sizing.lastDecision.get()
+      assert(last == op && bytes > Sizing.saltedInputThreshold && !salted,
+        s"$op must record the plain plan it took: ${Sizing.lastDecision.get()}")
+    }
+    sc.addSparkListener(listener)
+    try {
+      val df = sorted(32L * block)
+      // one census for both ops: same plan, same keys
+      assert(census {
+        val merged = graft.ops.UnaryOps.merge(df, k).queryExecution.optimizedPlan.toString
+        assert(!merged.contains("Generate") && !merged.contains("_mb"), merged.take(2000))
+        plain("merge")
+        val rle = graft.ops.Coverage.toRle(df, k).queryExecution.optimizedPlan.toString
+        assert(!rle.contains("_rsmb"), rle.take(2000))
+        plain("rle")
+      } == 1)
+      val counted = Sizing.sideStats(df, k)
+      assert(counted.census && counted.distinctKeys == 32 && counted.rows == 32L * block)
+      // the memo answers a repeat
+      assert(census {
+        graft.ops.UnaryOps.merge(df, k)
+        graft.ops.Coverage.toRle(df, k)
+        assert(Sizing.saltPlan(df, k).isEmpty)
+      } == 0)
+      // the sample decides alone: below the gate (1M rows, 8 MB) ...
+      assert(census {
+        graft.ops.UnaryOps.merge(sorted(1L << 20), k)
+        assert(!Sizing.lastDecision.get()._3)
+      } == 0)
+      // ... a sample that is not full (50k rows of k0: salted) ...
+      assert(census(assert(Sizing.saltPlan(sorted(50000L), k).isDefined)) == 0)
+      // ... and a sample that already shows 32 balanced keys
+      val interleaved = spark.range(32L * block).select(
+        concat(lit("k"), pmod(col("id"), lit(32L))).as(Chrom),
+        (col("id") * 100L).as(Start), (col("id") * 100L + 50L).as(End))
+      assert(census(assert(Sizing.saltPlan(interleaved, k).isEmpty)) == 0)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("saltPlan: span-scaled, clamped, and safe on empty input") {
     import spark.implicits._
     // 64M-coordinate span on local[4]: 64M / (8*4) = 2M -> bin 2^21
@@ -379,9 +443,12 @@ class PlanContractSpec extends AnyFunSuite {
 
   test("gate sample: one bounded take per input, labelled, then memoized") {
     // 64 splits of 100k rows each: a limit().agg() sample ran a task on
-    // every split; the take reads the first split and stops
+    // every split; the take reads the first split and stops. 64 keys
+    // interleaved through every split: the first rows already show many
+    // balanced keys, so the take decides alone and no key census runs
+    // (the census has its own test below)
     val df = spark.range(0L, 64L * 100000L, 1L, 64)
-      .select(concat(lit("c"), pmod(col("id"), lit(8L))).as(Chrom),
+      .select(concat(lit("c"), pmod(col("id"), lit(64L))).as(Chrom),
         (col("id") * 10L).as(Start), (col("id") * 10L + 50L).as(End))
     assert(df.rdd.getNumPartitions == 64)
     val sc = spark.sparkContext
